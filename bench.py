@@ -580,7 +580,11 @@ def _fit_compact_line(compact: dict, budget: int = COMPACT_LINE_BUDGET) -> str:
     line = json.dumps(compact, separators=(",", ":"))
     if len(line) <= budget:
         return line
+    # the trims mutate: copy the top level and the one nested dict they
+    # pop from, so the caller's compact record is left intact
     compact = dict(compact)
+    if compact.get("contention_suspect"):
+        compact["contention_suspect"] = dict(compact["contention_suspect"])
     stages = [
         lambda c: c.pop("fam", None),
         lambda c: (c.get("contention_suspect") or {}).pop("queries", None),

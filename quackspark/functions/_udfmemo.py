@@ -1,7 +1,7 @@
-"""Per-SparkContext pandas_udf memo (the operators/simsearch._memo_udf
-pattern, shared): a pandas_udf object memoizes its JVM handle on first
-use, so caching one across a context restart leaves it pointing into a
-dead JVM (ADVICE r9). Keying the cache WEAKLY on the live SparkContext
+"""Per-SparkContext pandas_udf memo, the one memo every Arrow kernel
+uses (dedup window hash, simsearch dot/SRP kernels, ...): a pandas_udf
+object memoizes its JVM handle on first use, so caching one across a
+context restart leaves it pointing into a dead JVM (ADVICE r9). Keying the cache WEAKLY on the live SparkContext
 object gives per-context reuse with automatic invalidation — a fresh
 context simply misses and rebuilds.
 """

@@ -457,15 +457,6 @@ def time_tz_sort_key(ttz: Column) -> Column:
     )
 
 
-def time_tz_to_utc_micros(ttz: Column) -> Column:
-    """Instant-equivalent µs since UTC midnight (may leave [0, 24h) —
-    callers normalize if they need a TIME again): micros − offset·1e6."""
-    return (
-        ttz.getField("micros")
-        - ttz.getField("offset_s").cast("long") * 1_000_000
-    )
-
-
 # --- r12 function-surface sweep additions (tools/fn_surface_sweep.py) ---
 
 def regexp_replace_duck_py(re_mod, s, pat, rep, flags):

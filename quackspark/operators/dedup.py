@@ -54,31 +54,6 @@ def md5_hash_family(c: Column, i: int) -> Column:
     )
 
 
-def minhash_signature(shingles: Column, n_hashes: int) -> Column:
-    """MinHash signature as a single Column expression: per hash-seed i,
-    min over the shingle set of md5_int32(i|shingle). Approximates Jaccard:
-    P(sig_a[i]=sig_b[i]) = J.
-
-    Prefer :func:`minhash_signatures` for pipelines: this expression form
-    re-evaluates the shingle array once per seed, and any consumer that
-    references it k times pays k full recomputations (higher-order
-    functions are interpreted, not codegen'd, and Catalyst will not CSE
-    them across projections)."""
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, _family_hasher(i)))
-            for i in range(n_hashes)
-        ]
-    )
-
-
-def _family_hasher(i: int):
-    # NB: the lambda must take exactly one parameter — PySpark dispatches
-    # transform()'s (element, index) form on lambda arity, so a default
-    # second parameter silently binds the array index.
-    return lambda s: md5_hash_family(s, i)
-
-
 def _lane_signature(sh: DataFrame, n_hashes: int) -> DataFrame:
     """(doc, sh) stream → (doc, sig) MinHash signatures with the four md5
     lanes STAGED in their own projection (r13, guide §7.2 "duplicated
@@ -115,101 +90,6 @@ def _lane_signature(sh: DataFrame, n_hashes: int) -> DataFrame:
     )
 
 
-def minhash_signatures(
-    df: DataFrame, shingles: Column, id_col: str, n_hashes: int
-) -> DataFrame:
-    """MinHash signatures in map-reduce shape: explode the shingle set, hash
-    each (shingle, seed) with codegen'd expressions, take 16 partial-agg
-    `min`s grouped by doc. One pass over the data, partial aggregation
-    map-side, shuffle carries only (doc, n_hashes longs) — the form that
-    holds at 100 TB, and ~100× faster than nested higher-order lambdas.
-
-    Returns ``doc, sig`` (docs with an empty shingle set drop out — at k=3
-    that is only documents of fewer than 3 tokens)."""
-    sh = df.select(F.col(id_col).alias("doc"), F.explode(shingles).alias("sh"))
-    return _lane_signature(sh, n_hashes)
-
-
-def _minhash_sig_kernel(k: int, n_hashes: int, hot: tuple):
-    """Arrow kernel: text → MinHash signature (array<bigint>), one
-    vectorized pass per batch — the doc-LOCAL form of
-    :func:`minhash_signatures` (guide §2.4/§4.2): a signature is a pure
-    per-document function, so the shingle explode + 16-min groupBy (one
-    full exchange plus interpreted slice/zip_with/array_distinct HOFs per
-    row) is replaced by a map-only kernel. NOTE (r13 steady-state
-    measurement): at bench scale the per-shingle ``hashlib.md5`` Python
-    loop costs MORE than the exchange it removes (kernel 5.0 s vs
-    expression 3.5 s for the signature stage at sf0.1) — there is no
-    vectorized md5 in the allowed dependency set — so this kernel is
-    opt-in (``kernel=True``), kept for exchange-bound deployments.
-
-    Identity with the expression form, pinned by tests
-    (tests/test_opt_r13.py kernel-vs-expression equality):
-    tokenization is ``re.ASCII \\s+`` after a space-only strip (== Spark
-    ``split(trim(text), '\\s+')`` + empty filter, the _window_hash_kernel
-    precedent); shingles are space-joined k-grams; hash i is
-    ``(A_i * lane_{i%4}(md5(shingle)) + B_i) mod (2^31-1)`` with the
-    md5 lane read big-endian from digest bytes [4j, 4j+4) — exactly
-    ``conv(substring(hex, 8j+1, 8), 16, 10)``. Exact int64 arithmetic on
-    both sides (products < 2^63). Docs with no (surviving) shingles
-    return NULL and are filtered out, mirroring the explode drop-out.
-
-    ``hot`` is the (sorted) hot-shingle tuple from the sampled DF guard —
-    dropped from the shingle set before hashing, exactly like the
-    ``isin`` filter on the exploded stream."""
-    from quackspark.functions._udfmemo import memo_udf
-
-    return memo_udf(
-        ("minhash_sig", k, n_hashes, hot),
-        lambda: _build_minhash_sig_kernel(k, n_hashes, hot),
-    )
-
-
-def _build_minhash_sig_kernel(k: int, n_hashes: int, hot: tuple):
-    import hashlib
-    import re as _re
-
-    import numpy as np
-    import pandas as pd
-
-    ws = _re.compile(r"\s+", _re.ASCII)
-    A = np.array(_MIX_A[:n_hashes], dtype=np.int64)
-    B = np.array(_MIX_B[:n_hashes], dtype=np.int64)
-    lane_of = np.array([i % 4 for i in range(n_hashes)])
-    hot_set = frozenset(hot)
-
-    @F.pandas_udf("array<bigint>")
-    def _sig(texts):
-        out = []
-        for txt in texts:
-            if txt is None:
-                out.append(None)
-                continue
-            toks = [t for t in ws.split(txt.strip(" ")) if t]
-            n = len(toks) - k + 1
-            if n <= 0:
-                out.append(None)
-                continue
-            shingles = {" ".join(toks[i : i + k]) for i in range(n)}
-            if hot_set:
-                shingles -= hot_set
-            if not shingles:
-                out.append(None)
-                continue
-            # one md5 per shingle; the 4 big-endian u32 lanes of each
-            # digest drive all n_hashes multiply-add mixes at once
-            lanes = np.frombuffer(
-                b"".join(
-                    hashlib.md5(s.encode("utf-8")).digest() for s in shingles
-                ),
-                dtype=">u4",
-            ).reshape(-1, 4).astype(np.int64)
-            out.append(((A * lanes[:, lane_of] + B) % _MERSENNE31).min(axis=0))
-        return pd.Series(out)
-
-    return _sig
-
-
 def lsh_band_keys(sig: Column, bands: int, rows: int) -> Column:
     """Split the signature into `bands` bands of `rows` values; each band
     key is 'band_index:v1,v2'. Docs sharing any band key become candidate
@@ -224,23 +104,6 @@ def lsh_band_keys(sig: Column, bands: int, rows: int) -> Column:
             parts.append(F.element_at(sig, b * rows + r + 1).cast("string"))
         keys.append(F.concat(*parts))
     return F.array(*keys)
-
-
-def simhash32(toks: Column) -> Column:
-    """32-bit SimHash over the token stream: bit i is set when the sum over
-    tokens of ±1 (by bit i of the token's md5_int32) is positive."""
-    codes = F.transform(toks, lambda t: md5_int32(t))
-
-    def _bit_folder(bit: int):
-        return lambda acc, c: acc + F.when(
-            F.shiftright(c, bit).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    out = F.lit(0).cast("long")
-    for i in range(32):
-        bit_sum = F.aggregate(codes, F.lit(0).cast("long"), _bit_folder(i))
-        out = out + F.when(bit_sum > 0, F.lit(2**i).cast("long")).otherwise(0)
-    return out
 
 
 def _exploded_shingles(
@@ -287,10 +150,6 @@ HOT_SHINGLE_DF = 1000
 GUARD_SAMPLE_MOD = 20
 GUARD_SAMPLE_MIN_DF = 100
 
-#: max hot-shingle list size to inline as an `isin` literal set; beyond
-#: this the guard falls back to a broadcast anti-join
-_GUARD_LIST_CAP = 4096
-
 
 def _doc_sample_pred(doc: Column, mod: int) -> Column:
     """Deterministic, engine-neutral 1/mod document sample: first 8 hex
@@ -300,34 +159,15 @@ def _doc_sample_pred(doc: Column, mod: int) -> Column:
     return F.pmod(h.cast("long"), F.lit(mod)) == 0
 
 
-def _hot_shingle_list(
-    sh: DataFrame,
-    max_df: int | None = HOT_SHINGLE_DF,
-    sample_mod: int = GUARD_SAMPLE_MOD,
-) -> list | None:
-    """Detection half of :func:`drop_hot_shingles`: the (possibly sampled)
-    DF pass over a ``(doc, sh)`` stream, returning the hot-shingle values
-    when they fit the inline cap — ``[]`` in the common no-hot-shingle
-    case — or ``None`` for the pathological > _GUARD_LIST_CAP corpus
-    (caller falls back to the broadcast anti-join stream form). The
-    second element is the hot-list DataFrame for that fallback."""
-    if max_df is None:
-        return [], None
-    hot = _hot_shingle_frame(sh, max_df, sample_mod)
-    hot_vals = [r["sh"] for r in hot.limit(_GUARD_LIST_CAP + 1).collect()]
-    if len(hot_vals) > _GUARD_LIST_CAP:
-        return None, hot
-    return hot_vals, hot
-
-
 def _hot_shingle_frame(
     sh: DataFrame,
     max_df: int | None = HOT_SHINGLE_DF,
     sample_mod: int = GUARD_SAMPLE_MOD,
 ) -> DataFrame:
-    """Detection half of the guard as a LAZY DataFrame (no action): the
-    same sampled DF pass as :func:`_hot_shingle_list`, returned as the
-    (usually empty) hot-shingle frame for a broadcast anti-join."""
+    """Detection half of :func:`drop_hot_shingles` as a LAZY DataFrame
+    (no action): the (possibly sampled) DF pass over a ``(doc, sh)``
+    stream, returned as the (usually empty) hot-shingle frame for a
+    broadcast anti-join."""
     if sample_mod > 1 and max_df >= GUARD_SAMPLE_MIN_DF:
         src = sh.filter(_doc_sample_pred(F.col("doc"), sample_mod))
         cutoff = max_df // sample_mod
@@ -345,7 +185,6 @@ def drop_hot_shingles(
     sh: DataFrame,
     max_df: int | None = HOT_SHINGLE_DF,
     sample_mod: int = GUARD_SAMPLE_MOD,
-    lazy: bool = True,
 ) -> DataFrame:
     """Skew guard: drop shingles whose document frequency exceeds
     ``max_df`` from a ``(doc, sh)`` stream.
@@ -363,32 +202,22 @@ def drop_hot_shingles(
     the reference can't need (its single-process pairwise scan has no
     shuffle to skew) but a 1000-executor band join does.
 
-    ``lazy=True`` (r14 default, VERDICT r13 #7): detection stays IN the
-    plan as a broadcast anti-join against the (usually empty) hot frame,
-    so the guard costs no separate construction-time action — measured
-    ~0.6 s/query of blocking collect on every minhash-bearing bench
-    column. ``lazy=False`` keeps the r13 collect-then-isin form (the
-    A/B twin; also what the kernel path uses, which must bake the
-    literal list into its closure)."""
+    Detection stays IN the plan as a broadcast anti-join against the
+    (usually empty) hot frame, so the guard costs no construction-time
+    action: the r13 collect-then-``isin`` form it replaced paid ~0.6 s
+    of blocking collect per minhash-bearing bench query (pinned: building
+    the guarded frame starts no Spark job,
+    tests/test_hot_shingle_guard.py).
+
+    Precondition: ``sh`` is non-null. Shingles are md5-derived from
+    non-null tokens, so this always holds here; a NULL key would never
+    match the anti-join and its row would be KEPT."""
     if max_df is None:
         return sh
-    if lazy:
-        hot = _hot_shingle_frame(sh, max_df, sample_mod)
-        # equi-join keys lead the join output — restore the caller's
-        # column order so both guard forms are drop-in equivalent
-        return sh.join(F.broadcast(hot), "sh", "left_anti").select(*sh.columns)
-    # Collect form: the hot list is bounded (≤ total_shingles/cutoff
-    # distinct values) — collect it like AQE collects join stats. The
-    # common case is EMPTY: then the guard costs literally nothing in
-    # the main plan. A small list becomes a codegen'd hash-set `isin`
-    # filter. Only a pathological corpus (> _GUARD_LIST_CAP hot
-    # shingles) falls back to the anti-join.
-    hot_vals, hot = _hot_shingle_list(sh, max_df, sample_mod)
-    if hot_vals == []:
-        return sh
-    if hot_vals is not None:
-        return sh.filter(~F.col("sh").isin(hot_vals))
-    return sh.join(F.broadcast(hot), "sh", "left_anti")
+    hot = _hot_shingle_frame(sh, max_df, sample_mod)
+    # equi-join keys lead the join output — restore the caller's
+    # column order
+    return sh.join(F.broadcast(hot), "sh", "left_anti").select(*sh.columns)
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -463,8 +292,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     threshold: float = 0.5,
     max_shingle_df: int | None = HOT_SHINGLE_DF,
-    kernel: bool = False,
-    checkpoint_sig: bool = True,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs: signature → band keys → candidate pairs
     from band-bucket equi-join → verify with the *estimated* Jaccard
@@ -479,54 +306,18 @@ def minhash_lsh_pairs(
     collapsing docs into the same band buckets — the one way this plan's
     band join can still blow up.
 
-    ``kernel=True`` opts into a map-only Arrow signature kernel
-    (bit-identical results; tests assert the two paths agree). It removes
-    the explode/groupBy exchange, but the r13 steady-state measurement
-    went AGAINST it at bench scale: the per-shingle ``hashlib.md5`` loop
-    costs more than the JVM's codegen'd md5 + exchange (kernel signatures
-    5.0 s vs 3.5 s expression at sf0.1, whole query ~1 s slower), and its
-    hot-shingle detection is a blocking collect at construction time that
-    re-executes the upstream plan — in pipeline_training_prep_recompute
-    (un-checkpointed survivors) that action alone regressed the query
-    3.3 s → 13.5 s. Expression form is therefore the default; the kernel
-    stays available for exchange-constrained deployments where the
-    shuffle, not per-task CPU, is the wall. The kernel path falls back to
-    the expression form when the hot-shingle list overflows the inline
-    cap (> _GUARD_LIST_CAP values cannot bake into a UDF closure).
+    The signatures are localCheckpointed: they feed both sides of the
+    candidate self-join, so they are materialized once instead of
+    recomputed per side (r14 measured relying on runtime exchange reuse
+    instead as a slight loss). A map-only Arrow signature kernel was
+    measured against this shape in r13 and lost at bench scale (5.0 s vs
+    3.5 s for the signature stage at sf0.1): the per-shingle Python md5
+    loop costs more than the JVM's codegen'd md5 plus the exchange.
     """
-    sig_df = None
-    if kernel:
-        hot_vals, _hot_df = _hot_shingle_list(
-            _exploded_shingles(df, text_col, id_col, k), max_shingle_df
-        )
-        if hot_vals is not None:
-            from quackspark.queries._util import parallelize_kernel_input
-
-            sig_kernel = _minhash_sig_kernel(
-                k, n_hashes, tuple(sorted(hot_vals))
-            )
-            sig_df = (
-                parallelize_kernel_input(df)
-                .select(
-                    F.col(id_col).alias("doc"),
-                    sig_kernel(F.col(text_col)).alias("sig"),
-                )
-                .filter(F.col("sig").isNotNull())
-                .localCheckpoint(eager=False)
-            )
-    if sig_df is None:
-        sh = drop_hot_shingles(
-            _exploded_shingles(df, text_col, id_col, k), max_shingle_df
-        )
-        sig_df = _lane_signature(sh, n_hashes)
-        if checkpoint_sig:
-            # signatures feed both sides of the candidate self-join —
-            # materialize once instead of recomputing per side.
-            # checkpoint_sig=False (the A/B twin) relies on runtime
-            # exchange reuse instead; r14 measured it a slight LOSS
-            # (minhash 2.10 vs 2.10, v2 3.05 vs 3.18 medians), so the
-            # checkpoint stays the default.
-            sig_df = sig_df.localCheckpoint(eager=False)
+    sh = drop_hot_shingles(
+        _exploded_shingles(df, text_col, id_col, k), max_shingle_df
+    )
+    sig_df = _lane_signature(sh, n_hashes).localCheckpoint(eager=False)
     rows = n_hashes // bands
     banded = sig_df.select(
         "doc", "sig", F.explode(lsh_band_keys(F.col("sig"), bands, rows)).alias("band")
@@ -594,7 +385,7 @@ def simhash_docs(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     keys for hamming-distance≤k search: distance≤3 pairs must agree on at
     least one of 4 bands).
 
-    Map-reduce shape like :func:`minhash_signatures`: explode tokens, hash
+    Map-reduce shape like :func:`_lane_signature`: explode tokens, hash
     once per token (codegen), 32 conditional sums with map-side partial
     aggregation, reassemble bits. Documents with zero tokens drop out.
     Input goes through the small-input rescue (see _exploded_shingles)."""
@@ -693,13 +484,13 @@ def _window_hash_kernel(w: int):
     """Arrow kernel: text → list<struct<pos int, h binary16>> of all
     w-token sliding-window md5 digests, one vectorized pass per batch.
 
-    Identity with the expression form (tokenize via Java-regex ``\\s+``
-    after a space-only trim, md5 over the space-joined UTF-8 window):
-    Python ``re.ASCII`` \\s == Java \\s == RE2 \\s (ASCII class), and
-    ``str.strip(' ')`` == Spark/DuckDB ``trim`` (space-only). Pinned by
-    tests/test_duplicate_spans.py kernel-vs-expression equality. The
-    digest is the raw 16 bytes (the expression form carries lowercase
-    hex) — the key never surfaces, only its equality partition.
+    Identity with the oracle's expression form (tokenize via regex
+    ``\\s+`` after a space-only trim, md5 over the space-joined UTF-8
+    window): Python ``re.ASCII`` \\s == Java \\s == RE2 \\s (ASCII
+    class), and ``str.strip(' ')`` == Spark/DuckDB ``trim`` (space-only).
+    Pinned by the DuckDB oracle compare in tests/test_duplicate_spans.py.
+    The digest is the raw 16 bytes (the oracle carries lowercase hex) —
+    the key never surfaces, only its equality partition.
 
     Memoized per SparkContext via functions/_udfmemo.memo_udf (a cached
     pandas_udf holds a JVM handle into the context that registered it;
@@ -756,7 +547,6 @@ def duplicate_spans(
     id_col: str,
     *,
     window_tokens: int = 15,
-    kernel: bool = True,
 ) -> DataFrame:
     """Exact-substring duplicate spans (the suffix-array dedup of Lee et
     al. 2022, "Deduplicating Training Data Makes Language Models Better",
@@ -790,43 +580,15 @@ def duplicate_spans(
     # position, ~1M digests at sf0.1) otherwise runs on the single scan
     # task of a one-row-group corpus file (guide §2.5/§6); inert at scale
     df = parallelize_kernel_input(df)
-    if kernel:
-        # Arrow path (default): one vectorized pass builds every window
-        # digest — the interpreted HOF form below costs ~4× at sf0.1
-        # (measured 1.86 s vs the kernel; same trade as fingerprint_arrow)
-        k = _window_hash_kernel(w)
-        windows = (
-            df.select(
-                F.col(id_col).alias("doc"),
-                F.explode(k(F.col(text_col))).alias("win"),
-            )
-            .select("doc", F.col("win.pos").alias("pos"), F.col("win.h").alias("h"))
-        )
-    else:
-        toked = df.select(
-            F.col(id_col).alias("doc"),
-            F.split(F.trim(F.col(text_col)), r"\s+").alias("toks"),
-        )
-        # all w-token windows: pos is 0-based; slice() is 1-based. Docs
-        # shorter than one window are filtered BEFORE sequence() — Spark's
-        # sequence(0, negative) would generate a DESCENDING range, not an
-        # empty one.
-        windows = toked.filter(F.size("toks") >= w).select(
-            "doc",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("toks") - w),
-                    lambda i: F.struct(
-                        i.alias("pos"),
-                        F.md5(
-                            F.array_join(
-                                F.slice(F.col("toks"), i + 1, w), " "
-                            ).cast("binary")
-                        ).alias("h"),
-                    ),
-                )
-            ).alias("win"),
-        ).select("doc", F.col("win.pos").alias("pos"), F.col("win.h").alias("h"))
+    # Arrow window-hash kernel: one vectorized pass builds every window
+    # digest — the interpreted HOF form (slice/array_join/md5 per window,
+    # still the shape of the DuckDB oracle) cost ~4× at sf0.1 (measured
+    # 1.86 s vs the kernel; same trade as fingerprint_arrow)
+    k = _window_hash_kernel(w)
+    windows = df.select(
+        F.col(id_col).alias("doc"),
+        F.explode(k(F.col(text_col))).alias("win"),
+    ).select("doc", F.col("win.pos").alias("pos"), F.col("win.h").alias("h"))
     # corpus-wide occurrence count per window hash — the one wide shuffle
     dup = (
         windows.withColumn("c", F.count(F.lit(1)).over(Window.partitionBy("h")))

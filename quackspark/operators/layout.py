@@ -33,15 +33,3 @@ def zorder_key(x: Column, y: Column, bits: int = 8) -> Column:
         )
     return z
 
-
-def zorder_sql(x: str, y: str, bits: int = 8) -> str:
-    """The identical Morton arithmetic as DuckDB SQL (for oracles).
-    Every term is FULLY parenthesized — `a << 0 + b << 2` parses as
-    `a << (0 + b) << 2` (+ binds tighter than <<), which silently
-    scrambles the key."""
-    terms = []
-    mask = (1 << bits) - 1
-    for i in range(bits):
-        terms.append(f"(((({x} & {mask}) >> {i}) & 1) << {2 * i})")
-        terms.append(f"(((({y} & {mask}) >> {i}) & 1) << {2 * i + 1})")
-    return "(" + " + ".join(terms) + ")"

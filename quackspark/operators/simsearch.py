@@ -26,31 +26,11 @@ from __future__ import annotations
 
 import hashlib
 import os
-import weakref
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-#: per-SparkContext pandas_udf memo (ADVICE r9 #4): a module-level
-#: lru_cache would outlive a stopped context — the cached kernels memoize
-#: their JVM UDF handle on first use, so after an in-process stop/restart
-#: (common in test harnesses) the stale handles point into the dead JVM
-#: wrapper. Keying on the live SparkContext OBJECT (weakly, so dead
-#: contexts are collectable) rebuilds kernels exactly once per context.
-_UDF_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def _memo_udf(key: tuple, build):
-    """Return build() memoized per (active SparkContext, key)."""
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    if sc is None:  # no context: nothing to key on, don't cache
-        return build()
-    cache = _UDF_MEMO.setdefault(sc, {})
-    if key not in cache:
-        cache[key] = build()
-    return cache[key]
+from quackspark.functions._udfmemo import memo_udf
 
 DIM = 64
 N_PLANES = 16
@@ -81,7 +61,7 @@ def _dot_arrow_udf():
     registering a fresh pandas_udf per call is a per-query plan-build
     cost with zero benefit (VERDICT r8 next #7). The kernel folds over
     the ACTUAL vector width, so one cached UDF serves every dim."""
-    return _memo_udf(("dot",), _build_dot_arrow_udf)
+    return memo_udf(("dot",), _build_dot_arrow_udf)
 
 
 def _build_dot_arrow_udf():
@@ -148,7 +128,7 @@ def srp_signature_arrow(
 def _srp_signature_udf(n_planes: int, dim: int):
     """Memoized per (context, n_planes, dim) — the UDF closes over the
     plane-sign matrix, so the key is the constants baked in (r8 next #7)."""
-    return _memo_udf(
+    return memo_udf(
         ("sig", n_planes, dim),
         lambda: _build_srp_signature_udf(n_planes, dim),
     )
@@ -227,7 +207,7 @@ def srp_band_keys_arrow(
 def _srp_band_keys_udf(n_planes: int, band_bits: int):
     """Memoized per (context, n_planes, band_bits) — adaptive widths
     revisit the same few values, so registration is paid once (r8 #7)."""
-    return _memo_udf(
+    return memo_udf(
         ("bands", n_planes, band_bits),
         lambda: _build_srp_band_keys_udf(n_planes, band_bits),
     )

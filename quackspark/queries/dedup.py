@@ -295,7 +295,7 @@ ORACLES = {
             SELECT doc, s FROM sh0
             WHERE s NOT IN ({_GUARD_SQL})
         ), sig AS (
-            -- map-reduce signature shape, mirrors minhash_signatures:
+            -- map-reduce signature shape, mirrors _lane_signature:
             -- min per hash lane over the guarded exploded shingles
             SELECT doc,
                    [{", ".join(f"min({_sql_hash_family('s', i)})" for i in range(N_HASHES))}]

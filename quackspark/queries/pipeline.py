@@ -328,27 +328,24 @@ def _temperature_mix_rollup(
     frame (doc_id, source, quality, _ntok[, removed_col]) as ONE linear
     plan (r14, guide §2.4/§7.2 — VERDICT r13 #3).
 
-    The joined legacy form (:func:`_temperature_mix_rollup_legacy`) fed
-    the gate frame to THREE consumers (mix-rate count, stats fold, mixed
-    rollup); Catalyst planned a full copy of the expensive gate subtree
-    per consumer (divergent column pruning defeats ReuseExchange — the
-    three copies' exchanges are not canonically equal), which r13 worked
-    around with a narrow-gate localCheckpoint — a construction-time
-    boundary that materialized every stage below it per bench run. Here
-    the gate output is pre-aggregated once per (source, md5-bucket) —
-    ≤256·|sources| rows — and the rates/thresholds are derived from that
-    tiny frame with two window passes, so the gate subtree has exactly
-    ONE consumer and needs no checkpoint at all.
-
-    Bit-identical to the legacy form (pinned by
-    tests/test_opt_r13.py::test_single_pass_mix_identical):
+    The r13 joined form fed the gate frame to THREE consumers (mix-rate
+    count, stats fold, mixed rollup); Catalyst planned a full copy of the
+    expensive gate subtree per consumer (divergent column pruning defeats
+    ReuseExchange — the three copies' exchanges are not canonically
+    equal), which r13 worked around with a narrow-gate localCheckpoint —
+    a construction-time boundary that materialized every stage below it
+    per bench run. Here the gate output is pre-aggregated once per
+    (source, md5-bucket) — ≤256·|sources| rows — and the rates/thresholds
+    are derived from that tiny frame with two window passes, so the gate
+    subtree has exactly ONE consumer and needs no checkpoint at all
+    (plan pinned by tests/test_opt_r13.py::test_single_pass_mix_identical;
+    results oracle-checked by tests/test_oracle_parity.py):
     - per-(source,bucket) partials are exact (counts, long token sums,
       dsum_part micro-unit/decimal quality sums), so the two-level
-      rollup equals the one-level one;
-    - ssum replays the identical array_sort → sqrt → left-fold over the
-      same (source, n) structs (collect_set dedups the per-bucket
-      repeats; one struct per source, same sort order);
-    - rate/threshold expressions are the legacy ops in the legacy order.
+      rollup equals the one-level one the oracle computes;
+    - ssum is the same array_sort → sqrt → left-fold over the (source, n)
+      structs (collect_set dedups the per-bucket repeats; one struct per
+      source, same sort order).
     """
     bucket = _mix_bucket()
     aggs = [
@@ -356,8 +353,8 @@ def _temperature_mix_rollup(
         F.sum("_ntok").alias("_t"),
         dsum_part("quality").alias("_q"),
         # davg's denominator is count(quality) — non-null only. The gate
-        # filter makes quality non-null on every row here, but replay the
-        # legacy denominator exactly rather than assume it.
+        # filter makes quality non-null on every row here, but keep davg's
+        # denominator exactly rather than assume it.
         F.count("quality").alias("_nq"),
     ]
     if removed_col:
@@ -396,53 +393,7 @@ def _temperature_mix_rollup(
     return mixed.groupBy("source").agg(*out_aggs).orderBy("source")
 
 
-def _temperature_mix_rollup_legacy(
-    gated: DataFrame, *, removed_col: str | None = None
-) -> DataFrame:
-    """The r13 joined form (three consumers of ``gated``), kept as the
-    equivalence baseline for :func:`_temperature_mix_rollup` and for its
-    A/B. ``gated`` should be checkpointed by the caller or the gate
-    subtree plans once per consumer."""
-    cnt = gated.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    stats = cnt.agg(
-        F.sum("n").alias("n_total"),
-        F.aggregate(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("source", "n"))),
-                lambda s: F.sqrt(s["n"].cast("double")),
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        ).alias("ssum"),
-    )
-    target = F.floor(F.lit(_TEMP_FRAC) * F.col("n_total")).cast("double")
-    rate = F.least(
-        F.lit(1.0),
-        target * F.sqrt(F.col("n").cast("double")) / F.col("ssum") / F.col("n"),
-    )
-    rates = cnt.crossJoin(F.broadcast(stats)).select(
-        "source", F.floor(F.lit(256.0) * rate).cast("int").alias("thr")
-    )
-    mixed = gated.join(F.broadcast(rates), "source").filter(
-        _mix_bucket() < F.col("thr")
-    )
-    out_aggs = [
-        F.count(F.lit(1)).alias("docs_kept"),
-        F.sum(F.col("_ntok")).alias("total_tokens"),
-    ]
-    if removed_col:
-        out_aggs.append(F.sum(removed_col).alias("tokens_removed"))
-    out_aggs.append(davg("quality").alias("mean_quality"))
-    return mixed.groupBy("source").agg(*out_aggs).orderBy("source")
-
-
-def pipeline_training_prep_v2(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    checkpoint_gate: bool = True,
-    single_pass: bool = True,
-) -> DataFrame:
+def pipeline_training_prep_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The round-3 capstone: every curation stage this engine has, in
     ONE composition — exact dedup → MinHash-LSH pairs → connected-
     components clustering with QUALITY-AWARE survivor choice (longest
@@ -454,9 +405,9 @@ def pipeline_training_prep_v2(
 
     Scale shape: stages 1-2 are the dedup operators' shapes (fingerprint
     groupBy; banded candidate join; O(log² n) contraction rounds); the
-    gates are map filters; the mix rates derive from one tiny agg and
-    broadcast back. The cluster stage's iterative actions run on the
-    PAIR graph, never the corpus."""
+    gates are map filters; the mix rates derive from one per-(source,
+    bucket) pre-aggregate (see _temperature_mix_rollup). The cluster
+    stage's iterative actions run on the PAIR graph, never the corpus."""
     d = load_table(spark, sf_dir, "documents")
     fp = F.md5(F.concat_ws(" ", T.tokens(F.lower(F.col("text")))))
     surv_ids = (
@@ -505,25 +456,14 @@ def pipeline_training_prep_v2(
     # (_temperature_mix_rollup), so the expensive gate subtree has a
     # single consumer and the r13 narrow-gate localCheckpoint — a
     # construction-time boundary that materialized every stage below it
-    # per bench run — is gone. ``single_pass=False`` keeps the r13
-    # joined form (+ ``checkpoint_gate``) for the equivalence pin/A-B.
+    # per bench run — is gone.
     gated = gated.select(
         "doc_id", "source", "quality", F.size(F.col("_toks")).alias("_ntok")
     )
-    if single_pass:
-        return _temperature_mix_rollup(gated)
-    if checkpoint_gate:
-        gated = gated.localCheckpoint(eager=False)
-    return _temperature_mix_rollup_legacy(gated)
+    return _temperature_mix_rollup(gated)
 
 
-def pipeline_training_prep_v3(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    checkpoint_gate: bool = True,
-    single_pass: bool = True,
-) -> DataFrame:
+def pipeline_training_prep_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL curation product (r12 verdict directive #1): exact dedup
     → exact-substring span scrub of the survivors → MinHash-LSH near-dup
     pairs over the SCRUBBED text → connected-components clustering with
@@ -539,7 +479,7 @@ def pipeline_training_prep_v3(
     shingle explode + band-key join (collision-bounded, hot-shingle
     guard), (4) O(log² n) contraction rounds on the PAIR graph only,
     (5) doc_id-keyed semi-joins for the survivor/keep gates, (6) a tiny
-    per-source agg broadcast back for the mix rates."""
+    per-(source, bucket) pre-aggregate for the mix rates."""
     d = load_table(spark, sf_dir, "documents")
     fp = F.md5(F.concat_ws(" ", T.tokens(F.lower(F.col("text")))))
     surv_ids = (
@@ -602,11 +542,7 @@ def pipeline_training_prep_v3(
         "doc_id", "source", "quality",
         F.size(F.col("_toks")).alias("_ntok"), "n_removed",
     )
-    if single_pass:
-        return _temperature_mix_rollup(gated, removed_col="n_removed")
-    if checkpoint_gate:
-        gated = gated.localCheckpoint(eager=False)
-    return _temperature_mix_rollup_legacy(gated, removed_col="n_removed")
+    return _temperature_mix_rollup(gated, removed_col="n_removed")
 
 
 #: negatives per document for contrastive-pair sampling

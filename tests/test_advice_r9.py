@@ -164,12 +164,13 @@ def test_sniffer_header_flip_matches_duckdb(spark, tmp_path):
 def test_udf_memo_keyed_per_context(spark):
     """The memo must not serve a kernel built under a different (dead)
     SparkContext: entries are keyed weakly on the context object."""
+    from quackspark.functions import _udfmemo as M
     from quackspark.operators import simsearch as S
 
     u1 = S._dot_arrow_udf()
     assert S._dot_arrow_udf() is u1  # memo hit within one context
     sc = spark.sparkContext
-    assert sc in S._UDF_MEMO
+    assert sc in M._UDF_MEMO
 
     class _FakeContext:  # stands in for a restarted SparkContext
         pass
@@ -180,9 +181,9 @@ def test_udf_memo_keyed_per_context(spark):
     orig = SparkContext._active_spark_context
     SparkContext._active_spark_context = fake
     try:
-        u2 = S._memo_udf(("dot",), lambda: object())
+        u2 = M.memo_udf(("dot",), lambda: object())
         assert u2 is not u1  # new context → fresh kernel, same key
-        assert S._memo_udf(("dot",), lambda: object()) is u2
+        assert M.memo_udf(("dot",), lambda: object()) is u2
     finally:
         SparkContext._active_spark_context = orig
     assert S._dot_arrow_udf() is u1  # original context's entry intact
@@ -191,14 +192,14 @@ def test_udf_memo_keyed_per_context(spark):
 def test_udf_memo_no_context_builds_uncached():
     from pyspark import SparkContext
 
-    from quackspark.operators import simsearch as S
+    from quackspark.functions import _udfmemo as M
 
     orig = SparkContext._active_spark_context
     SparkContext._active_spark_context = None
     try:
         built = []
-        S._memo_udf(("x",), lambda: built.append(1) or "u")
-        S._memo_udf(("x",), lambda: built.append(1) or "u")
+        M.memo_udf(("x",), lambda: built.append(1) or "u")
+        M.memo_udf(("x",), lambda: built.append(1) or "u")
         assert len(built) == 2  # nothing cached without a context
     finally:
         SparkContext._active_spark_context = orig

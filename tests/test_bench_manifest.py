@@ -145,6 +145,7 @@ def test_compact_line_fits_driver_tail_with_contention():
 def test_fit_compact_line_degrades_in_order():
     """If numbers get pathologically wide the staged trims shed the most
     redundant fields first and NEVER the per-query seconds."""
+    import copy
     import json
 
     compact = _r13_shaped_compact()
@@ -156,7 +157,9 @@ def test_fit_compact_line_degrades_in_order():
         "vs": "BENCH_LOCAL_r13.json", "n": 8,
         "queries": ["window_range_interval_frame"] * 3,
     }
+    before = copy.deepcopy(compact)
     line = bench._fit_compact_line(compact)
+    assert compact == before  # the trims never touch the caller's dict
     got = json.loads(line)
     # element 0 (the seconds) survives for every query
     assert set(got["q"]) == set(compact["q"])

@@ -10,6 +10,7 @@ The corpus-level differential vs DuckDB runs in the parity sweep
 from __future__ import annotations
 
 from quackspark.operators import dedup as D
+from tests.conftest import SF_SMALL
 
 W = 4  # small window so the fixtures stay readable
 
@@ -79,19 +80,17 @@ def test_long_overlap_merges_to_one_maximal_span(spark):
 
 
 def test_kernel_matches_expression_form(spark):
-    """The Arrow window-hash kernel and the interpreted expression form
-    must produce identical spans on real fixture text (the identity
-    argument in _window_hash_kernel's docstring, exercised end-to-end)."""
-    from quackspark.session import load_table
+    """The Arrow window-hash kernel matches the expression form — the
+    DuckDB oracle, which slices, joins and md5s every window in SQL — on
+    real fixture text (the identity argument in _window_hash_kernel's
+    docstring, exercised end-to-end)."""
+    from quackspark.oracle import compare
+    from quackspark.queries.dedup import ORACLES, QUERIES
 
-    d = load_table(spark, "/root/testdata/sf0.001", "documents")
-    a = sorted(
-        map(tuple, D.duplicate_spans(d, "text", "doc_id", kernel=True).collect())
-    )
-    b = sorted(
-        map(tuple, D.duplicate_spans(d, "text", "doc_id", kernel=False).collect())
-    )
-    assert a == b and len(a) > 0
+    df = QUERIES["dedup_duplicate_spans"](spark, SF_SMALL)
+    assert df.count() > 0
+    problems = compare(df, ORACLES["dedup_duplicate_spans"], SF_SMALL)
+    assert not problems, "\n".join(problems)
 
 
 def _scrub(spark, rows, w=W):

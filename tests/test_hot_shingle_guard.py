@@ -92,22 +92,19 @@ def test_guard_bounds_candidate_pairs(spark):
     assert unguarded.count() == (30 * 29) // 2  # every pair met in the hot block
 
 
-def test_lazy_guard_equals_collect_guard(spark):
-    """r14 (VERDICT r13 #7): the default guard keeps detection IN the
-    plan as a broadcast anti-join instead of a blocking collect. Both
-    forms must leave the identical shingle multiset — with hot shingles
-    present AND on a hot-free corpus — and the lazy form must not run
-    any job at construction time."""
-    for df in (_toy_corpus(spark, n=40), _toy_corpus(spark, n=3)):
-        sh = D._exploded_shingles(df, "text", "doc_id", 3)
-        lazy_rows = sorted(
-            tuple(r) for r in D.drop_hot_shingles(sh, max_df=10).collect()
+def test_lazy_guard_keeps_unique_shingles(spark):
+    """The guard is a broadcast anti-join against the hot frame: with a
+    hot shingle present only the boilerplate shingle goes and every
+    other shingle row survives; on a hot-free corpus nothing goes."""
+    hot = "common boilerplate footer"
+    for n, cutoff in ((40, 10), (3, 10)):
+        sh = D._exploded_shingles(_toy_corpus(spark, n=n), "text", "doc_id", 3)
+        expected = sorted(
+            tuple(r) for r in sh.collect() if n <= cutoff or r["sh"] != hot
         )
-        collect_rows = sorted(
-            tuple(r)
-            for r in D.drop_hot_shingles(sh, max_df=10, lazy=False).collect()
-        )
-        assert lazy_rows == collect_rows
+        got = sorted(tuple(r) for r in D.drop_hot_shingles(sh, max_df=cutoff).collect())
+        assert got == expected
+        assert len({r[0] for r in got}) == n  # every doc keeps its unique shingles
     # plan proof: detection is a broadcast anti-join, not a collect
     sh = D._exploded_shingles(_toy_corpus(spark, n=40), "text", "doc_id", 3)
     plan = (
@@ -117,3 +114,24 @@ def test_lazy_guard_equals_collect_guard(spark):
         .toString()
     )
     assert "LeftAnti" in plan, plan
+
+
+def test_lazy_guard_starts_no_job(spark):
+    """Why the in-plan guard replaced collect-then-isin: building the
+    guarded frame runs no Spark job (the collect form paid a blocking
+    detection job per query at construction time)."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    sh = D._exploded_shingles(_toy_corpus(spark, n=40), "text", "doc_id", 3)
+    gid = "hot-shingle-guard-construction"
+    sc.setJobGroup(gid, "guard construction", False)
+    try:
+        guarded = D.drop_hot_shingles(sh, max_df=10)
+        bus.waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(gid)) == []
+        guarded.count()  # control: the tracker does see the group's jobs
+        bus.waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(gid))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
