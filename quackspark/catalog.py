@@ -9,6 +9,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.errors import AnalysisException
 
+from quackspark.session import local_frame
+
 
 def duckdb_tables(spark: SparkSession) -> DataFrame:
     """Tables/views visible in the current catalog."""
@@ -17,7 +19,8 @@ def duckdb_tables(spark: SparkSession) -> DataFrame:
          t.tableType, t.isTemporary)
         for t in spark.catalog.listTables()
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "catalog_name string, schema_name string, table_name string, "
         "table_type string, temporary boolean",
@@ -30,7 +33,7 @@ def duckdb_views(spark: SparkSession) -> DataFrame:
 
 def duckdb_schemas(spark: SparkSession) -> DataFrame:
     rows = [(d.catalog, d.name) for d in spark.catalog.listDatabases()]
-    return spark.createDataFrame(rows, "catalog_name string, schema_name string")
+    return local_frame(spark, rows, "catalog_name string, schema_name string")
 
 
 def duckdb_columns(spark: SparkSession, table: str) -> DataFrame:
@@ -40,7 +43,8 @@ def duckdb_columns(spark: SparkSession, table: str) -> DataFrame:
         (table, i, c.name, c.dataType, c.nullable)
         for i, c in enumerate(spark.catalog.listColumns(table))
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "table_name string, column_index int, column_name string, "
         "data_type string, is_nullable boolean",
@@ -77,7 +81,8 @@ def duckdb_constraints(spark: SparkSession) -> DataFrame:
                 "FOREIGN KEY",
                 f"{', '.join(fk['cols'])} -> {fk['parent']}({', '.join(pcols)})",
             ))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         sorted(rows),
         "table_name string, constraint_type string, constraint_text string",
     )
@@ -102,7 +107,8 @@ def duckdb_sequences(spark: SparkSession) -> DataFrame:
         )
         for name, s in sorted(_SEQUENCES.items())
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "sequence_name string, start_value long, min_value long, "
         "max_value long, increment_by long, cycle boolean, last_value long",
@@ -112,7 +118,7 @@ def duckdb_sequences(spark: SparkSession) -> DataFrame:
 def duckdb_functions(spark: SparkSession) -> DataFrame:
     """Registered function inventory (built-ins + ours)."""
     rows = [(f.name, f.isTemporary) for f in spark.catalog.listFunctions()]
-    return spark.createDataFrame(rows, "function_name string, temporary boolean")
+    return local_frame(spark, rows, "function_name string, temporary boolean")
 
 
 def duck_type_name(dt) -> str:
@@ -163,7 +169,8 @@ def describe_frame(df: DataFrame) -> DataFrame:
         (f.name, duck_type_name(f.dataType), "YES", None, None, None)
         for f in df.schema.fields
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "column_name string, column_type string, null string, "
         "key string, default string, extra string",
@@ -220,7 +227,8 @@ def describe_relation(spark: SparkSession, table: str) -> DataFrame:
                 None,
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "column_name string, column_type string, null string, "
         "key string, default string, extra string",
@@ -260,7 +268,8 @@ def show_all_tables(spark: SparkSession) -> DataFrame:
             )
         )
     rows.sort(key=lambda r: (r[0], r[1], r[2]))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "database string, schema string, name string, "
         "column_names array<string>, column_types array<string>, "
@@ -277,7 +286,8 @@ def pragma_table_info(spark: SparkSession, table: str) -> DataFrame:
         (i, c.name, c.dataType, not c.nullable, None, False)
         for i, c in enumerate(spark.catalog.listColumns(table))
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "cid int, name string, type string, notnull boolean, "
         "dflt_value string, pk boolean",
@@ -389,7 +399,8 @@ def explain_analyze(df: DataFrame, run: bool = True) -> DataFrame:
     walk(node, 0)
     global _LAST_PROFILE
     _LAST_PROFILE = rows
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         rows,
         "op_id int, depth int, operator string, metric string, value long",
     )
@@ -398,8 +409,8 @@ def explain_analyze(df: DataFrame, run: bool = True) -> DataFrame:
 def last_profiling_output(spark: SparkSession) -> DataFrame:
     """The most recent explain_analyze result (PRAGMA
     last_profiling_output)."""
-    return spark.createDataFrame(
-        _LAST_PROFILE or [(0, 0, "<none>", "<no profiled query>", 0)],
+    return local_frame(
+        spark, _LAST_PROFILE or [(0, 0, "<none>", "<no profiled query>", 0)],
         "op_id int, depth int, operator string, metric string, value long",
     )
 
@@ -411,8 +422,8 @@ def pragma_version(spark: SparkSession) -> DataFrame:
     mislead version-gated client code."""
     import pyspark
 
-    return spark.createDataFrame(
-        [(f"quackspark (spark {pyspark.__version__})", "quackspark")],
+    return local_frame(
+        spark, [(f"quackspark (spark {pyspark.__version__})", "quackspark")],
         "library_version string, source_id string",
     )
 
@@ -425,9 +436,7 @@ def pragma_platform(spark: SparkSession) -> DataFrame:
     arch = {"x86_64": "amd64", "aarch64": "arm64"}.get(
         _pf.machine(), _pf.machine()
     )
-    return spark.createDataFrame(
-        [(f"{os_}_{arch}",)], "platform string"
-    )
+    return local_frame(spark, [(f"{os_}_{arch}",)], "platform string")
 
 
 def pg_timezone_names(spark: SparkSession) -> DataFrame:
@@ -450,7 +459,8 @@ def pg_timezone_names(spark: SparkSession) -> DataFrame:
                          dst != _dt.timedelta(0)))
         except Exception:
             continue
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "name string, abbrev string, utc_offset interval day to second, "
         "is_dst boolean",
@@ -464,7 +474,8 @@ def parquet_file_metadata(spark: SparkSession, path: str) -> DataFrame:
     import pyarrow.parquet as pq
 
     md = pq.read_metadata(path)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(
             path,
             md.created_by,
@@ -514,7 +525,8 @@ def parquet_metadata(spark: SparkSession, path: str) -> DataFrame:
                 col.total_uncompressed_size,
                 {},
             ))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "file_name string, row_group_id bigint, row_group_num_rows bigint, "
         "row_group_num_columns bigint, row_group_bytes bigint, "
@@ -545,7 +557,8 @@ def duckdb_indexes(spark: SparkSession) -> DataFrame:
         )
         for name, info in sorted(ddl.INDEXES.items())
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "database_name string, database_oid bigint, schema_name string, "
         "schema_oid bigint, index_name string, index_oid bigint, "
@@ -566,7 +579,8 @@ def duckdb_databases(spark: SparkSession) -> DataFrame:
         (n, None, None, None, {}, n != "spark_catalog", "spark", False)
         for n in sorted(set(names))
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "database_name string, database_oid bigint, path string, "
         "comment string, tags map<string,string>, internal boolean, "
@@ -580,8 +594,8 @@ def duckdb_keywords(spark: SparkSession) -> DataFrame:
     kwlist, duckdb-libpg_query.cpp)."""
     from quackspark.functions._keywords import KEYWORDS
 
-    return spark.createDataFrame(
-        list(KEYWORDS), "keyword_name string, keyword_category string"
+    return local_frame(
+        spark, list(KEYWORDS), "keyword_name string, keyword_category string"
     )
 
 
@@ -621,7 +635,8 @@ def duckdb_settings(spark: SparkSession) -> DataFrame:
             except Exception:
                 pass
         rows.append((name, value, desc, input_type, scope))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "name string, value string, description string, "
         "input_type string, scope string",
@@ -654,7 +669,8 @@ def duckdb_types(spark: SparkSession) -> DataFrame:
             )
     except Exception:
         pass
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "database_name string, database_oid bigint, schema_name string, "
         "schema_oid bigint, type_oid bigint, type_name string, "
@@ -749,4 +765,4 @@ def test_vector_types(spark: SparkSession, type_names: list[str]) -> DataFrame:
         f"test_vector{i + 2}" for i in range(len(cycles) - 1)
     ]
     schema = ", ".join(f"{n} {t}" for n, t in zip(names, spark_types))
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)

@@ -28,6 +28,11 @@ Spark-side semantics, documented per statement:
   Spark-side analogue (SURVEY §7).
 - ``COMMENT ON`` → recorded in the session comment registry.
 - ``TRUNCATE t`` / ``DROP … CASCADE`` → normalized to Spark's grammar.
+
+Statement results (the status row every statement returns) are local
+relations built by ``session.local_frame``: the work happens while the
+statement is constructed, and running its result is one JVM-side job
+over a ``LocalTableScan`` — no Python-worker task per core.
 """
 
 from __future__ import annotations
@@ -35,6 +40,8 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+
+from quackspark.session import local_frame
 
 #: per-table column DEFAULT expressions (DuckDB text), applied on
 #: partial-column INSERT
@@ -129,8 +136,8 @@ _INSERT_COLS_RE = re.compile(
 
 def _status(spark: SparkSession, **cols: str) -> DataFrame:
     names = list(cols)
-    return spark.createDataFrame(
-        [tuple(cols.values())], ", ".join(f"{n} string" for n in names)
+    return local_frame(
+        spark, [tuple(cols.values())], ", ".join(f"{n} string" for n in names)
     )
 
 
@@ -428,7 +435,7 @@ def run_ddl(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
             created = _versioned.create(
                 spark,
                 table,
-                spark.createDataFrame([], schema_sql),
+                local_frame(spark, [], schema_sql),
                 replace=bool(replace),
                 if_not_exists=bool(if_not_exists),
             )

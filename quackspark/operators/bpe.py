@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from quackspark.functions.text import tokens
+from quackspark.session import local_frame
 
 #: end-of-word sentinel appended to every word's symbol sequence so merges
 #: can distinguish word-final from word-internal contexts (Sennrich 2016)
@@ -153,8 +154,8 @@ def train_bpe(
 def merge_table_df(spark: SparkSession, merges: list[tuple[str, str]]) -> DataFrame:
     """The merge table as a DataFrame (rank, left, right, merged)."""
     rows = [(i, l_, r_, l_ + r_) for i, (l_, r_) in enumerate(merges)]
-    return spark.createDataFrame(
-        rows, "rank int, left string, right string, merged string"
+    return local_frame(
+        spark, rows, "rank int, left string, right string, merged string"
     )
 
 

@@ -31,6 +31,8 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
+from quackspark.session import local_frame
+
 __all__ = ["connected_components"]
 
 #: edge-count gate for the driver union-find fast path (r13 optimization):
@@ -127,7 +129,7 @@ def _driver_components(spark, pdf, schema) -> DataFrame:
                 ru, rv = rv, ru
             parent[rv] = ru  # min node id stays the root
     if not parent:
-        return spark.createDataFrame([], schema=schema)
+        return local_frame(spark, [], schema)
     import pandas as pd
 
     out = pd.DataFrame(

@@ -154,14 +154,16 @@ def _round_micro_half_away(prod):
     java.math.BigDecimal.valueOf → Double.toString; Python ``repr`` is
     the same shortest-round-trip decimal). Vectorized
     floor(x+0.5)/ceil(x−0.5) fast path; the rare cells within 1e-6 of a
-    .5 boundary — where fp addition or shortest-repr could cross — are
-    re-done exactly with Decimal(repr(x)). Pinned against the Spark
-    expression by tests/test_opt_r14.py."""
+    .5 boundary — where fp addition or shortest-repr could cross — and
+    every cell at or above 2^52, where the ulp is ≥ 1 so ``x+0.5`` itself
+    rounds, are re-done exactly with Decimal(repr(x)). Cells must be
+    finite and below 2^63 (the driver probe guarantees both). Pinned
+    against the Spark expression by tests/test_opt_r14.py."""
     import numpy as np
 
     fast = np.where(prod >= 0, np.floor(prod + 0.5), np.ceil(prod - 0.5))
     frac = np.abs(prod - np.trunc(prod))
-    suspect = np.abs(frac - 0.5) < 1e-6
+    suspect = (np.abs(frac - 0.5) < 1e-6) | (np.abs(prod) >= 2.0**52)
     if suspect.any():
         from decimal import ROUND_HALF_UP, Decimal
 
@@ -182,23 +184,28 @@ def _round_6_half_away(vals):
     multiply in the Spark path — BigDecimal(value).setScale(6)).
     Vectorized product fast path (the double product is within ~ulp of
     the exact scaling, so only cells within 1e-6 of a .5 boundary can
-    diverge); suspects re-done with Decimal(repr(value)).quantize."""
+    diverge, plus every product at or above 2^52, where ``prod+0.5``
+    itself rounds); suspects re-done with Decimal(repr(value)).quantize
+    at a precision wide enough for any finite double."""
     import numpy as np
 
     prod = vals * 1_000_000.0
     fast = np.where(prod >= 0, np.floor(prod + 0.5), np.ceil(prod - 0.5))
     out = fast / 1_000_000.0
     frac = np.abs(prod - np.trunc(prod))
-    suspect = np.abs(frac - 0.5) < 1e-6
+    suspect = (np.abs(frac - 0.5) < 1e-6) | (np.abs(prod) >= 2.0**52)
     if suspect.any():
-        from decimal import ROUND_HALF_UP, Decimal
+        from decimal import ROUND_HALF_UP, Context, Decimal
 
         q = Decimal("0.000001")
+        ctx = Context(prec=400)
         flat = out.reshape(-1)
         vflat = vals.reshape(-1)
         for j in np.nonzero(suspect.reshape(-1))[0]:
             flat[j] = float(
-                Decimal(repr(float(vflat[j]))).quantize(q, rounding=ROUND_HALF_UP)
+                Decimal(repr(float(vflat[j]))).quantize(
+                    q, rounding=ROUND_HALF_UP, context=ctx
+                )
             )
     return out
 
@@ -237,8 +244,9 @@ def _driver_lloyd(ids, A, k: int, iters: int):
 
 def _driver_probe(vecs: DataFrame, cap: int | None):
     """limit-probe for the driver fast path: collect at most cap+1
-    (vec_id, embedding) rows. Returns the pandas frame when the corpus
-    fits and is clean (no NULLs, rectangular vectors), else None —
+    (vec_id, embedding) rows. Returns (ids int64[n], A float64[n×DIM])
+    when the corpus fits and is clean (no NULL vectors or elements,
+    rectangular, finite, micro-unit sums inside int64), else None —
     conservative, never wrong. Long-sum mode only: the decimal exact-sum
     mode would need a different update replication."""
     if cap is None:
@@ -273,7 +281,16 @@ def _driver_probe(vecs: DataFrame, cap: int | None):
     dims = {len(v) for v in head["embedding"]}
     if len(dims) != 1 or 0 in dims:
         return None
-    return head
+    import numpy as np
+
+    A = np.vstack([np.asarray(v, dtype=np.float64) for v in head["embedding"]])
+    # NULL elements arrive as NaN. Non-finite cells, and per-dimension
+    # micro-unit sums that dsum's long mode would overflow (Spark wraps
+    # or raises there; 2^62 leaves margin for the float estimate), have
+    # no faithful driver twin.
+    if not np.isfinite(A).all() or (np.abs(A).sum(axis=0) * 1e6 >= 2.0**62).any():
+        return None
+    return head["vec_id"].to_numpy().astype(np.int64), A
 
 
 def _update(assigned: DataFrame) -> DataFrame:
@@ -311,12 +328,11 @@ def kmeans_fit(
     KMEANS_DRIVER_ROW_CAP); ``0`` forces the distributed loop (tests pin
     driver == distributed on the same corpus)."""
     vecs = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
-    head = _driver_probe(vecs, driver_cap) if iters >= 2 else None
-    if head is not None:
+    probe = _driver_probe(vecs, driver_cap) if iters >= 2 else None
+    if probe is not None:
         import numpy as np
 
-        ids = head["vec_id"].to_numpy().astype(np.int64)
-        A = np.vstack(head["embedding"].to_numpy()).astype(np.float64)
+        ids, A = probe
         clusters, C, _, _ = _driver_lloyd(ids, A, k, iters)
         import pandas as pd
         from pyspark.sql.types import (
@@ -383,16 +399,15 @@ def kmeans_assign(
     driver == distributed by tests/test_opt_r14.py. ``driver_cap=0``
     forces the distributed path."""
     vecs = df.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding"))
-    head = _driver_probe(vecs, driver_cap) if iters >= 2 else None
-    if head is not None:
+    probe = _driver_probe(vecs, driver_cap) if iters >= 2 else None
+    if probe is not None:
         import numpy as np
         import pandas as pd
         from pyspark.sql.types import (
             DoubleType, IntegerType, LongType, StructField, StructType,
         )
 
-        ids = head["vec_id"].to_numpy().astype(np.int64)
-        A = np.vstack(head["embedding"].to_numpy()).astype(np.float64)
+        ids, A = probe
         clusters, _, best, d2 = _driver_lloyd(ids, A, k, iters)
         out = pd.DataFrame(
             {

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from quackspark.session import local_frame
+
 
 def with_global_cumsum(
     df: DataFrame,
@@ -58,7 +60,7 @@ def with_global_cumsum(
         offsets.append((row["__pid"], acc))
         acc += row["s"] or 0
     spark = df.sparkSession
-    off = spark.createDataFrame(offsets or [(0, 0)], "__pid int, __off long")
+    off = local_frame(spark, offsets or [(0, 0)], "__pid int, __off long")
     return (
         local.join(F.broadcast(off), "__pid")
         .withColumn(out_col, (F.col("__off") + F.col("__local_cum")).cast("long"))

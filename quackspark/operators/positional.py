@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from quackspark.session import local_frame
+
 
 def with_global_position(
     df: DataFrame, order_by: list[Column | str], pos_col: str = "pos"
@@ -47,7 +49,7 @@ def with_global_position(
         offsets.append((row["__pid"], acc))
         acc += row["n"]
     spark = df.sparkSession
-    off = spark.createDataFrame(offsets or [(0, 0)], "__pid int, __off long")
+    off = local_frame(spark, offsets or [(0, 0)], "__pid int, __off long")
     return (
         local.join(F.broadcast(off), "__pid")
         .withColumn(pos_col, (F.col("__off") + F.col("__rn")).cast("long"))

@@ -18,12 +18,13 @@ from pyspark.sql import functions as F
 
 from quackspark.operators.recursive import recursive_cte
 from quackspark.queries._util import load_table
+from quackspark.session import local_frame
 
 
 def misc_values_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VALUES list (reference EXPRESSION_SCAN, duckdb.hpp:11946)."""
     rows = [(1, "one", 1.5), (2, "two", None), (3, None, 3.5)]
-    return spark.createDataFrame(rows, "k int, name string, x double").orderBy("k")
+    return local_frame(spark, rows, "k int, name string, x double").orderBy("k")
 
 
 def misc_range_series(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -97,7 +98,7 @@ def misc_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("dst") <= 24)
     )
-    seed = spark.createDataFrame([(0, 0)], "node int, depth int")
+    seed = local_frame(spark, [(0, 0)], "node int, depth int")
     edges_b = F.broadcast(edges)
 
     def step(frontier: DataFrame) -> DataFrame:

@@ -21,6 +21,8 @@ from collections.abc import Iterable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from quackspark.session import local_frame
+
 ColumnOrSql = "Column | str"
 
 
@@ -177,7 +179,7 @@ class Connection:
         return Relation(self.spark.table(name))
 
     def values(self, rows: list[tuple], schema: str) -> Relation:
-        return Relation(self.spark.createDataFrame(rows, schema))
+        return Relation(local_frame(self.spark, rows, schema))
 
     def read_csv(self, path: str, **options) -> Relation:
         from quackspark.sources import read_csv
@@ -200,7 +202,7 @@ class Connection:
 
             files = sorted(_glob.glob(args[0]))
             return Relation(
-                self.spark.createDataFrame([(f,) for f in files], "file string")
+                local_frame(self.spark, [(f,) for f in files], "file string")
             )
         if name == "repeat":
             # duckdb-6.cpp:10510-10530: repeat(value, count)

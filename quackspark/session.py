@@ -21,9 +21,13 @@ opt into strictness with try_* / explicit casts.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.conversion import LocalDataToArrowConversion
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 #: tables the driver materializes under /root/testdata/sf*/ (TESTDATA.md)
 TESTDATA_TABLES = (
@@ -93,6 +97,32 @@ def prepare_session(spark: SparkSession) -> SparkSession:
         _register_compat_udfs(spark)
         _PREPARED.add(id(spark))
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable, schema: str | StructType
+) -> DataFrame:
+    """A driver-built frame (statement result, catalog listing, small
+    driver table) as an Arrow ``LocalRelation``.
+
+    ``createDataFrame(<python list>, schema)`` plans as ``Scan
+    ExistingRDD`` over a PythonRDD, so every action on it starts a
+    Python-worker task per core (~0.3 s for a one-row status frame). The
+    rows go through the type-faithful converter Spark Connect uses for
+    local lists instead, which makes the frame a JVM ``LocalTableScan``
+    with the same schema (nullability included) and the same rows.
+    ``schema`` is a DDL string or a ``StructType``.
+    """
+    struct = (
+        schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    )
+    rows = list(rows)
+    table = (
+        LocalDataToArrowConversion.convert(rows, struct, False)
+        if rows
+        else to_arrow_schema(struct).empty_table()
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def get_session(app_name: str = "quackspark", cpus: int | None = None) -> SparkSession:

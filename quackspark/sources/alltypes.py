@@ -34,6 +34,8 @@ from decimal import Decimal as D
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from quackspark.session import local_frame
+
 SCHEMA = T.StructType(
     [
         T.StructField("id", T.IntegerType()),
@@ -113,4 +115,4 @@ ROWS = [
 
 def all_types_df(spark: SparkSession) -> DataFrame:
     """The fixture as a DataFrame (deterministic literal rows)."""
-    return spark.createDataFrame(ROWS, SCHEMA)
+    return local_frame(spark, ROWS, SCHEMA)

@@ -86,12 +86,14 @@ class Snapshot:
         if not self.files:
             from pyspark.sql.types import StructType
 
+            from quackspark.session import local_frame
+
             st = (
                 StructType.fromJson(json.loads(self.schema))
                 if self.schema
                 else "dummy int"
             )
-            return spark.createDataFrame([], st)
+            return local_frame(spark, [], st)
         return spark.read.parquet(*self.files)
 
 

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from quackspark.functions.compat import glob_to_regex
 from quackspark.functions.timefmt import translate_format
+from quackspark.session import local_frame
 
 
 class UnsupportedSQL(ValueError):
@@ -5373,8 +5374,8 @@ def _sub_read_fn(m: re.Match, spark: SparkSession | None) -> str:
         from quackspark.sources.sniffer import sniff_csv as _sniff
 
         d = _sniff(paths[0])
-        df = spark.createDataFrame(
-            [(d.get("delim", ","), d.get("quote", '"'),
+        df = local_frame(
+            spark, [(d.get("delim", ","), d.get("quote", '"'),
               bool(d.get("header", True)), int(d.get("skip", 0)))],
             "Delimiter string, Quote string, HasHeader boolean, SkipRows int",
         )
@@ -5382,8 +5383,8 @@ def _sub_read_fn(m: re.Match, spark: SparkSession | None) -> str:
         import pyarrow.parquet as pq
 
         sch = pq.read_schema(paths[0])
-        df = spark.createDataFrame(
-            [(paths[0], f.name, str(f.type)) for f in sch],
+        df = local_frame(
+            spark, [(paths[0], f.name, str(f.type)) for f in sch],
             "file_name string, name string, type string",
         )
     elif kind in ("parquet_metadata", "parquet_file_metadata"):
@@ -6991,12 +6992,12 @@ def _run_prepared(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
         name, body = m.group(1).lower(), m.group(2)
         _prepared_params(body)  # scan now so a malformed body fails at PREPARE
         _PREPARED[name] = body
-        return spark.createDataFrame([(f"PREPARE {name}",)], "status string")
+        return local_frame(spark, [(f"PREPARE {name}",)], "status string")
     if m := _DEALLOCATE_RE.match(duckdb_sql):
         # unknown name is NOT an error (pinned live)
         name = m.group(1).lower()
         _PREPARED.pop(name, None)
-        return spark.createDataFrame([(f"DEALLOCATE {name}",)], "status string")
+        return local_frame(spark, [(f"DEALLOCATE {name}",)], "status string")
     if m := _EXECUTE_RE.match(duckdb_sql):
         name, argtext = m.group(1).lower(), m.group(2) or ""
         if name not in _PREPARED:
@@ -7078,7 +7079,7 @@ def _run_statement(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
             except Exception:
                 # temp view / external frame: nothing to persist stats on
                 spark.table(target)  # still raise loudly on unknown names
-        return spark.createDataFrame([], "Success string")
+        return local_frame(spark, [], "Success string")
     # CALL fn(args) — DuckDB's statement spelling for running a table
     # function (vendored PG CallStmt); same resolution as FROM-position
     if m := re.match(r"^\s*CALL\s+(\w+\s*\(.*\))\s*;?\s*$", duckdb_sql,
@@ -7092,7 +7093,7 @@ def _run_statement(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
         if target.lower() not in ("main", "memory", "memory.main", "temp",
                                   "system"):
             spark.sql(f"USE {target.split('.')[0]}")
-        return spark.createDataFrame([], "Success string")
+        return local_frame(spark, [], "Success string")
     # TRUNCATE [TABLE] t → DELETE FROM t through the DML path (copy-on-
     # write staging, versioned tables, txn snapshots all apply); DuckDB
     # returns the deleted row count as a one-row 'Count' result
@@ -7102,7 +7103,7 @@ def _run_statement(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
         target = m.group(1)
         cnt = spark.table(target).count()
         sql(spark, f"DELETE FROM {target}")
-        return spark.createDataFrame([(cnt,)], "Count bigint")
+        return local_frame(spark, [(cnt,)], "Count bigint")
 
     if m := re.match(
         r"^\s*(?:SET|RESET)\s+(?:SESSION\s+|GLOBAL\s+)?(\S.*?)\s*;?\s*$",
@@ -7126,12 +7127,10 @@ def _run_statement(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
 
     if m := _EXPORT_RE.match(duckdb_sql):
         manifest = export_database(spark, m.group(1), format=(m.group(2) or "parquet").lower())
-        return spark.createDataFrame(
-            sorted(manifest.items()), "table string, path string"
-        )
+        return local_frame(spark, sorted(manifest.items()), "table string, path string")
     if m := _IMPORT_RE.match(duckdb_sql):
         names = import_database(spark, m.group(1))
-        return spark.createDataFrame([(n,) for n in sorted(names)], "table string")
+        return local_frame(spark, [(n,) for n in sorted(names)], "table string")
     if m := re.match(
         r"^\s*ATTACH\s+(?:DATABASE\s+)?'([^']+)'\s+AS\s+(\w+)"
         r"\s*(?:\(\s*READ_ONLY\s*\))?\s*;?\s*$",
@@ -7148,8 +7147,8 @@ def _run_statement(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
             from quackspark.sources.duckfile import attach_duckdb_file
 
             names = attach_duckdb_file(spark, src, alias)
-            return spark.createDataFrame(
-                [(alias, n) for n in sorted(names)], "db string, table string"
+            return local_frame(
+                spark, [(alias, n) for n in sorted(names)], "db string, table string"
             )
         with open(os.path.join(src, "load.json")) as fh:
             meta = json.load(fh)
@@ -7162,13 +7161,14 @@ def _run_statement(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
                 f"CREATE TABLE IF NOT EXISTS {alias}.{tname} "
                 f"USING parquet LOCATION '{path}'"
             )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(alias, n) for n in sorted(meta["tables"])], "db string, table string"
         )
     if m := re.match(r"^\s*DETACH\s+(?:DATABASE\s+)?(\w+)\s*;?\s*$", duckdb_sql, re.I):
         alias = m.group(1)
         spark.sql(f"DROP DATABASE IF EXISTS {alias} CASCADE")
-        return spark.createDataFrame([(alias,)], "detached string")
+        return local_frame(spark, [(alias,)], "detached string")
     if m := re.match(
         r"^\s*EXPLAIN\s+(ANALYZE\s+)?(.+)$", duckdb_sql, re.I | re.DOTALL
     ):
@@ -7187,8 +7187,8 @@ def _run_statement(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
                 "formatted"
             )
         )
-        return spark.createDataFrame(
-            [(line,) for line in plan.splitlines()], "explain_output string"
+        return local_frame(
+            spark, [(line,) for line in plan.splitlines()], "explain_output string"
         )
     # DESCRIBE / SHOW statement shorthands (r10 verdict missing #1: the
     # vendored PG grammar parses these into the same table functions the
@@ -7253,9 +7253,7 @@ def _run_statement(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
         if pragma == "show_tables":
             return duckdb_tables(spark).select("table_name")
         if pragma == "version":
-            return spark.createDataFrame(
-                [(spark.version,)], "library_version string"
-            )
+            return local_frame(spark, [(spark.version,)], "library_version string")
         if pragma == "last_profiling_output":
             from quackspark.catalog import last_profiling_output
 
@@ -7273,8 +7271,8 @@ def _run_statement(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
                 spark.conf.get("spark.sql.warehouse.dir", "")
             ).path
             removed = _VT(os.path.join(wh, arg.lower())).vacuum()
-            return spark.createDataFrame(
-                [(f,) for f in removed] or [], "removed_file string"
+            return local_frame(
+                spark, [(f,) for f in removed] or [], "removed_file string"
             )
         raise UnsupportedSQL(f"PRAGMA {pragma}")
     if m := re.match(
@@ -7294,9 +7292,7 @@ def _run_statement(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
                 "CREATE TYPE AS ENUM needs distinct quoted labels"
             )
         _ENUM_TYPES[name] = labels
-        return spark.createDataFrame(
-            [(name, len(labels))], "type string, n_labels int"
-        )
+        return local_frame(spark, [(name, len(labels))], "type string, n_labels int")
     if m := re.match(
         r"^\s*DROP\s+TYPE\s+(IF\s+EXISTS\s+)?(\w+)\s*;?\s*$", duckdb_sql, re.I
     ):
@@ -7304,7 +7300,7 @@ def _run_statement(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
         if name not in _ENUM_TYPES and not m.group(1):
             raise UnsupportedSQL(f"DROP TYPE: unknown type {name}")
         _ENUM_TYPES.pop(name, None)
-        return spark.createDataFrame([(name,)], "dropped string")
+        return local_frame(spark, [(name,)], "dropped string")
     if m := re.match(
         r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?SEQUENCE\s+(?:IF\s+NOT\s+EXISTS\s+)?"
         r"(\w+)(.*?);?\s*$",
@@ -7352,7 +7348,7 @@ def _run_statement(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
             state = dict(_SEQUENCES[name])
             state.pop("last")
             _seq_write(path, state)
-        return spark.createDataFrame([(name,)], "sequence string")
+        return local_frame(spark, [(name,)], "sequence string")
     if m := re.match(
         r"^\s*DROP\s+SEQUENCE\s+(?:IF\s+EXISTS\s+)?(\w+)\s*;?\s*$", duckdb_sql, re.I
     ):
@@ -7360,7 +7356,7 @@ def _run_statement(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
         if path := _seq_file(spark, m.group(1).lower()):
             with contextlib.suppress(OSError):
                 os.unlink(path)
-        return spark.createDataFrame([(m.group(1).lower(),)], "dropped string")
+        return local_frame(spark, [(m.group(1).lower(),)], "dropped string")
     if m := _COPY_RE.match(duckdb_sql):
         src, path, opts = m.group(1), m.group(2), _parse_copy_options(m.group(3))
         if src.startswith("("):
@@ -7368,7 +7364,7 @@ def _run_statement(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
         else:
             df = spark.table(src)
         copy_to(df, path, **{"format": opts.pop("format", "csv"), **opts})
-        return spark.createDataFrame([(path,)], "path string")
+        return local_frame(spark, [(path,)], "path string")
     return None
 
 
@@ -7518,7 +7514,7 @@ def _run_update_from(
         # later scan of it (e.g. EXPORT DATABASE walking the catalog)
         # would read dropped files
         spark.catalog.dropTempView("__qs_upd_from")
-    return spark.createDataFrame([(table,)], "updated string")
+    return local_frame(spark, [(table,)], "updated string")
 
 
 def _run_delete_using(
@@ -7549,7 +7545,7 @@ def _run_delete_using(
     if table_is_fk_parent(table):
         enforce_parent_keys(spark, table, new_df)
     _swap_in(spark, table, new_df)
-    return spark.createDataFrame([(table,)], "deleted string")
+    return local_frame(spark, [(table,)], "deleted string")
 _DELETE_RE = re.compile(
     r"^\s*DELETE\s+FROM\s+(\w+)(?:\s+WHERE\s+(.*?))?"
     r"(?:\s+RETURNING\s+(.*?))?\s*;?\s*$",
@@ -7638,14 +7634,14 @@ def _run_txn(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
         if _TXN is not None:
             raise TransactionError("cannot start a transaction within a transaction")
         _TXN = {"snapshots": {}}
-        return spark.createDataFrame([("BEGIN",)], "status string")
+        return local_frame(spark, [("BEGIN",)], "status string")
     if _COMMIT_RE.match(duckdb_sql):
         if _TXN is None:
             raise TransactionError("no transaction is active")
         for snap in _TXN["snapshots"].values():
             _drop_table_and_location(spark, snap)
         _TXN = None  # versioned tables: their commits are already durable
-        return spark.createDataFrame([("COMMIT",)], "status string")
+        return local_frame(spark, [("COMMIT",)], "status string")
     if _ROLLBACK_RE.match(duckdb_sql):
         if _TXN is None:
             raise TransactionError("no transaction is active")
@@ -7661,7 +7657,7 @@ def _run_txn(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
                 # session committed to this table mid-transaction
                 _versioned.txn_rollback(spark, table, pre_version)
         _TXN = None
-        return spark.createDataFrame([("ROLLBACK",)], "status string")
+        return local_frame(spark, [("ROLLBACK",)], "status string")
     return None
 
 
@@ -7861,8 +7857,8 @@ def _run_dml(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
             ))
             enforce_update(spark, table, upd_rows, new_df, set(assigns))
         _swap_in(spark, table, new_df)
-        return ret_df if ret_df is not None else spark.createDataFrame(
-            [(table,)], "updated string"
+        return ret_df if ret_df is not None else local_frame(
+            spark, [(table,)], "updated string"
         )
     if m := _DELETE_RE.match(duckdb_sql):
         table, pred, returning = m.groups()
@@ -7882,8 +7878,8 @@ def _run_dml(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
         if table_is_fk_parent(table):
             enforce_parent_keys(spark, table, new_df)
         _swap_in(spark, table, new_df)
-        return ret_df if ret_df is not None else spark.createDataFrame(
-            [(table,)], "deleted string"
+        return ret_df if ret_df is not None else local_frame(
+            spark, [(table,)], "deleted string"
         )
     return None
 

@@ -50,6 +50,7 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
+from quackspark.session import local_frame
 from quackspark.sources.commitlog import VersionedTable
 
 __all__ = [
@@ -119,7 +120,7 @@ def _read_snapshot(spark: SparkSession, snap) -> DataFrame:
     if snap.schema:
         st = StructType.fromJson(_json.loads(snap.schema))
         if not snap.files:
-            return spark.createDataFrame([], st)
+            return local_frame(spark, [], st)
         return spark.read.schema(st).parquet(*snap.files)
     return snap.read(spark)
 
@@ -340,7 +341,8 @@ def versions_df(spark: SparkSession, name: str) -> DataFrame:
                 float(c.get("ts") or 0.0),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "version long, op string, files_added int, files_removed int, "
         "read_version long, ts double",

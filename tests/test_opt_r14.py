@@ -49,8 +49,9 @@ def test_kmeans_driver_boundary_micro_values(spark):
 
 
 def test_kmeans_probe_fallbacks(spark):
-    """NULL vectors, non-long ids, and a cap below the corpus size all
-    fall back to the distributed loop (probe returns None)."""
+    """NULL vectors, NULL/NaN/inf elements, non-long ids, ragged vectors
+    and a cap below the corpus size all fall back to the distributed
+    loop (probe returns None)."""
     ok = spark.createDataFrame(
         [(0, [1.0, 2.0]), (1, [2.0, 1.0])], "vec_id bigint, embedding array<double>"
     )
@@ -69,6 +70,21 @@ def test_kmeans_probe_fallbacks(spark):
         [(0, [1.0, 2.0]), (1, [1.0])], "vec_id bigint, embedding array<double>"
     )
     assert KM._driver_probe(ragged, 10) is None
+    # NULL / NaN / inf ELEMENTS inside otherwise well-formed vectors: the
+    # probe refuses them, and both entry points still equal the
+    # distributed loop (they fall back to it)
+    for bad in (None, float("nan"), float("inf")):
+        df = spark.createDataFrame(
+            [(i, [float(i), bad if i == 3 else 1.0]) for i in range(8)],
+            "vec_id bigint, embedding array<double>",
+        )
+        assert KM._driver_probe(df, 10) is None, bad
+        drv = _rows(KM.kmeans_assign(df, k=2, iters=2), "vec_id")
+        dist = _rows(KM.kmeans_assign(df, k=2, iters=2, driver_cap=0), "vec_id")
+        assert drv == dist, bad
+        fd = _rows(KM.kmeans_fit(df, k=2, iters=2), "cluster")
+        fx = _rows(KM.kmeans_fit(df, k=2, iters=2, driver_cap=0), "cluster")
+        assert fd == fx, bad
 
 
 def test_round_micro_twin_matches_spark(spark):
@@ -94,3 +110,58 @@ def test_round_micro_twin_matches_spark(spark):
     for i, row in enumerate(exp):
         assert int(got_micro[i]) == row["micro"], vals[i]
         assert float(got_r6[i]) == row["r6"], vals[i]
+
+
+def test_round_twins_match_spark_at_2p52_scale(spark):
+    """At and above 2^52 the double's ulp is >= 1, so the ``x+0.5`` fast
+    path itself rounds (to even) — both twins must treat those cells as
+    suspects and still equal the Spark expressions."""
+    import numpy as np
+
+    vals = [
+        (2**52 + 1) / 1e6, (2**52 + 3) / 1e6, -(2**52 + 1) / 1e6,
+        4503599627.3705, 9007199254.740993, 123456789012.3456785,
+        2**60 / 1e6 + 0.5, 1.5e20, -7.25e25,
+    ]
+    df = spark.createDataFrame([(v,) for v in vals], "x double")
+    exp = df.select(
+        F.round(F.col("x") * 1_000_000).cast("long").alias("micro"),
+        F.round("x", 6).alias("r6"),
+    ).collect()
+    arr = np.array(vals, dtype=np.float64)
+    got_r6 = KM._round_6_half_away(arr)
+    for i, row in enumerate(exp):
+        assert float(got_r6[i]) == row["r6"], vals[i]
+    # the micro twin's domain is |x·1e6| < 2^63 (the probe's gate)
+    small = np.abs(arr) * 1e6 < 2.0**63
+    got_micro = KM._round_micro_half_away(arr[small] * 1_000_000.0)
+    want = [row["micro"] for row, ok in zip(exp, small) if ok]
+    assert [int(x) for x in got_micro] == want
+
+
+def test_kmeans_driver_2p52_scale_values(spark):
+    """Vectors whose micro-unit products sit above 2^52 (and whose d2
+    values do too) keep the driver path and equal the distributed loop;
+    vectors whose micro-unit sums would leave int64 fall back."""
+    base = (2**52 + 1) / 1e6
+    rows = [
+        (i, [base * (1 + i % 5), (-1) ** i * (base + i * 1.000001e-6), 0.5e-6])
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    assert KM._driver_probe(df, 100) is not None  # the driver path is exercised
+    drv = _rows(KM.kmeans_assign(df, k=4, iters=2), "vec_id")
+    dist = _rows(KM.kmeans_assign(df, k=4, iters=2, driver_cap=0), "vec_id")
+    assert drv == dist
+    fd = _rows(KM.kmeans_fit(df, k=4, iters=2), "cluster")
+    fx = _rows(KM.kmeans_fit(df, k=4, iters=2, driver_cap=0), "cluster")
+    assert fd == fx
+
+    huge = spark.createDataFrame(
+        [(i, [1e13 * (i + 1), 1.0]) for i in range(8)],
+        "vec_id bigint, embedding array<double>",
+    )
+    assert KM._driver_probe(huge, 100) is None
+    drv = _rows(KM.kmeans_assign(huge, k=2, iters=2), "vec_id")
+    dist = _rows(KM.kmeans_assign(huge, k=2, iters=2, driver_cap=0), "vec_id")
+    assert drv == dist
