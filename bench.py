@@ -435,72 +435,36 @@ def main() -> None:
     # the round driver captures only the last ~2000 chars of stdout and
     # parses the final line — the full object above exceeds that (r3's
     # BENCH record shows a mid-JSON truncated tail, parsed={}), so emit a
-    # compact spec-shaped summary LAST that carries EVERY summary section
-    # (r4 verdict item 3 / r5 directive 6): per-query values pack as a
-    # 4-element array [sf0.1 sec, sf0.1 ratio-vs-duckdb pct, sf1/sf0.1 10x
-    # growth factor, sf1 ratio-vs-duckdb pct] (null where uncovered), so
-    # the seconds survive even when the redundant "queries" dict is
-    # dropped to fit the tail window. Full per-engine detail stays in the
-    # long line above and the committed BENCH_LOCAL_r{N}.json.
-    duck01 = out.get("duckdb_queries", {})
-    duckn01 = out.get("duckdb_native_queries", {})
+    # compact spec-shaped summary LAST. It carries the driver-readable
+    # per-query seconds {"queries": {name: sec}} plus, aligned with that
+    # dict's order, each query's sf1/sf0.1 10x growth factor ("g10", null
+    # where uncovered). Per-query ratios against DuckDB and the family
+    # split live in the long line above and the committed
+    # BENCH_LOCAL_r{N}.json only — each name appears once here, which is
+    # what keeps the line inside the tail window.
     s1o = out.get("sf1", {})
     s1q = s1o.get("spark_queries", {})
     d1q = s1o.get("duckdb_queries", {})
     d1nq = s1o.get("duckdb_native_queries", {})
-    packed = {}
-
-    def _pct(a: float, b: float) -> int | None:
-        return int(round(100 * a / b)) if a > 0 and b > 0 else None
-
-    for n in names:
-        t = times.get(n, -1)
-        g = s1q.get(n, -1)
-        row = [
-            round(t, 2) if t > 0 else None,
-            _pct(t, duck01.get(n, -1)),
-            round(g / t, 1) if g > 0 and t > 0 else None,
-            _pct(g, d1q.get(n, -1)),
-        ]
-        # right-trim trailing nulls (positions are fixed, so truncation
-        # from the right is parse-compatible; r13's line was 62 chars from
-        # overflowing the driver's 2000-char tail — VERDICT r13 #2)
-        while row and row[-1] is None:
-            row.pop()
-        if row:
-            packed[n] = row
+    queries = {n: round(times.get(n, -1), 2) for n in names}
     compact = {
         "metric": out["metric"],
         "value": out["value"],
         "unit": "sec",
         "sf": out["sf"],
-        # q legend: [sf0.1 sec, sf0.1 spark/duckdb-on-parquet pct,
-        # sf1/sf0.1 10x growth factor, sf1 spark/duckdb-on-parquet pct] —
-        # percents as ints (75 = 0.75x), trailing nulls trimmed. Per-query
-        # seconds live in the packed rows, so the redundant
-        # {"queries": {name: sec}} dict is dropped unconditionally (r7
-        # verdict #4: the length-gated fallback was one field from
-        # re-truncating the driver's 2000-char window). The per-query
-        # NATIVE-duckdb pcts (r12/r13 row elements 5-6) moved to the long
-        # line and BENCH_LOCAL record only: with them the r13 compact line
-        # hit 1938/2000 chars and r12's overflowed, losing the driver's
-        # whole per-query table (VERDICT r13 #2) — the native story stays
-        # in aggregate here (ratio_vs_native).
-        "q": packed,
+        "queries": queries,
     }
+    if s1q:
+        compact["g10"] = [
+            round(s1q[n] / t, 1) if s1q.get(n, -1) > 0 and t > 0 else None
+            for n, t in queries.items()
+        ]
     if "ratio_spark_vs_duckdb" in out:
         compact["duckdb_value"] = out["duckdb_value"]
         compact["ratio_spark_vs_duckdb"] = out["ratio_spark_vs_duckdb"]
     if "ratio_spark_vs_duckdb_native" in out:
         compact["duckdb_native_value"] = out["duckdb_native_value"]
         compact["ratio_vs_native"] = out["ratio_spark_vs_duckdb_native"]
-    # fam legend: {family: [spark_total, duckdb_total, spark/duckdb]}.
-    # Per-family NATIVE and sf1 splits live in the long line
-    # ("families_native", sf1.families) and the committed BENCH_LOCAL
-    # record — r13's compact "fam_sf1" block (135 chars) is part of why
-    # the line ran 1938/2000 chars (VERDICT r13 #2), so the compact line
-    # keeps only the sf0.1 family split plus the sf1 aggregate below.
-    compact["fam"] = out.get("families", {})
     if s1q:
         covered = [
             n for n, v in s1q.items() if v > 0 and d1q.get(n, -1) > 0
@@ -540,8 +504,11 @@ def main() -> None:
             for path in reversed(locals_):
                 with open(path) as fh:
                     rec = json.load(fh)
+                # records since the compact line carried "queries" hold
+                # bare seconds; older ones hold q rows led by the seconds
+                q_map = {n: [t] for n, t in rec.get("queries", {}).items()}
                 records.append(
-                    (os.path.basename(path), rec.get("q", {}),
+                    (os.path.basename(path), q_map or rec.get("q", {}),
                      set((rec.get("contention_suspect") or {}).get("queries", [])))
                 )
             suspects = _contention_suspects(times, records)
@@ -572,11 +539,10 @@ COMPACT_LINE_BUDGET = 1800
 def _fit_compact_line(compact: dict, budget: int = COMPACT_LINE_BUDGET) -> str:
     """Serialize ``compact``, degrading gracefully if it exceeds the
     driver's tail window (VERDICT r13 #2). The default shape fits with
-    ~300 chars of slack; the staged trims below only fire if numbers get
+    ~500 chars of slack; the staged trims below only fire if numbers get
     unexpectedly wide, shedding the most redundant fields first (each is
-    also present in the long line / BENCH_LOCAL record). The per-query
-    seconds (q rows, element 0) are shed LAST — they are the driver's
-    round-over-round comparison."""
+    also present in the long line). The per-query seconds ("queries")
+    are never shed — they are the driver's round-over-round comparison."""
     line = json.dumps(compact, separators=(",", ":"))
     if len(line) <= budget:
         return line
@@ -586,19 +552,16 @@ def _fit_compact_line(compact: dict, budget: int = COMPACT_LINE_BUDGET) -> str:
     if compact.get("contention_suspect"):
         compact["contention_suspect"] = dict(compact["contention_suspect"])
     stages = [
-        lambda c: c.pop("fam", None),
         lambda c: (c.get("contention_suspect") or {}).pop("queries", None),
         lambda c: c.pop("sf1_summary", None),
-        lambda c: c.__setitem__(
-            "q", {n: r[:1] for n, r in c.get("q", {}).items()}
-        ),
+        lambda c: c.pop("g10", None),
     ]
     for stage in stages:
         stage(compact)
         line = json.dumps(compact, separators=(",", ":"))
         if len(line) <= budget:
             return line
-    return line  # q seconds alone cannot exceed the budget for 27 queries
+    return line  # the seconds alone cannot exceed the budget for 27 queries
 
 
 if __name__ == "__main__":

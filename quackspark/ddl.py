@@ -8,10 +8,11 @@ Spark-side semantics, documented per statement:
 - ``CREATE TABLE (col defs)`` → managed parquet table. Constraints:
   PRIMARY KEY / UNIQUE / NOT NULL / CHECK / FOREIGN KEY are parsed AND
   enforced (r6) — the reference enforces them per-row via its ART index
-  (duckdb-internal.hpp); we enforce them per-STATEMENT with one bounded
-  validation job before the write lands (see _enforce_insert /
-  enforce_update / enforce_parent_keys; a referenced parent also cannot
-  be dropped while a child exists). ``DEFAULT`` expressions ARE
+  (duckdb-internal.hpp); we enforce them per-STATEMENT with one
+  validation query before the write lands, scoped to what the statement
+  can violate (see _violations / enforce_update; FK probes stay
+  separate; a referenced parent also cannot be dropped while a child
+  exists). ``DEFAULT`` expressions ARE
   honored: partial-column INSERTs fill missing columns with their
   default.
 - ``TEMP TABLE`` → ordinary managed table: the metastore/warehouse of
@@ -57,7 +58,7 @@ TABLE_PKEYS: dict[str, list[str]] = {}
 COMMENTS: dict[str, str] = {}
 #: enforced-constraint registries (r6 — the reference enforces these via
 #: its ART index + binder, duckdb-internal.hpp; we enforce them with one
-#: bounded validation job per DML statement, see _enforce_insert)
+#: validation query per DML statement, see _violations)
 TABLE_NOTNULL: dict[str, list[str]] = {}
 TABLE_CHECKS: dict[str, list[str]] = {}  # DuckDB-dialect expressions
 TABLE_UNIQUES: dict[str, list[list[str]]] = {}  # key sets; PK set first
@@ -647,29 +648,41 @@ def _run_insert_plain(
         spark, table
     ):
         return None
+    _append(spark, table, _proposed_rows(spark, table, source))
+    return _status(spark, table=table, status="inserted")
+
+
+def _proposed_rows(spark: SparkSession, table: str, source: str) -> DataFrame:
+    """Bind a full-row INSERT source (VALUES / SELECT / FROM, optionally
+    parenthesized) to ``table``'s columns, cast to their types."""
     from quackspark.sqlfront import transpile
 
     s = source.strip()
     if s.startswith("(") and s.endswith(")"):
-        source = s[1:-1]  # parenthesized SELECT source
-    schema = spark.table(table).schema
-    src_sql = transpile(source, spark)
+        s = s[1:-1]  # parenthesized SELECT source
+    fields = spark.table(table).schema.fields
+    src_sql = transpile(s, spark)
     if re.match(r"^\s*VALUES\b", src_sql, re.I):
-        names = ", ".join(f.name for f in schema.fields)
+        names = ", ".join(f.name for f in fields)
         src_sql = f"SELECT * FROM ({src_sql}) AS __v({names})"
     elif re.match(r"^\s*FROM\b", src_sql, re.I):
         src_sql = f"SELECT * {src_sql}"
-    src = spark.sql(src_sql).toDF(*[f.name for f in schema.fields])
-    src = src.selectExpr(
+    return spark.sql(src_sql).toDF(*[f.name for f in fields]).selectExpr(
         *[
             f"CAST(`{f.name}` AS {f.dataType.simpleString()}) AS `{f.name}`"
-            for f in schema.fields
+            for f in fields
         ]
     )
-    _enforce_insert(spark, table, src)
-    if not _versioned.intercept_append(spark, table, src):
-        src.write.insertInto(table, overwrite=False)
-    return _status(spark, table=table, status="inserted")
+
+
+def _append(spark: SparkSession, table: str, df: DataFrame) -> None:
+    """Validate ``df`` (see _enforce_insert), then append it — as a
+    commit on a versioned table."""
+    from quackspark import versioned as _versioned
+
+    _enforce_insert(spark, table, df)
+    if not _versioned.intercept_append(spark, table, df):
+        df.write.insertInto(table, overwrite=False)
 
 
 def _swap(spark: SparkSession, table: str, df: DataFrame) -> None:
@@ -855,13 +868,7 @@ def _run_copy_from(
               .csv(path))
     else:
         raise UnsupportedSQL(f"COPY FROM format {fmt!r}")
-    df = df.select(*[f"`{f.name}`" for f in schema.fields])
-    if has_enforced_constraints(table):
-        _enforce_insert(spark, table, df)
-    from quackspark import versioned as _versioned
-
-    if not _versioned.intercept_append(spark, table, df):
-        df.write.insertInto(table, overwrite=False)
+    _append(spark, table, df.select(*[f"`{f.name}`" for f in schema.fields]))
     return _status(spark, table=table, status="copied")
 
 
@@ -886,57 +893,121 @@ def _unique_kind(table: str, i: int, keys: list[str]) -> str:
     return "primary key" if i == 0 and pk == keys else "unique"
 
 
-def _enforce_insert(
-    spark: SparkSession,
-    table: str,
-    src_df: DataFrame,
-    *,
-    uniques: bool = True,
-    against_existing: bool = True,
-) -> None:
-    """Validate proposed rows BEFORE they land, failing the statement
-    atomically like the reference's ConstraintException.
-
-    Cost model (the 100 TB posture): the reference pays a per-row ART
-    probe (duckdb-internal.hpp index machinery); we pay per-STATEMENT
-    distributed jobs — ONE aggregate over the proposed rows for every
-    NOT NULL + CHECK at once, then per key set one duplicate probe whose
-    result is a single offending key (bounded metadata, never row data).
-    NULL key parts never conflict (DuckDB unique semantics); CHECK
-    passes on NULL (SQL three-valued logic)."""
+def _row_checks(
+    spark: SparkSession, table: str, cols: set[str], scope: set[str] | None = None
+) -> list:
+    """``table``'s NOT NULL and CHECK constraints in reporting order, as
+    ``(message, column)`` pairs whose column is TRUE on a violating row
+    (a CHECK passes on NULL: three-valued logic). ``scope`` — an UPDATE's
+    assigned columns — keeps only what the statement can break: NOT NULL
+    on an assigned column, a CHECK whose text names one (the reference's
+    DataTable::VerifyUpdateConstraints rule)."""
     from pyspark.sql import functions as F
 
     from quackspark.sqlfront import transpile
 
-    key = table.lower()
-    cols = {c.lower() for c in src_df.columns}
-    aggs, labels = [], []
-    for c in TABLE_NOTNULL.get(key, []):
-        if c in cols:
-            aggs.append(F.max(F.col(c).isNull()).alias(f"v{len(labels)}"))
-            labels.append(("notnull", c))
-    for expr in TABLE_CHECKS.get(key, []):
-        sexpr = transpile(expr, spark)
-        aggs.append(
-            F.max(~F.coalesce(F.expr(sexpr), F.lit(True))).alias(f"v{len(labels)}")
+    out = [
+        (f"NOT NULL constraint failed: {table}.{c}", F.col(c).isNull())
+        for c in TABLE_NOTNULL.get(table.lower(), [])
+        if c in cols and (scope is None or c in scope)
+    ]
+    for expr in TABLE_CHECKS.get(table.lower(), []):
+        # the names the CHECK text uses: string literals skipped, quoted
+        # identifiers unquoted (a function name only widens the scope)
+        text = re.sub(r"'(?:[^']|'')*'", "''", expr)
+        names = re.findall(r'"([^"]+)"|([A-Za-z_]\w*)', text)
+        if scope is None or {(q or w).lower() for q, w in names} & scope:
+            msg = f"CHECK constraint failed on table {table} with expression CHECK(({expr}))"
+            out.append((msg, ~F.coalesce(F.expr(transpile(expr, spark)), F.lit(True))))
+    return out
+
+
+def _violations(
+    rows: DataFrame,
+    checks: list,
+    key_sets: list[tuple[list[str], bool]],
+    others: DataFrame | None = None,
+) -> list[tuple[bool, bool, bool]]:
+    """Every constraint question of a write statement as ONE Spark query
+    whose result is a single row of booleans, never key or row data (no
+    query when there is no question). A set ``checks`` flag raises its
+    error here, in order.
+
+    ``rows`` (tag 1) carry the ``checks`` flags, ``others`` (tag 0) only
+    their keys. One ``groupBy`` over the key columns, then one global
+    aggregate, answers per key set ``(keys, nulls_distinct)``: does a key
+    repeat among ``rows``; is a ``rows`` key in ``others``; does a key
+    repeat among ``others``. With ``nulls_distinct`` a key with a NULL
+    part never counts (DuckDB unique semantics); without, NULLs group."""
+    from pyspark.sql import functions as F
+
+    fl = [f"__f{j}" for j in range(len(checks))]
+    flags = [c.alias(n) for (_, c), n in zip(checks, fl)]
+    if not key_sets:
+        vals = list(rows.select(*flags).agg(*[F.max(n) for n in fl]).first()) if fl else []
+    else:
+        allkeys = list(dict.fromkeys(k for keys, _ in key_sets for k in keys))
+        u = rows.select(*allkeys, *flags, F.lit(1).alias("__t"))
+        if others is not None:
+            nulls = [F.lit(None).cast("boolean").alias(n) for n in fl]
+            u = u.unionByName(others.select(*allkeys, *nulls, F.lit(0).alias("__t")))
+        # one copy of each row per key set, the key columns outside it NULLed
+        u = u.withColumn("__s", F.explode(F.array(*map(F.lit, range(len(key_sets))))))
+        u = u.select("__s", "__t", *fl, *[
+            F.when(
+                F.col("__s").isin([i for i, (ks, _) in enumerate(key_sets) if k in ks]),
+                F.col(k),
+            ).alias(k)
+            for k in allkeys
+        ])
+        groups = u.groupBy("__s", *allkeys).agg(
+            F.sum("__t").alias("__t"),
+            (F.count(F.lit(1)) - F.sum("__t")).alias("__o"),
+            *[F.max(n).alias(n) for n in fl],
         )
-        labels.append(("check", expr))
-    if aggs:
-        row = src_df.agg(*aggs).first()
-        for (kind, what), bad in zip(labels, row):
-            if bad:
-                if kind == "notnull":
-                    raise ConstraintError(
-                        f"Constraint Error: NOT NULL constraint failed: "
-                        f"{table}.{what}"
-                    )
-                raise ConstraintError(
-                    f"Constraint Error: CHECK constraint failed on table "
-                    f"{table} with expression CHECK(({what}))"
-                )
-    for fk in TABLE_FKEYS.get(key, []):
+        answers = []
+        for i, (keys, nulls_distinct) in enumerate(key_sets):
+            ok = F.col("__s") == i
+            for k in keys if nulls_distinct else []:
+                ok = ok & F.col(k).isNotNull()
+            t, o = F.col("__t"), F.col("__o")
+            answers += [ok & (t > 1), ok & (t > 0) & (o > 0), ok & (o > 1)]
+        vals = list(groups.agg(*[F.max(n) for n in fl], *map(F.max, answers)).first())
+    for (msg, _), bad in zip(checks, vals):
+        if bad:
+            raise ConstraintError(f"Constraint Error: {msg}")
+    return [tuple(map(bool, vals[j : j + 3])) for j in range(len(fl), len(vals), 3)]
+
+
+def _repeated_key(df: DataFrame, keys: list[str]):
+    """The error path's follow-up query: one key repeated in ``df``."""
+    from pyspark.sql import functions as F
+
+    return (
+        df.select(*keys).na.drop("any").groupBy(*keys).count()
+        .filter(F.col("count") > 1).limit(1).collect()[0]
+    )
+
+
+def _first_missing(vals: DataFrame, ref: DataFrame):
+    """One NULL-free row of ``vals`` that ``ref`` (same columns) lacks,
+    or None — an FK probe's single anti-join."""
+    got = vals.na.drop("any").distinct().join(ref, on=vals.columns, how="left_anti")
+    return next(iter(got.limit(1).collect()), None)
+
+
+def _check_foreign_keys(
+    spark: SparkSession, table: str, src_df: DataFrame, scope: set[str] | None = None
+) -> None:
+    """Child-side FK probes: every non-NULL FK value of ``src_df`` must
+    exist in the parent (one anti-join per FK; ``scope`` skips FKs over
+    columns an UPDATE does not assign)."""
+    from pyspark.sql import functions as F
+
+    cols = {c.lower() for c in src_df.columns}
+    for fk in TABLE_FKEYS.get(table.lower(), []):
         fcols = fk["cols"]
-        if not set(fcols) <= cols:
+        if not set(fcols) <= cols or (scope is not None and not scope & set(fcols)):
             continue
         pcols = fk["pcols"] or TABLE_PKEYS.get(fk["parent"], [])
         if not pcols or len(pcols) != len(fcols):
@@ -944,46 +1015,68 @@ def _enforce_insert(
         pk_df = spark.table(fk["parent"]).select(
             *[F.col(p).alias(c) for p, c in zip(pcols, fcols)]
         )
-        missing = (
-            src_df.select(*fcols)
-            .na.drop("any")
-            .distinct()
-            .join(pk_df, on=list(fcols), how="left_anti")
-            .limit(1)
-            .collect()
-        )
+        missing = _first_missing(src_df.select(*fcols), pk_df)
         if missing:
-            kv = ", ".join(f"{c}: {missing[0][c]}" for c in fcols)
+            kv = ", ".join(f"{c}: {missing[c]}" for c in fcols)
             raise ConstraintError(
                 f'Constraint Error: Violates foreign key constraint because '
                 f'key "{kv}" does not exist in the referenced table'
             )
-    if not uniques:
-        return
-    for i, keys in enumerate(TABLE_UNIQUES.get(key, [])):
-        if not set(keys) <= cols:
-            continue
-        kind = _unique_kind(table, i, keys)
-        proposed = src_df.select(*keys).na.drop("any")
-        dup = (
-            proposed.groupBy(*keys)
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            raise ConstraintError(_dup_key_msg(keys, dup[0], kind))
-        if against_existing:
-            hit = (
-                proposed.join(
-                    spark.table(table).select(*keys), on=list(keys), how="left_semi"
-                )
-                .limit(1)
-                .collect()
+
+
+def _enforce_insert(
+    spark: SparkSession,
+    table: str,
+    src_df: DataFrame,
+    *,
+    conflict_keys: list[str] | None = None,
+) -> None:
+    """Validate proposed rows BEFORE they land, failing the statement
+    atomically like the reference's ConstraintException.
+
+    Cost model (the 100 TB posture): the reference checks each row as it
+    appends (ART probe, duckdb-internal.hpp); we pay ONE _violations
+    query per statement (NOT NULL and CHECK flags, every key set's
+    in-batch duplicate and existing-key hit), plus a follow-up for the
+    offending key only when a key is flagged. Errors report NOT NULL,
+    CHECK, FK, in-batch duplicate, existing key, in that order. NULL key
+    parts never conflict.
+
+    With ``conflict_keys`` the conflict action owns the keys: the table's
+    key sets are not checked, but a batch repeating a conflict key (NULLs
+    grouping together) is rejected for every action, DO NOTHING included
+    (probed against the oracle engine; found by tools/fuzz_ddl.py)."""
+    cols = {c.lower() for c in src_df.columns}
+    if conflict_keys:
+        sets, others = [(conflict_keys, None)], None
+    else:
+        sets = [
+            (keys, _unique_kind(table, i, keys))
+            for i, keys in enumerate(TABLE_UNIQUES.get(table.lower(), []))
+            if set(keys) <= cols
+        ]
+        others = spark.table(table) if sets else None
+    checks = _row_checks(spark, table, cols)
+    key_sets = [(keys, kind is not None) for keys, kind in sets]
+    dups = _violations(src_df, checks, key_sets, others)
+    _check_foreign_keys(spark, table, src_df)
+    for (keys, kind), (dup, hit, _) in zip(sets, dups):
+        if dup and kind is None:
+            raise ValueError(
+                "Constraint Error: duplicate conflict key within the inserted "
+                "batch — DuckDB rejects a command whose proposed rows repeat a "
+                "constrained value (for DO UPDATE: 'can not update the same "
+                "row twice in the same command')"
             )
-            if hit:
-                raise ConstraintError(_dup_key_msg(keys, hit[0], kind))
+        if dup:
+            raise ConstraintError(_dup_key_msg(keys, _repeated_key(src_df, keys), kind))
+        if hit:
+            row = (
+                src_df.select(*keys).na.drop("any")
+                .join(others.select(*keys), on=list(keys), how="left_semi")
+                .limit(1).collect()[0]
+            )
+            raise ConstraintError(_dup_key_msg(keys, row, kind))
 
 
 def table_is_fk_parent(table: str) -> bool:
@@ -1010,28 +1103,13 @@ def enforce_parent_keys(
             pcols = fk["pcols"] or TABLE_PKEYS.get(table.lower(), [])
             if not pcols or len(pcols) != len(fk["cols"]):
                 continue
-            child_df = (
-                post_image if child == table.lower() else spark.table(child)
-            )
-            child_vals = (
-                child_df.select(
-                    *[
-                        F.col(c).alias(p)
-                        for c, p in zip(fk["cols"], pcols)
-                    ]
-                )
-                .na.drop("any")
-                .distinct()
-            )
-            dangling = (
-                child_vals.join(
-                    post_image.select(*pcols), on=list(pcols), how="left_anti"
-                )
-                .limit(1)
-                .collect()
+            child_df = post_image if child == table.lower() else spark.table(child)
+            dangling = _first_missing(
+                child_df.select(*[F.col(c).alias(p) for c, p in zip(fk["cols"], pcols)]),
+                post_image.select(*pcols),
             )
             if dangling:
-                kv = ", ".join(f"{p}: {dangling[0][p]}" for p in pcols)
+                kv = ", ".join(f"{p}: {dangling[p]}" for p in pcols)
                 raise ConstraintError(
                     f'Constraint Error: Violates foreign key constraint '
                     f'because key "{kv}" is still referenced by a foreign '
@@ -1046,43 +1124,33 @@ def enforce_update(
     post_image: DataFrame,
     assigned_cols: set[str],
 ) -> None:
-    """UPDATE-side enforcement: NOT NULL + CHECK + child-side FK evaluate
-    on the post-image of the rows the statement modifies; key sets that
-    intersect the assigned columns re-verify uniqueness over the table's
-    full post-image (one count-aggregate per affected key set); assigning
-    a column some CHILD references re-verifies the children against the
-    parent post-image."""
-    from pyspark.sql import functions as F
-
-    _enforce_insert(
-        spark, table, updated_rows, uniques=False, against_existing=False
-    )
-    for i, keys in enumerate(TABLE_UNIQUES.get(table.lower(), [])):
-        if not assigned_cols & set(keys):
-            continue
-        dup = (
-            post_image.select(*keys)
-            .na.drop("any")
-            .groupBy(*keys)
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-            .collect()
-        )
+    """UPDATE-side enforcement, scoped to what the assignments can break,
+    in one _violations query (none when nothing is in scope): NOT NULL
+    on an assigned column and a CHECK naming one evaluate on the modified
+    rows' post-image; a key set intersecting the assigned columns
+    re-verifies uniqueness over the table's full post-image. Child-side
+    FK probes run for FKs over assigned columns; assigning a column some
+    CHILD references re-verifies the children against the post-image."""
+    assigned = {c.lower() for c in assigned_cols}
+    cols = {c.lower() for c in updated_rows.columns}
+    checks = _row_checks(spark, table, cols, assigned)
+    sets = [
+        (keys, _unique_kind(table, i, keys))
+        for i, keys in enumerate(TABLE_UNIQUES.get(table.lower(), []))
+        if assigned & set(keys)
+    ]
+    dups = _violations(updated_rows, checks, [(k, True) for k, _ in sets], post_image)
+    _check_foreign_keys(spark, table, updated_rows, assigned)
+    for (keys, kind), (_, _, dup) in zip(sets, dups):
         if dup:
-            raise ConstraintError(
-                _dup_key_msg(keys, dup[0], _unique_kind(table, i, keys))
-            )
-    if table_is_fk_parent(table):
-        referenced = {
-            p
-            for fks in TABLE_FKEYS.values()
-            for fk in fks
-            if fk["parent"] == table.lower()
-            for p in (fk["pcols"] or TABLE_PKEYS.get(table.lower(), []))
-        }
-        if assigned_cols & referenced:
-            enforce_parent_keys(spark, table, post_image)
+            row = _repeated_key(post_image, keys)
+            raise ConstraintError(_dup_key_msg(keys, row, kind))
+    referenced = {
+        p for fks in TABLE_FKEYS.values() for fk in fks if fk["parent"] == table.lower()
+        for p in (fk["pcols"] or TABLE_PKEYS.get(table.lower(), []))
+    }
+    if assigned & referenced:
+        enforce_parent_keys(spark, table, post_image)
 
 
 def _conflict_keys(spark: SparkSession, table: str, target: str | None):
@@ -1115,7 +1183,7 @@ def _run_insert_conflict(
     matched rows get the SET expressions (``excluded.col`` = proposed
     row, bare ``col`` = existing row, optional DO UPDATE WHERE gates the
     update per-row), unmatched new rows insert as-is."""
-    from quackspark.sqlfront import UnsupportedSQL, transpile
+    from quackspark.sqlfront import UnsupportedSQL, _swap_in
 
     if or_action is None and do_action is None:
         return None  # plain INSERT — let the generic paths handle it
@@ -1128,86 +1196,41 @@ def _run_insert_conflict(
             "supply full rows"
         )
     keys = _conflict_keys(spark, table, conflict_target)
-    schema = spark.table(table).schema
-    src_sql = transpile(source, spark)
-    if re.match(r"^\s*VALUES\b", src_sql, re.I):
-        src_sql = f"SELECT * FROM ({src_sql}) AS __v({', '.join(f.name for f in schema.fields)})"
-    new_rows = spark.sql(src_sql).toDF(*[f.name for f in schema.fields])
+    new_rows = _proposed_rows(spark, table, source)
     # NOT NULL / CHECK apply to the proposed rows regardless of conflict
-    # action; the key-duplicate handling below IS the unique enforcement
-    # for the conflict target (other unique sets are checked too, minus
-    # rows the IGNORE path drops — kept simple: conflict actions own keys)
-    _enforce_insert(spark, table, new_rows, uniques=False)
+    # action; the batch's conflict-key repeat check IS the unique
+    # enforcement for the conflict target (conflict actions own keys)
+    _enforce_insert(spark, table, new_rows, conflict_keys=keys)
     existing = spark.table(table)
-    # EVERY conflict action rejects a batch that repeats a conflict key
-    # within itself — including OR IGNORE / DO NOTHING (probed against
-    # the oracle engine; found by tools/fuzz_ddl.py state diffing).
-    # Check first instead of silently keeping an arbitrary duplicate.
-    from pyspark.sql import functions as F
 
-    from quackspark.sqlfront import _swap_in
+    def without_keys_of(df: DataFrame, other: DataFrame) -> DataFrame:
+        # a USING join leads with its keys: restore the column order
+        return df.join(
+            other.select(*keys).distinct(), on=keys, how="left_anti"
+        ).select(*df.columns)
 
-    dup = (
-        new_rows.groupBy(*keys).count().filter(F.col("count") > 1).limit(1).count()
-    )
-    if dup:
-        raise ValueError(
-            "Constraint Error: duplicate conflict key within the inserted "
-            "batch — DuckDB rejects a command whose proposed rows repeat a "
-            "constrained value (for DO UPDATE: 'can not update the same row "
-            "twice in the same command')"
-        )
     if action in ("OR_IGNORE", "OR_NOTHING"):
-        fresh = new_rows.join(
-            existing.select(*keys).distinct(), on=keys, how="left_anti"
-        )
+        fresh = without_keys_of(new_rows, existing)
         from quackspark import versioned as _versioned
 
         if not _versioned.intercept_append(spark, table, fresh):
             fresh.write.insertInto(table, overwrite=False)
         return _status(spark, table=table, status="inserted (conflicts ignored)")
     if action == "DO_UPDATE":
-        final = _merge_do_update(
-            spark, existing, new_rows, keys, schema, do_action
+        merged, assigned = _merge_do_update(
+            spark, existing, new_rows, keys, do_action
         )
+        final = merged.drop("__upd")
         # the SET expressions can write values the proposed rows never
-        # carried (e.g. x = excluded.x + x) — NOT NULL/CHECK re-validate
-        # on the merged post-image, like the engine's updated-row check
-        _enforce_insert(spark, table, final, uniques=False)
+        # carried (e.g. x = excluded.x + x): the matched rows re-validate
+        # under the UPDATE scope rule, like the engine's updated-row check
+        enforce_update(
+            spark, table, merged.filter("__upd").drop("__upd"), final, assigned
+        )
         _swap_in(spark, table, final)
         return _status(spark, table=table, status="upserted (conflicts updated)")
-    kept = existing.join(new_rows.select(*keys).distinct(), on=keys, how="left_anti")
-    _swap_in(spark, table, kept.unionByName(new_rows))
+    _swap_in(spark, table, without_keys_of(existing, new_rows).unionByName(new_rows))
     return _status(spark, table=table, status="inserted (conflicts replaced)")
-
-
-def _split_top_commas(s: str) -> list[str]:
-    """Split on commas outside parens and string/ident quotes."""
-    out: list[str] = []
-    cur: list[str] = []
-    depth, q = 0, None
-    for ch in s:
-        if q:
-            cur.append(ch)
-            if ch == q:
-                q = None
-        elif ch in ("'", '"'):
-            q = ch
-            cur.append(ch)
-        elif ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == "," and depth == 0:
-            out.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur).strip())
-    return out
 
 
 def _rewrite_excluded(expr: str) -> str:
@@ -1226,73 +1249,60 @@ def _merge_do_update(
     existing: DataFrame,
     new_rows: DataFrame,
     keys: list[str],
-    schema,
     do_action: str,
-) -> DataFrame:
-    """MERGE semantics for ON CONFLICT DO UPDATE, as one lazy plan:
-    existing rows without a proposed match pass through; matched rows get
-    the SET expressions (gated by DO UPDATE WHERE if present — a FALSE/
-    NULL gate keeps the existing row, and the proposed row is dropped per
-    DuckDB); proposed rows without a match insert unchanged. One
-    anti-join + one inner join on the conflict keys, both shuffle-free
-    when the table is bucketed on its PK; no driver materialization."""
+) -> tuple[DataFrame, set[str]]:
+    """MERGE semantics for ON CONFLICT DO UPDATE as ONE full outer join
+    of the existing rows with the proposed rows on the conflict keys.
+    Presence flags pick each row's branch: existing rows without a
+    proposed match pass through; proposed rows without a match insert
+    unchanged; matched rows get the SET expressions (gated by DO UPDATE
+    WHERE if present — a FALSE/NULL gate keeps the existing row, and the
+    proposed row is dropped per DuckDB). Returns the post-image with a
+    boolean ``__upd`` column marking the matched rows, and the assigned
+    columns; no driver materialization."""
     from pyspark.sql import functions as F
 
-    from quackspark.sqlfront import UnsupportedSQL, transpile
+    from quackspark.sqlfront import UnsupportedSQL, _split_top_commas, transpile
 
-    m = re.match(
-        r"^UPDATE\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?$",
-        do_action.strip(),
-        re.I | re.S,
-    )
+    m = re.match(r"^UPDATE\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?$", do_action.strip(), re.I | re.S)
     if not m:
         raise UnsupportedSQL(f"ON CONFLICT DO {do_action!r}: cannot parse")
     set_part, where_part = m.group(1), m.group(2)
     assigns: dict[str, str] = {}
-    fields = {f.name.lower(): f for f in schema.fields}
+    fields = existing.schema.fields
     for a in _split_top_commas(set_part):
         col, eq, val = a.partition("=")
         col = col.strip().strip('"').lower()
-        if not eq or col not in fields:
+        if not eq or col not in {f.name.lower() for f in fields}:
             raise UnsupportedSQL(f"DO UPDATE SET assignment {a!r}")
         assigns[col] = transpile(_rewrite_excluded(val.strip()), spark)
-    wcond = (
-        transpile(_rewrite_excluded(where_part.strip()), spark)
-        if where_part
-        else "true"
-    )
+    wcond = transpile(_rewrite_excluded(where_part), spark) if where_part else "true"
     exc = new_rows.select(
-        *[F.col(f.name).alias(f"__exc_{f.name.lower()}") for f in schema.fields]
+        *[F.col(f.name).alias(f"__exc_{f.name.lower()}") for f in fields],
+        F.lit(True).alias("__p"),
     )
     # Plain equality, NOT null-safe `<=>`: NULL keys never conflict in
-    # DuckDB's unique semantics (consistent with the `=` anti-joins below
-    # and the OR IGNORE/OR REPLACE paths) — a `<=>` match here would emit
-    # a NULL-key row twice: once "updated" and once "untouched".
+    # DuckDB's unique semantics (consistent with the OR IGNORE/OR REPLACE
+    # anti-joins) — a NULL-key row on either side stays unmatched.
     key_eq = " AND ".join(f"`{k}` = `__exc_{k}`" for k in keys)
-    matched = existing.join(exc, F.expr(key_eq), "inner")
+    joined = existing.withColumn("__e", F.lit(True)).join(
+        exc, F.expr(key_eq), "full_outer"
+    )
     items = []
-    for f in schema.fields:
-        ln = f.name.lower()
-        if ln in assigns:
-            t = f.dataType.simpleString()
-            items.append(
-                f"CASE WHEN ({wcond}) THEN CAST(({assigns[ln]}) AS {t}) "
-                f"ELSE `{f.name}` END AS `{f.name}`"
-            )
-        else:
-            items.append(f"`{f.name}`")
-    updated = matched.selectExpr(*items)
-    untouched = existing.join(
-        exc.select(*[f"__exc_{k}" for k in keys])
-        .toDF(*keys)
-        .distinct(),
-        on=keys,
-        how="left_anti",
-    )
-    fresh = new_rows.join(
-        existing.select(*keys).distinct(), on=keys, how="left_anti"
-    )
-    return untouched.unionByName(updated).unionByName(fresh)
+    for f in fields:
+        ln, kept = f.name.lower(), f"`{f.name}`"
+        upd = (
+            f"WHEN ({wcond}) THEN CAST(({assigns[ln]}) AS "
+            f"{f.dataType.simpleString()}) "
+            if ln in assigns
+            else ""
+        )
+        items.append(
+            f"CASE WHEN __e IS NULL THEN `__exc_{ln}` WHEN __p IS NULL THEN "
+            f"{kept} {upd}ELSE {kept} END AS `{f.name}`"
+        )
+    items.append("coalesce(__e AND __p, false) AS __upd")
+    return joined.selectExpr(*items), set(assigns)
 
 
 def _run_insert_with_columns(
@@ -1321,16 +1331,9 @@ def _run_insert_with_columns(
             items.append(f"CAST(NULL AS {t}) AS `{f.name}`")
     from quackspark import versioned as _versioned
 
+    rows = f"SELECT {', '.join(items)} FROM ({src_sql}) AS __src({alias_cols})"
     if has_enforced_constraints(table) or _versioned.is_versioned(spark, table):
-        df = spark.sql(
-            f"SELECT {', '.join(items)} FROM ({src_sql}) AS __src({alias_cols})"
-        )
-        _enforce_insert(spark, table, df)
-        if not _versioned.intercept_append(spark, table, df):
-            df.write.insertInto(table, overwrite=False)
+        _append(spark, table, spark.sql(rows))
     else:
-        spark.sql(
-            f"INSERT INTO {table} SELECT {', '.join(items)} "
-            f"FROM ({src_sql}) AS __src({alias_cols})"
-        )
+        spark.sql(f"INSERT INTO {table} {rows}")
     return _status(spark, table=table, status="inserted")

@@ -6942,20 +6942,21 @@ def _prepared_params(body: str) -> list[tuple[int, int, int | str]]:
 
 
 def _split_top_commas(text: str) -> list[str]:
-    """Split EXECUTE's argument list on top-level commas — string- and
-    paren-aware (an arg may be a constant expression like ``10+11`` or
-    a list literal)."""
+    """Split a comma list on its top-level commas — outside '…' strings
+    ('' escapes), "…" identifiers ("" escapes), (), [] and {}. Used for
+    EXECUTE's argument list (an arg may be a constant expression like
+    ``10+11`` or a list literal) and ON CONFLICT's DO UPDATE SET list."""
     parts: list[str] = []
     depth = 0
     buf: list[str] = []
     i, n = 0, len(text)
     while i < n:
         ch = text[i]
-        if ch == "'":
+        if ch in "'\"":
             j = i + 1
             while j < n:
-                if text[j] == "'":
-                    if j + 1 < n and text[j + 1] == "'":
+                if text[j] == ch:
+                    if j + 1 < n and text[j + 1] == ch:
                         j += 2
                         continue
                     j += 1
@@ -6964,9 +6965,9 @@ def _split_top_commas(text: str) -> list[str]:
             buf.append(text[i:j])
             i = j
             continue
-        if ch in "([":
+        if ch in "([{":
             depth += 1
-        elif ch in ")]":
+        elif ch in ")]}":
             depth -= 1
         elif ch == "," and depth == 0:
             parts.append("".join(buf))
@@ -7499,15 +7500,14 @@ def _run_update_from(
             )
         else:
             items.append(f"t.`{c}` AS `{c}`")
-    new_df = spark.sql(
-        f"SELECT {', '.join(items)} FROM {table} t "
-        f"LEFT JOIN __qs_upd_from m ON {join_on}"
-    )
-    from quackspark.ddl import _enforce_insert, has_enforced_constraints
+    select = f"SELECT {', '.join(items)} FROM {table} t "
+    new_df = spark.sql(f"{select} LEFT JOIN __qs_upd_from m ON {join_on}")
+    from quackspark.ddl import enforce_update, has_enforced_constraints
 
     try:
         if has_enforced_constraints(table):
-            _enforce_insert(spark, table, new_df, against_existing=False)
+            upd_rows = spark.sql(f"{select} JOIN __qs_upd_from m ON {join_on}")
+            enforce_update(spark, table, upd_rows, new_df, set(assigns))
         _swap_in(spark, table, new_df)
     finally:
         # the helper view lazily references the PRE-swap table files — a
@@ -7838,23 +7838,17 @@ def _run_dml(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
         new_df = spark.sql(
             transpile(f"SELECT {', '.join(select_items)} FROM {table}", spark)
         )
+        post = ", ".join(applied(f.name) for f in spark.table(table).schema.fields)
+        upd_sql = f"SELECT {post} FROM {table} WHERE coalesce({cond}, false)"
         ret_df = None
         if returning:
-            post = ", ".join(applied(f.name) for f in spark.table(table).schema.fields)
             ret_df = spark.sql(transpile(
-                f"SELECT {returning} FROM (SELECT {post} FROM {table} "
-                f"WHERE coalesce({cond}, false)) __qs_ret", spark
+                f"SELECT {returning} FROM ({upd_sql}) __qs_ret", spark
             )).localCheckpoint(eager=True)
         from quackspark.ddl import enforce_update, has_enforced_constraints
 
         if has_enforced_constraints(table):
-            post = ", ".join(
-                applied(f.name) for f in spark.table(table).schema.fields
-            )
-            upd_rows = spark.sql(transpile(
-                f"SELECT {post} FROM {table} WHERE coalesce({cond}, false)",
-                spark,
-            ))
+            upd_rows = spark.sql(transpile(upd_sql, spark))
             enforce_update(spark, table, upd_rows, new_df, set(assigns))
         _swap_in(spark, table, new_df)
         return ret_df if ret_df is not None else local_frame(

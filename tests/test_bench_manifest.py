@@ -91,22 +91,21 @@ def test_family_split_covers_manifest():
 
 
 def _r13_shaped_compact() -> dict:
-    """Rebuild the compact dict in the NEW (r14) shape from the r13
-    driver record's numbers — the known near-overflow case."""
+    """Rebuild the compact dict in the current shape from the r13
+    driver record's numbers — the known near-overflow case: the
+    per-query seconds as the driver-readable ``queries`` dict, the
+    growth factors as ``g10``, no family split, no per-query ratios."""
     import json
     import os
 
     rec_path = os.path.join(os.path.dirname(bench.__file__), "BENCH_r13.json")
     with open(rec_path) as fh:
         parsed = json.load(fh)["parsed"]
-    compact = {k: v for k, v in parsed.items() if k != "fam_sf1"}
-    q = {}
-    for n, row in parsed["q"].items():
-        r = list(row[:4])
-        while r and r[-1] is None:
-            r.pop()
-        q[n] = r
-    compact["q"] = q
+    compact = {
+        k: v for k, v in parsed.items() if k not in ("q", "fam", "fam_sf1")
+    }
+    compact["queries"] = {n: row[0] for n, row in parsed["q"].items()}
+    compact["g10"] = [row[2] for row in parsed["q"].values()]
     s = parsed["sf1_summary"]
     compact["sf1_summary"] = {
         "n": s["covered_queries"], "spark": s["spark_total"],
@@ -138,8 +137,12 @@ def test_compact_line_fits_driver_tail_with_contention():
     assert len(line) <= bench.COMPACT_LINE_BUDGET
     # the default shape must fit WITHOUT any staged trim firing: every
     # field of the input survives in the emitted line
-    assert json.loads(line) == compact
+    got = json.loads(line)
+    assert got == compact
     assert bench.COMPACT_LINE_BUDGET <= 2000 - 200
+    # the driver reads the per-query seconds as {"queries": {name: sec}}
+    assert set(got["queries"]) == set(bench.HEADLINE_MANIFEST)
+    assert all(isinstance(v, float) for v in got["queries"].values())
 
 
 def test_fit_compact_line_degrades_in_order():
@@ -149,21 +152,21 @@ def test_fit_compact_line_degrades_in_order():
     import json
 
     compact = _r13_shaped_compact()
-    # inflate every row to 5-digit-seconds width to force the trims
-    compact["q"] = {
-        n: [99999.99, 99999, 99999.9, 99999] for n in compact["q"]
-    }
+    # inflate every query to 5-digit-seconds width
+    compact["queries"] = {n: 99999.99 for n in compact["queries"]}
+    compact["g10"] = [99999.9] * len(compact["queries"])
     compact["contention_suspect"] = {
         "vs": "BENCH_LOCAL_r13.json", "n": 8,
         "queries": ["window_range_interval_frame"] * 3,
     }
     before = copy.deepcopy(compact)
-    line = bench._fit_compact_line(compact)
+    bare = {k: v for k, v in compact.items() if k not in ("g10", "sf1_summary")}
+    bare["contention_suspect"] = {"vs": "BENCH_LOCAL_r13.json", "n": 8}
+    budget = len(json.dumps(bare, separators=(",", ":")))
+    line = bench._fit_compact_line(compact, budget=budget)
     assert compact == before  # the trims never touch the caller's dict
     got = json.loads(line)
-    # element 0 (the seconds) survives for every query
-    assert set(got["q"]) == set(compact["q"])
-    assert all(r[0] == 99999.99 for r in got["q"].values())
-    # metric/value/sf/ratios survive every stage
-    for key in ("metric", "value", "unit", "sf"):
-        assert got[key] == compact[key]
+    # every trim fired, and only the trims: the seconds survive whole
+    assert got == bare
+    # one char less and nothing further is shed
+    assert json.loads(bench._fit_compact_line(compact, budget=budget - 1)) == bare

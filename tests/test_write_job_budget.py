@@ -7,14 +7,24 @@ statement pays its Spark jobs while ``Connection.sql`` constructs it
 frame. The pins below hold both halves:
 
 - the pre-action job budget of every statement (the trace's
-  ``operators.pre_action_jobs``: 8 / 3 / 1 / 18 per table, 60 a round);
+  ``operators.pre_action_jobs``: 4 / 1 / 1 / 6 per table, 24 a round);
 - the returned frame is a driver-built Arrow ``LocalTableScan`` — no
   ``ExistingRDD`` over a PythonRDD, whose action started a Python-worker
   task per core — and running it to the noop sink takes exactly one job.
 
-The upsert's 18 jobs are the next target: 7 of them re-evaluate the
-merged post-image inside ``ddl._enforce_insert(final)``. That fix is out
-of scope for these pins; lower the budget when it lands.
+What each remaining job is:
+
+- INSERT 4: the one validation query (``ddl._violations``: NOT NULL
+  flags, in-batch duplicate and existing-key hit) runs as three adaptive
+  stages — the union's partial ``groupBy``, the per-key final aggregate
+  feeding the global one, the single result row — then one append job.
+- UPDATE 1 and DELETE 1: the whole-table rewrite. ``SET v = …`` names
+  no constrained column, so no validation query runs.
+- upsert 6: the validation query over the four proposed rows (three
+  jobs, the conflict-key repeat check included), then the one-join merge
+  written back: one shuffle-map job per side of the full outer join and
+  the rewrite job. ``SET v = excluded.v`` names no constrained column, so
+  the matched rows need no re-check.
 """
 
 from __future__ import annotations
@@ -28,7 +38,7 @@ BATCH = 50
 UPSERT_KEYS = 1_000_000_000
 
 #: pre-action Spark jobs per write statement, identical on both tables
-BUDGET = {"insert": 8, "update": 3, "delete": 1, "upsert": 18}
+BUDGET = {"insert": 4, "update": 1, "delete": 1, "upsert": 6}
 
 KV, VT = "jb_kv", "jb_vt"
 
