@@ -435,7 +435,7 @@ def main() -> None:
     # the round driver captures only the last ~2000 chars of stdout and
     # parses the final line — the full object above exceeds that (r3's
     # BENCH record shows a mid-JSON truncated tail, parsed={}), so emit a
-    # compact spec-shaped summary LAST. It carries the driver-readable
+    # compact spec-shaped summary LAST. It carries the flat
     # per-query seconds {"queries": {name: sec}} plus, aligned with that
     # dict's order, each query's sf1/sf0.1 10x growth factor ("g10", null
     # where uncovered). Per-query ratios against DuckDB and the family
@@ -542,7 +542,7 @@ def _fit_compact_line(compact: dict, budget: int = COMPACT_LINE_BUDGET) -> str:
     ~500 chars of slack; the staged trims below only fire if numbers get
     unexpectedly wide, shedding the most redundant fields first (each is
     also present in the long line). The per-query seconds ("queries")
-    are never shed — they are the driver's round-over-round comparison."""
+    are never shed — round-over-round comparisons read them."""
     line = json.dumps(compact, separators=(",", ":"))
     if len(line) <= budget:
         return line

@@ -91,9 +91,9 @@ def test_family_split_covers_manifest():
 
 
 def _r13_shaped_compact() -> dict:
-    """Rebuild the compact dict in the current shape from the r13
-    driver record's numbers — the known near-overflow case: the
-    per-query seconds as the driver-readable ``queries`` dict, the
+    """Rebuild the compact dict in the current shape from the
+    BENCH_r13.json record's numbers — the known near-overflow case: the
+    per-query seconds as the flat ``queries`` dict, the
     growth factors as ``g10``, no family split, no per-query ratios."""
     import json
     import os
@@ -140,7 +140,7 @@ def test_compact_line_fits_driver_tail_with_contention():
     got = json.loads(line)
     assert got == compact
     assert bench.COMPACT_LINE_BUDGET <= 2000 - 200
-    # the driver reads the per-query seconds as {"queries": {name: sec}}
+    # round-over-round comparisons read the per-query seconds as {"queries": {name: sec}}
     assert set(got["queries"]) == set(bench.HEADLINE_MANIFEST)
     assert all(isinstance(v, float) for v in got["queries"].values())
 
