@@ -38,7 +38,10 @@ over a ``LocalTableScan`` — no Python-worker task per core.
 
 from __future__ import annotations
 
+import contextlib
+import os
 import re
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -686,8 +689,6 @@ def _append(spark: SparkSession, table: str, df: DataFrame) -> None:
 
 
 def _swap(spark: SparkSession, table: str, df: DataFrame) -> None:
-    from quackspark.sqlfront import _swap_in
-
     _swap_in(spark, table, df)
 
 
@@ -1183,7 +1184,7 @@ def _run_insert_conflict(
     matched rows get the SET expressions (``excluded.col`` = proposed
     row, bare ``col`` = existing row, optional DO UPDATE WHERE gates the
     update per-row), unmatched new rows insert as-is."""
-    from quackspark.sqlfront import UnsupportedSQL, _swap_in
+    from quackspark.sqlfront import UnsupportedSQL
 
     if or_action is None and do_action is None:
         return None  # plain INSERT — let the generic paths handle it
@@ -1337,3 +1338,532 @@ def _run_insert_with_columns(
     else:
         spark.sql(f"INSERT INTO {table} {rows}")
     return _status(spark, table=table, status="inserted")
+
+
+# ---- write executors: UPDATE / DELETE / RETURNING / transactions ----
+
+_UPDATE_RE = re.compile(
+    r"^\s*UPDATE\s+(\w+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*?))?"
+    r"(?:\s+RETURNING\s+(.*?))?\s*;?\s*$",
+    re.I | re.DOTALL,
+)
+_UPDATE_FROM_RE = re.compile(
+    r"^\s*UPDATE\s+(\w+)\s+SET\s+(.*?)\s+FROM\s+(\w+)(?:\s+(?:AS\s+)?(\w+))?"
+    r"(?:\s+WHERE\s+(.*?))?\s*;?\s*$",
+    re.I | re.DOTALL,
+)
+_DELETE_USING_RE = re.compile(
+    r"^\s*DELETE\s+FROM\s+(\w+)\s+USING\s+(\w+)(?:\s+(?:AS\s+)?(\w+))?"
+    r"(?:\s+WHERE\s+(.*?))?\s*;?\s*$",
+    re.I | re.DOTALL,
+)
+_SQL_KEYWORDS_NOT_ALIAS = {"where", "as", "on", "set", "returning"}
+
+
+def _qualify_bare(expr: str, names: set[str], prefix: str) -> str:
+    """Qualify bare references to ``names`` with ``prefix`` — outside
+    string literals, not already qualified (`x.` before), not a call
+    (`(` after)."""
+    pattern = re.compile(
+        r"'(?:[^']|'')*'"  # string literal — passed through
+        r"|(?<![\w.\"])([A-Za-z_]\w*)(?!\s*\()(?![\w.])",
+    )
+
+    def sub(m: re.Match) -> str:
+        tok = m.group(1)
+        if tok is None or tok.lower() not in names:
+            return m.group(0)
+        return f"{prefix}.{tok}"
+
+    return pattern.sub(sub, expr)
+
+
+def _run_update_from(
+    spark: SparkSession,
+    table: str,
+    set_clause: str,
+    src: str,
+    src_alias: str | None,
+    pred: str | None,
+) -> DataFrame:
+    """``UPDATE t SET c = s.expr FROM s WHERE pred`` (reference update
+    grammar, duckdb-libpg_query.cpp UpdateStmt with fromClause) as a
+    join rewrite on the copy-on-write DML layer:
+
+    1. per DISTINCT target tuple, pick ONE matching source row
+       (row_number over the source columns — DETERMINISTIC, a strict
+       refinement of the engine's 'arbitrary match wins' contract);
+    2. null-safe-join the chosen rows back onto the target (duplicate
+       target rows all update, like the engine's per-physical-row
+       update);
+    3. apply SET expressions where matched; swap the post-image in.
+
+    One join + one window + one join — all distributed, no driver data
+    path, no row ids needed."""
+    from quackspark.sqlfront import UnsupportedSQL, _split_args, _tokens, transpile
+
+    alias = (src_alias or src).lower()
+    if alias in _SQL_KEYWORDS_NOT_ALIAS:
+        raise UnsupportedSQL(f"UPDATE ... FROM: unsupported alias {alias!r}")
+    if pred and re.search(r"\bRETURNING\b", pred, re.I):
+        raise UnsupportedSQL(
+            "UPDATE ... FROM ... RETURNING — run the UPDATE, then SELECT"
+        )
+    tgt_fields = spark.table(table).schema.fields
+    tcols = [f.name for f in tgt_fields]
+    types = {f.name.lower(): f.dataType.simpleString() for f in tgt_fields}
+    scols = spark.table(src).columns
+    assigns: dict[str, str] = {}
+    for item in _split_args(_tokens(set_clause)):
+        if len(item) < 3 or item[1] != "=":
+            raise UnsupportedSQL(f"UPDATE SET expects col = expr: {item}")
+        col = item[0].lower()
+        if col not in types:
+            raise UnsupportedSQL(f"UPDATE column not in {table}: {col}")
+        assigns[col] = " ".join(item[2:])
+
+    # chosen: one source row per distinct target tuple (source columns
+    # exported as __s_<name> so they never collide with target names)
+    on = transpile(pred, spark) if pred else "TRUE"
+    s_proj = ", ".join(f"{alias}.`{c}` AS `__s_{c}`" for c in scols)
+    t_proj = ", ".join(f"{table}.`{c}`" for c in tcols)
+    part = ", ".join(f"{table}.`{c}`" for c in tcols)
+    order = ", ".join(f"{alias}.`{c}`" for c in scols)
+    chosen = spark.sql(
+        f"SELECT * FROM ("
+        f"  SELECT {t_proj}, {s_proj}, "
+        f"    ROW_NUMBER() OVER (PARTITION BY {part} ORDER BY {order}) AS __rn"
+        f"  FROM {table} {table} JOIN {src} {alias} ON ({on})"
+        f") WHERE __rn = 1"
+    )
+    chosen.createOrReplaceTempView("__qs_upd_from")
+
+    # SET expressions: source refs (alias.c / src.c / bare source-only
+    # names) → m.__s_c; target refs → t-side qualified
+    src_only = {c.lower() for c in scols} - {c.lower() for c in tcols}
+
+    def rewrite_expr(e: str) -> str:
+        # _tokens spaces out qualifier dots ("us . nv") — re-glue them so
+        # the qualified-reference rewrites below can see them
+        e = re.sub(r"(\w)\s*\.\s*(\w)", r"\1.\2", transpile(e, spark))
+        e = re.sub(
+            rf"(?<![\w.])(?:{re.escape(alias)}|{re.escape(src.lower())})\.(\w+)",
+            r"m.`__s_\1`",
+            e,
+            flags=re.I,
+        )
+        e = re.sub(
+            rf"(?<![\w.]){re.escape(table.lower())}\.(\w+)",
+            r"t.`\1`",
+            e,
+            flags=re.I,
+        )
+        e = _qualify_bare(e, src_only, "__qs_src")
+        e = e.replace("__qs_src.", "m.__s_")
+        e = _qualify_bare(e, {c.lower() for c in tcols}, "t")
+        return e
+
+    join_on = " AND ".join(f"t.`{c}` <=> m.`{c}`" for c in tcols)
+    items = []
+    for f in tgt_fields:
+        c = f.name
+        if c.lower() in assigns:
+            items.append(
+                f"CASE WHEN m.__rn IS NOT NULL THEN "
+                f"CAST(({rewrite_expr(assigns[c.lower()])}) AS "
+                f"{types[c.lower()]}) ELSE t.`{c}` END AS `{c}`"
+            )
+        else:
+            items.append(f"t.`{c}` AS `{c}`")
+    select = f"SELECT {', '.join(items)} FROM {table} t "
+    new_df = spark.sql(f"{select} LEFT JOIN __qs_upd_from m ON {join_on}")
+    try:
+        if has_enforced_constraints(table):
+            upd_rows = spark.sql(f"{select} JOIN __qs_upd_from m ON {join_on}")
+            enforce_update(spark, table, upd_rows, new_df, set(assigns))
+        _swap_in(spark, table, new_df)
+    finally:
+        # the helper view lazily references the PRE-swap table files — a
+        # later scan of it (e.g. EXPORT DATABASE walking the catalog)
+        # would read dropped files
+        spark.catalog.dropTempView("__qs_upd_from")
+    return local_frame(spark, [(table,)], "updated string")
+
+
+def _run_delete_using(
+    spark: SparkSession,
+    table: str,
+    src: str,
+    src_alias: str | None,
+    pred: str | None,
+) -> DataFrame:
+    """``DELETE FROM t USING s WHERE pred`` (reference delete grammar
+    with usingClause): semi-join delete — a target row is removed when
+    ANY source row matches; duplicate target rows all go. One anti-join,
+    fully distributed."""
+    from quackspark.sqlfront import UnsupportedSQL, transpile
+
+    alias = (src_alias or src).lower()
+    if alias in _SQL_KEYWORDS_NOT_ALIAS:
+        raise UnsupportedSQL(f"DELETE ... USING: unsupported alias {alias!r}")
+    if pred and re.search(r"\bRETURNING\b", pred, re.I):
+        raise UnsupportedSQL(
+            "DELETE ... USING ... RETURNING — SELECT the doomed rows first"
+        )
+    on = transpile(pred, spark) if pred else "TRUE"
+    new_df = spark.sql(
+        f"SELECT {table}.* FROM {table} {table} WHERE NOT EXISTS "
+        f"(SELECT 1 FROM {src} {alias} WHERE {on})"
+    )
+    if table_is_fk_parent(table):
+        enforce_parent_keys(spark, table, new_df)
+    _swap_in(spark, table, new_df)
+    return local_frame(spark, [(table,)], "deleted string")
+_DELETE_RE = re.compile(
+    r"^\s*DELETE\s+FROM\s+(\w+)(?:\s+WHERE\s+(.*?))?"
+    r"(?:\s+RETURNING\s+(.*?))?\s*;?\s*$",
+    re.I | re.DOTALL,
+)
+_INSERT_RETURNING_RE = re.compile(
+    r"^(\s*INSERT\s+INTO\s+.*?)\s+RETURNING\s+(.*?)\s*;?\s*$",
+    re.I | re.DOTALL,
+)
+
+
+#: active-transaction state: None = autocommit; else
+#: {"snapshots": {table_lower: snapshot_table_name}}
+_TXN: dict | None = None
+
+_BEGIN_RE = re.compile(r"^\s*(?:BEGIN|START)(?:\s+TRANSACTION)?\s*;?\s*$", re.I)
+_COMMIT_RE = re.compile(r"^\s*COMMIT\s*;?\s*$", re.I)
+_ROLLBACK_RE = re.compile(r"^\s*ROLLBACK\s*;?\s*$", re.I)
+_INSERT_TARGET_RE = re.compile(r"^\s*INSERT\s+INTO\s+([A-Za-z_][A-Za-z_0-9]*)", re.I)
+
+
+def _drop_table_and_location(spark: SparkSession, name: str) -> None:
+    import shutil
+    from urllib.parse import urlparse
+
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
+    if wh:
+        shutil.rmtree(f"{wh}/{name.lower()}", ignore_errors=True)
+
+
+def _txn_keep_original(spark: SparkSession, table: str) -> bool:
+    """Inside a transaction, the first write to ``table`` renames the
+    original to its snapshot instead of dropping it (the staging copy is
+    already fully materialized at this point — see _swap_in). Returns True
+    when the original was preserved."""
+    if _TXN is None:
+        return False
+    key = table.lower()
+    if key in _TXN["snapshots"]:
+        return False  # already snapshotted earlier in this transaction
+    snap = f"{table}__txn_snapshot"
+    _drop_table_and_location(spark, snap)
+    spark.sql(f"ALTER TABLE {table} RENAME TO {snap}")
+    _TXN["snapshots"][key] = snap
+    return True
+
+
+def _txn_snapshot_copy(spark: SparkSession, table: str) -> None:
+    """Snapshot ``table`` by full copy — used before in-place appends
+    (INSERT), where the rename trick can't apply. Versioned tables need
+    neither: their write chokepoints record the pre-transaction VERSION
+    (metadata-only) and ROLLBACK restores it."""
+    if _TXN is None:
+        return
+    key = table.lower()
+    from quackspark import versioned as _versioned
+
+    if _versioned.is_versioned(spark, key):
+        return
+    if key in _TXN["snapshots"]:
+        return
+    snap = f"{table}__txn_snapshot"
+    _drop_table_and_location(spark, snap)
+    spark.table(table).write.saveAsTable(snap)
+    _TXN["snapshots"][key] = snap
+
+
+def _run_txn(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
+    """BEGIN / COMMIT / ROLLBACK (reference: DuckTransaction,
+    duckdb-internal.hpp:10232). Single-session shim over the copy-on-write
+    DML layer: BEGIN opens a snapshot scope; the first write to each table
+    preserves its pre-transaction state; ROLLBACK restores every snapshot,
+    COMMIT discards them. Reads inside the transaction see its own writes
+    (same connection-local view as the reference). NOT cross-session MVCC
+    — concurrent writers need a table format with a log (README/SCALE.md
+    documents the posture); DDL is out of scope and autocommits."""
+    from quackspark.sqlfront import TransactionError
+
+    global _TXN
+    if _BEGIN_RE.match(duckdb_sql):
+        if _TXN is not None:
+            raise TransactionError("cannot start a transaction within a transaction")
+        _TXN = {"snapshots": {}}
+        return local_frame(spark, [("BEGIN",)], "status string")
+    if _COMMIT_RE.match(duckdb_sql):
+        if _TXN is None:
+            raise TransactionError("no transaction is active")
+        for snap in _TXN["snapshots"].values():
+            _drop_table_and_location(spark, snap)
+        _TXN = None  # versioned tables: their commits are already durable
+        return local_frame(spark, [("COMMIT",)], "status string")
+    if _ROLLBACK_RE.match(duckdb_sql):
+        if _TXN is None:
+            raise TransactionError("no transaction is active")
+        for table, snap in _TXN["snapshots"].items():
+            _drop_table_and_location(spark, table)
+            spark.sql(f"ALTER TABLE {snap} RENAME TO {table}")
+        versioned_pre = _TXN.get("versioned", {})
+        if versioned_pre:
+            from quackspark import versioned as _versioned
+
+            for table, pre_version in versioned_pre.items():
+                # metadata-only restore; CommitConflict if a FOREIGN
+                # session committed to this table mid-transaction
+                _versioned.txn_rollback(spark, table, pre_version)
+        _TXN = None
+        return local_frame(spark, [("ROLLBACK",)], "status string")
+    return None
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        return True
+    return True
+
+
+@contextlib.contextmanager
+def _writer_lock(spark: SparkSession, table: str):
+    """Per-table writer lock for the staging swap: an O_EXCL lock file in
+    the warehouse dir (the one piece of state every session writing these
+    managed tables shares). Held only across the staging write + rename.
+    A lock whose owner pid is dead is stolen (crashed writer); a lock held
+    by a LIVE other process raises ConcurrentWriteError loudly."""
+    from quackspark.sqlfront import ConcurrentWriteError
+
+    from urllib.parse import urlparse
+
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
+    if not wh or not os.path.isdir(wh):
+        yield  # no shared warehouse → nothing to coordinate on
+        return
+    path = os.path.join(wh, f"{table.lower()}__qs_writer.lock")
+    me = os.getpid()
+    acquired = False
+    for attempt in range(8):
+        try:
+            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            os.write(fd, str(me).encode())
+            os.close(fd)
+            acquired = True
+            break
+        except FileExistsError:
+            try:
+                holder = int(open(path).read().strip() or "0")
+            except (OSError, ValueError):
+                holder = 0
+            if holder and holder != me and _pid_alive(holder):
+                raise ConcurrentWriteError(
+                    f"table {table} is being rewritten by another live "
+                    f"session (pid {holder}); concurrent DML on plain "
+                    f"parquet tables is unsupported — serialize the "
+                    f"writers or use a table format with a commit log"
+                ) from None
+            if holder == 0:
+                # unreadable holder: likely we raced the owner's pid write
+                # — back off and re-read instead of stealing a live lock
+                time.sleep(0.02 * (attempt + 1))
+                continue
+            # stale (crashed writer) or our own leftover: steal it and
+            # retry the open immediately — a steal on the final attempt
+            # must not fall out of the loop as a spurious failure
+            with contextlib.suppress(OSError):
+                os.unlink(path)
+            try:
+                fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+                os.write(fd, str(me).encode())
+                os.close(fd)
+                acquired = True
+                break
+            except FileExistsError:
+                continue
+    if not acquired:
+        # never run the body unlocked, and never unlink a lock file that
+        # may belong to another live writer that just acquired it
+        raise ConcurrentWriteError(
+            f"could not acquire writer lock for table {table} "
+            f"(holder unreadable after retries); another session may be "
+            f"mid-acquisition — retry the statement"
+        )
+    try:
+        yield
+    finally:
+        with contextlib.suppress(OSError):
+            os.unlink(path)
+
+
+def _swap_in(spark: SparkSession, table: str, new_df: DataFrame) -> None:
+    """Copy-on-write commit: write the rewritten rows to a staging managed
+    table, then drop + rename. The staging write fully materializes before
+    the original is touched (no read-while-overwrite), and the data never
+    transits the driver — the same rewrite a Delta/Iceberg MERGE performs,
+    minus the transaction log. The reference's MVCC DML
+    (duckdb.hpp:11969-11972, version machinery duckdb-internal.hpp:10232)
+    gives row-level versioning; on plain parquet tables whole-table
+    copy-on-write is the honest equivalent, and real deployments wanting
+    concurrent DML should use a table format with a log. A per-table
+    writer lock (_writer_lock) makes a second concurrent writer fail
+    loudly instead of silently last-write-wins."""
+    import shutil
+    from urllib.parse import urlparse
+
+    from quackspark import versioned as _versioned
+
+    if _versioned.intercept_rewrite(spark, table, new_df):
+        # commit-log table: the rewrite committed as a new version pinned
+        # at the statement's read version (optimistic concurrency —
+        # CommitConflict on overlap, no writer lock)
+        return
+    with _writer_lock(spark, table):
+        staging = f"{table}__cow_staging"
+        spark.sql(f"DROP TABLE IF EXISTS {staging}")
+        # clear an orphaned staging location from a crashed prior run (fresh
+        # metastore per session → DROP above may have been a no-op)
+        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
+        if wh:
+            shutil.rmtree(f"{wh}/{staging.lower()}", ignore_errors=True)
+        new_df.write.saveAsTable(staging)
+        # inside a transaction the first write keeps the original as the
+        # rollback snapshot (rename, not drop) — see _txn_keep_original
+        if not _txn_keep_original(spark, table):
+            spark.sql(f"DROP TABLE {table}")
+        spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
+
+
+def _run_dml(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
+    """UPDATE / DELETE on managed tables as copy-on-write rewrites
+    (reference statement enum duckdb.hpp:11969-11972), with RETURNING
+    (post-image for UPDATE, deleted rows for DELETE — DuckDB semantics).
+    The RETURNING result materializes (eager localCheckpoint) BEFORE the
+    staging swap so it can't observe the rewritten table."""
+    from quackspark.sqlfront import UnsupportedSQL, _split_args, _tokens, transpile
+
+    if m := _UPDATE_FROM_RE.match(duckdb_sql):
+        return _run_update_from(spark, *m.groups())
+    if m := _DELETE_USING_RE.match(duckdb_sql):
+        return _run_delete_using(spark, *m.groups())
+    if re.search(r"\bUPDATE\b.*\bFROM\b|\bDELETE\b.*\bUSING\b", duckdb_sql, re.I | re.S) \
+            and (duckdb_sql.lstrip()[:6].upper() in ("UPDATE", "DELETE")):
+        raise UnsupportedSQL(
+            "UPDATE ... FROM / DELETE ... USING with a non-table source, "
+            "RETURNING, or multiple sources — stage the source into a "
+            "table/view and use the single-table form (supported since r6)"
+        )
+    if m := _UPDATE_RE.match(duckdb_sql):
+        table, set_clause, pred, returning = m.groups()
+        schema = {f.name.lower(): f.dataType.simpleString()
+                  for f in spark.table(table).schema.fields}
+        assigns: dict[str, str] = {}
+        for item in _split_args(_tokens(set_clause)):
+            if len(item) < 3 or item[1] != "=":
+                raise UnsupportedSQL(f"UPDATE SET expects col = expr: {item}")
+            col = item[0].lower()
+            if col not in schema:
+                raise UnsupportedSQL(f"UPDATE column not in {table}: {col}")
+            assigns[col] = " ".join(item[2:])
+        # DuckDB updates rows where the predicate is TRUE (NULL → keep);
+        # the assigned expression is cast to the column's declared type
+        cond = f"({pred})" if pred else "TRUE"
+
+        def applied(c: str) -> str:
+            if c.lower() in assigns:
+                return (
+                    f"CAST(({assigns[c.lower()]}) AS {schema[c.lower()]}) AS {c}"
+                )
+            return c
+
+        select_items = []
+        for f in spark.table(table).schema.fields:
+            c = f.name
+            if c.lower() in assigns:
+                select_items.append(
+                    f"CASE WHEN {cond} THEN CAST(({assigns[c.lower()]}) AS "
+                    f"{schema[c.lower()]}) ELSE {c} END AS {c}"
+                )
+            else:
+                select_items.append(c)
+        new_df = spark.sql(
+            transpile(f"SELECT {', '.join(select_items)} FROM {table}", spark)
+        )
+        post = ", ".join(applied(f.name) for f in spark.table(table).schema.fields)
+        upd_sql = f"SELECT {post} FROM {table} WHERE coalesce({cond}, false)"
+        ret_df = None
+        if returning:
+            ret_df = spark.sql(transpile(
+                f"SELECT {returning} FROM ({upd_sql}) __qs_ret", spark
+            )).localCheckpoint(eager=True)
+
+        if has_enforced_constraints(table):
+            upd_rows = spark.sql(transpile(upd_sql, spark))
+            enforce_update(spark, table, upd_rows, new_df, set(assigns))
+        _swap_in(spark, table, new_df)
+        return ret_df if ret_df is not None else local_frame(
+            spark, [(table,)], "updated string"
+        )
+    if m := _DELETE_RE.match(duckdb_sql):
+        table, pred, returning = m.groups()
+        # DELETE removes rows where pred is TRUE; NULL predicates keep the
+        # row — hence NOT coalesce(pred, false)
+        where = f"WHERE NOT coalesce(({pred}), false)" if pred else "WHERE false"
+        new_df = spark.sql(transpile(f"SELECT * FROM {table} {where}", spark))
+        ret_df = None
+        if returning:
+            kept = f"coalesce(({pred}), false)" if pred else "TRUE"
+            ret_df = spark.sql(transpile(
+                f"SELECT {returning} FROM (SELECT * FROM {table} "
+                f"WHERE {kept}) __qs_ret", spark
+            )).localCheckpoint(eager=True)
+
+        if table_is_fk_parent(table):
+            enforce_parent_keys(spark, table, new_df)
+        _swap_in(spark, table, new_df)
+        return ret_df if ret_df is not None else local_frame(
+            spark, [(table,)], "deleted string"
+        )
+    return None
+
+
+def _run_insert_returning(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
+    """INSERT INTO t VALUES/SELECT ... RETURNING items (DuckDB RETURNING
+    clause): execute the insert, then evaluate the RETURNING projection
+    over the inserted rows (re-derived from the source expression —
+    deterministic sources only, which VALUES/SELECT on our immutable
+    inputs are)."""
+    from quackspark.sqlfront import UnsupportedSQL, sql, transpile
+
+    m = _INSERT_RETURNING_RE.match(duckdb_sql)
+    if m is None:
+        return None
+    insert_part, ret = m.groups()
+    tm = _INSERT_TARGET_RE.match(insert_part)
+    if tm is None:
+        raise UnsupportedSQL("INSERT RETURNING: unsupported target form")
+    table = tm.group(1)
+    rest = insert_part[tm.end():].strip()
+    if rest.startswith("("):
+        raise UnsupportedSQL(
+            "INSERT with a column list + RETURNING — use full-column inserts"
+        )
+    sql(spark, insert_part)
+    src_sql = f"SELECT * FROM ({rest})" if rest.upper().startswith("VALUES") else rest
+    src = spark.sql(transpile(src_sql, spark)).toDF(*spark.table(table).columns)
+    src.createOrReplaceTempView("__qs_ins_ret")
+    return spark.sql(transpile(f"SELECT {ret} FROM __qs_ins_ret", spark))

@@ -206,12 +206,12 @@ def create(
 def _txn_note(spark: SparkSession, name: str) -> dict | None:
     """Inside an explicit transaction: record the table's pre-transaction
     version once, and return the txn stamp for this write."""
-    from quackspark import sqlfront
+    from quackspark import ddl
 
-    if sqlfront._TXN is None:
+    if ddl._TXN is None:
         return None
     key = name.lower()
-    vers = sqlfront._TXN.setdefault("versioned", {})
+    vers = ddl._TXN.setdefault("versioned", {})
     if key not in vers:
         if key not in _REGISTRY:
             refresh(spark, key)
@@ -219,8 +219,8 @@ def _txn_note(spark: SparkSession, name: str) -> dict | None:
         # re-refresh here could fold a foreign mid-statement commit into
         # "ours" and let ROLLBACK erase it
         vers[key] = registered_version(key)
-    n = sqlfront._TXN["versioned_seq"] = (
-        sqlfront._TXN.get("versioned_seq", 0) + 1
+    n = ddl._TXN["versioned_seq"] = (
+        ddl._TXN.get("versioned_seq", 0) + 1
     )
     return {"app": _APP_ID, "version": n}
 
@@ -274,9 +274,9 @@ def intercept_rewrite(spark: SparkSession, name: str, df: DataFrame) -> bool:
     if txn is not None:
         # rewrite() has no txn stamp parameter; stamp post-hoc is racy —
         # instead record the commit as ours for rollback's foreign check
-        from quackspark import sqlfront
+        from quackspark import ddl
 
-        sqlfront._TXN.setdefault("own_commits", set()).add((key, new_v))
+        ddl._TXN.setdefault("own_commits", set()).add((key, new_v))
     refresh(spark, key)
     return True
 
@@ -354,10 +354,10 @@ def txn_rollback(spark: SparkSession, name: str, version: int) -> None:
     pre-transaction version. Refuses (CommitConflict) when a commit we
     did not make landed meanwhile — rollback must not erase another
     session's rows."""
-    from quackspark import sqlfront
+    from quackspark import ddl
 
     key = name.lower()
-    own = (sqlfront._TXN or {}).get("own_commits", set())
+    own = (ddl._TXN or {}).get("own_commits", set())
     vt = _REGISTRY.get(key, (None,))[0] or VersionedTable(_root(spark, key))
     vt.restore(
         version,

@@ -21,7 +21,8 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from quackspark.sqlfront import ConcurrentWriteError, _writer_lock, sql
+from quackspark.ddl import _writer_lock
+from quackspark.sqlfront import ConcurrentWriteError, sql
 
 
 def test_reattach_after_shrink_drops_stale_parts(spark, tmp_path):

@@ -15,7 +15,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from quackspark import sqlfront
+from quackspark import ddl, sqlfront
 from quackspark.queries._util import load_table
 
 SF = "/root/testdata/sf0.01"
@@ -54,7 +54,7 @@ def _duck_rows(d, name: str):
 @pytest.fixture(autouse=True)
 def _clean_txn_state():
     yield
-    sqlfront._TXN = None  # no cross-test leakage on assertion failures
+    ddl._TXN = None  # no cross-test leakage on assertion failures
 
 
 def _run_both(spark, d, name: str, stmts: list[str]):

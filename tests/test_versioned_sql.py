@@ -254,7 +254,7 @@ def test_txn_rollback_refuses_to_erase_foreign_commit(spark, versioned_on):
     with pytest.raises(CommitConflict, match="another writer"):
         S(spark, "ROLLBACK")
     # the foreign row survived; clean up the stuck transaction state
-    sqlfront._TXN = None
+    ddl._TXN = None
     assert (42,) in _rows(spark, "SELECT x FROM vt_txn_f")
     _drop(spark, "vt_txn_f")
 
