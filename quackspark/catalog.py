@@ -12,13 +12,26 @@ from pyspark.errors import AnalysisException
 from quackspark.session import local_frame
 
 
+def _list_tables(spark: SparkSession) -> list[tuple]:
+    """``spark.catalog.listTables()`` as (catalog, schema, name, type,
+    temporary) rows. A commit-log table reads through a temp view over its
+    snapshot (quackspark/versioned.py) but is a base table: it lists as a
+    ``MANAGED`` table of the default schema."""
+    from quackspark import versioned
+
+    rows = []
+    for t in spark.catalog.listTables():
+        if t.isTemporary and versioned.registered_version(t.name) is not None:
+            rows.append(("spark_catalog", "default", t.name, "MANAGED", False))
+        else:
+            rows.append((t.catalog, t.namespace[0] if t.namespace else None,
+                         t.name, t.tableType, t.isTemporary))
+    return rows
+
+
 def duckdb_tables(spark: SparkSession) -> DataFrame:
     """Tables/views visible in the current catalog."""
-    rows = [
-        (t.catalog, t.namespace[0] if t.namespace else None, t.name,
-         t.tableType, t.isTemporary)
-        for t in spark.catalog.listTables()
-    ]
+    rows = _list_tables(spark)
     return local_frame(
         spark,
         rows,
@@ -246,11 +259,11 @@ def show_all_tables(spark: SparkSession) -> DataFrame:
     table with its column name/type lists (reference output: database,
     schema, name, column_names, column_types, temporary)."""
     rows = []
-    for t in spark.catalog.listTables():
-        if t.name.startswith(_INTERNAL_PREFIX):
+    for catalog, schema, name, _, temporary in _list_tables(spark):
+        if name.startswith(_INTERNAL_PREFIX):
             continue
         try:
-            fields = spark.table(t.name).schema.fields
+            fields = spark.table(name).schema.fields
         except AnalysisException:
             # a dangling temp view (its underlying table was dropped)
             # still LISTS in the reference's SHOW ALL TABLES — keep the
@@ -259,12 +272,12 @@ def show_all_tables(spark: SparkSession) -> DataFrame:
             fields = []
         rows.append(
             (
-                t.catalog or "spark_catalog",
-                t.namespace[0] if t.namespace else "main",
-                t.name,
+                catalog or "spark_catalog",
+                schema or "main",
+                name,
                 [f.name for f in fields],
                 [duck_type_name(f.dataType) for f in fields],
-                bool(t.isTemporary),
+                bool(temporary),
             )
         )
     rows.sort(key=lambda r: (r[0], r[1], r[2]))

@@ -1,11 +1,24 @@
-"""Schema-definition statements — the reference's DDL surface
+"""Schema-definition and write statements — the reference's DDL surface
 (CreateStatement / AlterStatement / DropStatement / PragmaStatement,
 duckdb.hpp:11960-11990; ALTER column machinery duckdb-internal.hpp
-AlterTableInfo).
+AlterTableInfo) plus the write executors (INSERT family, UPDATE,
+DELETE, upsert, COPY FROM, BEGIN/COMMIT/ROLLBACK).
+
+There is one storage and write mechanism: every table is a commit-log
+table (quackspark/versioned.py over sources/commitlog.py). Appends
+commit through ``versioned.append``; UPDATE, DELETE, the upsert and the
+ALTER column family commit a whole-table rewrite through
+``versioned.rewrite``, pinned at the version the statement read, and a
+concurrent commit raises the retryable ``CommitConflict``. A table made
+outside the SQL front (by a raw Spark DataFrame writer, an ATTACH'd export)
+has no log and cannot be written: the write raises ``UnsupportedSQL``
+naming the CTAS that copies it into one.
 
 Spark-side semantics, documented per statement:
 
-- ``CREATE TABLE (col defs)`` → managed parquet table. Constraints:
+- ``CREATE TABLE (col defs)`` → a commit-log table whose version 0
+  records only the schema (no data file); ``CREATE TABLE … AS SELECT``
+  commits its rows as version 0. Constraints:
   PRIMARY KEY / UNIQUE / NOT NULL / CHECK / FOREIGN KEY are parsed AND
   enforced (r6) — the reference enforces them per-row via its ART index
   (duckdb-internal.hpp); we enforce them per-STATEMENT with one
@@ -15,20 +28,23 @@ Spark-side semantics, documented per statement:
   exists). ``DEFAULT`` expressions ARE
   honored: partial-column INSERTs fill missing columns with their
   default.
-- ``TEMP TABLE`` → ordinary managed table: the metastore/warehouse of
-  this deployment is already session-scoped, which is exactly DuckDB's
-  temp-table lifetime.
+- Lifetime: a table is its warehouse directory (``<warehouse>/<name>``)
+  and outlives the session until ``DROP TABLE``. ``TEMP TABLE`` makes
+  the same table — unlike DuckDB, it is not dropped at disconnect.
 - ``CREATE VIEW`` → temporary view (DuckDB views live in the in-process
   catalog; a Spark *persistent* view cannot reference our temp views).
-- ``ALTER TABLE ADD/DROP/RENAME/retype COLUMN`` → copy-on-write staging
-  swap, the same machinery the UPDATE/DELETE DML layer uses
-  (sqlfront._swap_in). ``RENAME TO`` passes to Spark directly.
+- ``ALTER TABLE ADD/DROP/RENAME/retype COLUMN`` → one log rewrite that
+  commits the new schema with the rewritten rows. ``RENAME TO`` moves
+  the table's directory.
 - ``CREATE/DROP INDEX`` → metadata no-op with a status row. The
   reference's ART index (duckdb-internal.hpp:4100) is a performance
   structure, not query semantics; broadcast and bucketed joins are the
   Spark-side analogue (SURVEY §7).
 - ``COMMENT ON`` → recorded in the session comment registry.
-- ``TRUNCATE t`` / ``DROP … CASCADE`` → normalized to Spark's grammar.
+- ``TRUNCATE t`` → ``DELETE FROM t`` (sqlfront); ``DROP … CASCADE`` →
+  normalized to Spark's grammar.
+- ``BEGIN`` / ``COMMIT`` / ``ROLLBACK`` → a metadata-only version pin
+  per written table (see _run_txn).
 
 Statement results (the status row every statement returns) are local
 relations built by ``session.local_frame``: the work happens while the
@@ -38,10 +54,7 @@ over a ``LocalTableScan`` — no Python-worker task per core.
 
 from __future__ import annotations
 
-import contextlib
-import os
 import re
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -110,11 +123,13 @@ _CREATE_VIEW_RE = re.compile(
     r"(IF\s+NOT\s+EXISTS\s+)?([A-Za-z_]\w*)\s+AS\s+(.*?)\s*;?\s*$",
     re.I | re.S,
 )
-_TRUNCATE_RE = re.compile(
-    r"^\s*TRUNCATE\s+(?:TABLE\s+)?([A-Za-z_]\w*)\s*;?\s*$", re.I
+_DROP_TABLE_RE = re.compile(
+    r"^\s*DROP\s+TABLE\s+(IF\s+EXISTS\s+)?([A-Za-z_]\w*)"
+    r"(?:\s+(CASCADE)|\s+RESTRICT)?\s*;?\s*$",
+    re.I,
 )
 _DROP_CASCADE_RE = re.compile(
-    r"^\s*(DROP\s+(?:TABLE|VIEW)\s+.*?)\s+(?:CASCADE|RESTRICT)\s*;?\s*$", re.I
+    r"^\s*(DROP\s+VIEW\s+.*?)\s+(?:CASCADE|RESTRICT)\s*;?\s*$", re.I
 )
 _CREATE_INDEX_RE = re.compile(
     r"^\s*CREATE\s+(UNIQUE\s+)?INDEX\s+(?:IF\s+NOT\s+EXISTS\s+)?"
@@ -402,16 +417,14 @@ def _parse_column_defs(defs_sql: str, table: str):
 
 def run_ddl(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
     """Dispatch a DDL statement; None when the text is not DDL."""
-    from quackspark.sqlfront import UnsupportedSQL, transpile
+    from quackspark import versioned as _versioned
+    from quackspark.sqlfront import transpile
 
     if re.match(r"^\s*(?:FORCE\s+)?CHECKPOINT\s*;?\s*$", duckdb_sql, re.I):
         # reference WAL checkpoint (duckdb.hpp storage surface;
-        # checkpoint fn duckdb-6.cpp:9490) — plain managed-parquet tables
-        # are durable at write, but versioned (commit-log) tables have a
-        # real analog: force a full-state log checkpoint at the current
-        # tip so snapshot replay restarts from here
-        from quackspark import versioned as _versioned
-
+        # checkpoint fn duckdb-6.cpp:9490) — the commit log's analog:
+        # force a full-state log checkpoint at each table's current tip so
+        # snapshot replay restarts from here
         forced = []
         for key, (vt, tip) in list(_versioned._REGISTRY.items()):
             if vt.force_checkpoint(tip):
@@ -432,64 +445,27 @@ def run_ddl(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
     if m := _CREATE_TABLE_RE.match(duckdb_sql):
         replace, if_not_exists, table, defs = m.groups()
         cols = _parse_column_defs(defs, table)
-        from quackspark import versioned as _versioned
-
-        if _versioned.enabled(spark) or _versioned.is_versioned(spark, table):
-            schema_sql = ", ".join(f"`{n}` {t}" for n, t, _ in cols)
-            created = _versioned.create(
-                spark,
-                table,
-                local_frame(spark, [], schema_sql),
-                replace=bool(replace),
-                if_not_exists=bool(if_not_exists),
-            )
-            defaults = {n.lower(): d for n, _, d in cols if d is not None}
-            if defaults:
-                TABLE_DEFAULTS[table.lower()] = defaults
-            return _status(
-                spark,
-                table=table,
-                status="created (versioned)" if created else "exists",
-            )
-        if replace:
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-        # clear an orphaned warehouse dir from a crashed prior session
-        # (fresh metastore per session → DROP above may be a no-op)
-        if not spark.catalog.tableExists(table):
-            import shutil
-            from urllib.parse import urlparse
-
-            wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-            if wh:
-                shutil.rmtree(f"{wh}/{table.lower()}", ignore_errors=True)
-        ine = "IF NOT EXISTS " if if_not_exists else ""
-        col_sql = ", ".join(f"`{n}` {t}" for n, t, _ in cols)
-        spark.sql(f"CREATE TABLE {ine}{table} ({col_sql}) USING parquet")
+        schema = local_frame(
+            spark, [], ", ".join(f"`{n}` {t}" for n, t, _ in cols)
+        ).schema
+        created = _versioned.create(
+            spark, table, schema, replace=bool(replace), if_not_exists=bool(if_not_exists)
+        )
         defaults = {n.lower(): d for n, _, d in cols if d is not None}
         if defaults:
             TABLE_DEFAULTS[table.lower()] = defaults
-        return _status(spark, table=table, status="created")
+        return _status(spark, table=table, status="created" if created else "exists")
 
     if m := _CTAS_RE.match(duckdb_sql):
         replace, if_not_exists, table, body = m.groups()
-        from quackspark import versioned as _versioned
-
-        if _versioned.enabled(spark) or _versioned.is_versioned(spark, table):
-            df = spark.sql(transpile(body, spark))
-            created = _versioned.create(
-                spark,
-                table,
-                df,
-                replace=bool(replace),
-                if_not_exists=bool(if_not_exists),
-            )
-            return _status(
-                spark,
-                table=table,
-                status="created (versioned)" if created else "exists",
-            )
-        # plain CTAS: fall through to the generic transpile → spark.sql
-        # path (managed parquet CREATE TABLE AS)
+        created = _versioned.create(
+            spark,
+            table,
+            spark.sql(transpile(body, spark)),
+            replace=bool(replace),
+            if_not_exists=bool(if_not_exists),
+        )
+        return _status(spark, table=table, status="created" if created else "exists")
 
     if m := _CREATE_VIEW_RE.match(duckdb_sql):
         replace, if_not_exists, view, body = m.groups()
@@ -507,29 +483,29 @@ def run_ddl(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
         spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {view} AS {body_sql}")
         return _status(spark, view=view, status="created")
 
-    if m := _TRUNCATE_RE.match(duckdb_sql):
-        from quackspark import versioned as _versioned
-
-        if _versioned.is_versioned(spark, m.group(1)):
-            _versioned.truncate(spark, m.group(1))
-        else:
-            spark.sql(f"TRUNCATE TABLE {m.group(1)}")
-        return _status(spark, table=m.group(1), status="truncated")
+    if m := _DROP_TABLE_RE.match(duckdb_sql):
+        if_exists, table, cascade = m.groups()
+        dropped = table.lower()
+        # refuse to drop a table other tables still reference (DuckDB FK
+        # dependency error) unless CASCADE
+        children = [
+            child
+            for child, fks in TABLE_FKEYS.items()
+            if child != dropped and any(fk["parent"] == dropped for fk in fks)
+        ]
+        if children and not cascade:
+            raise ConstraintError(
+                f"Constraint Error: Could not drop the table because this "
+                f"table is main key table of the table {children[0]}"
+            )
+        drop_table_metadata(dropped)
+        if _versioned.is_versioned(spark, dropped):
+            _versioned.drop(spark, dropped)
+            return _status(spark, table=dropped, status="dropped")
+        # no log: a view, a table made outside the SQL front, or absent
+        return spark.sql(f"DROP TABLE {if_exists or ''}{table}")
 
     if m := _DROP_CASCADE_RE.match(duckdb_sql):
-        # a versioned table must drop through its commit-log root, or the
-        # on-disk log resurrects it at the next reference
-        from quackspark import versioned as _versioned
-
-        if tm := re.match(
-            r"^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?([A-Za-z_]\w*)",
-            m.group(1),
-            re.I,
-        ):
-            drop_table_metadata(tm.group(1))
-            if _versioned.is_versioned(spark, tm.group(1)):
-                _versioned.drop(spark, tm.group(1))
-                return _status(spark, table=tm.group(1), status="dropped")
         return spark.sql(m.group(1))
 
     if m := _CREATE_INDEX_RE.match(duckdb_sql):
@@ -575,30 +551,6 @@ def run_ddl(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
     if m := _INSERT_PLAIN_RE.match(duckdb_sql):
         return _run_insert_plain(spark, m.group(1), m.group(2))
 
-    if m := re.match(
-        r"^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?([A-Za-z_]\w*)", duckdb_sql, re.I
-    ):
-        # refuse to drop a table other tables still reference (DuckDB FK
-        # dependency error), else forget its metadata and fall through
-        # (return None) so the normal paths execute the actual drop
-        dropped = m.group(1).lower()
-        children = [
-            child
-            for child, fks in TABLE_FKEYS.items()
-            if child != dropped and any(fk["parent"] == dropped for fk in fks)
-        ]
-        if children:
-            raise ConstraintError(
-                f"Constraint Error: Could not drop the table because this "
-                f"table is main key table of the table {children[0]}"
-            )
-        drop_table_metadata(dropped)
-        from quackspark import versioned as _versioned
-
-        if _versioned.is_versioned(spark, dropped):
-            _versioned.drop(spark, dropped)
-            return _status(spark, table=dropped, status="dropped")
-
     return None
 
 
@@ -620,7 +572,7 @@ def _run_insert_by_name(spark: SparkSession, table: str, source: str) -> DataFra
     pick the target columns; unnamed target columns fill with DEFAULT or
     NULL; a source column the table lacks is a binder error. Lowers onto
     the column-list insert (same DEFAULT binding, constraint checks, and
-    versioned-table chokepoint)."""
+    log append)."""
     from quackspark.sqlfront import transpile
 
     src_sql = transpile(source, spark)
@@ -637,20 +589,9 @@ def _run_insert_by_name(spark: SparkSession, table: str, source: str) -> DataFra
     return _run_insert_with_columns(spark, table, ", ".join(src_cols), source)
 
 
-def _run_insert_plain(
-    spark: SparkSession, table: str, source: str
-) -> DataFrame | None:
-    """Full-column INSERT on a table WITH enforced constraints (or a
-    versioned table, whose appends must go through the commit log): bind
-    the source, validate (see _enforce_insert), then append. Plain
-    unconstrained tables return None and keep the zero-overhead
-    spark.sql path."""
-    from quackspark import versioned as _versioned
-
-    if not has_enforced_constraints(table) and not _versioned.is_versioned(
-        spark, table
-    ):
-        return None
+def _run_insert_plain(spark: SparkSession, table: str, source: str) -> DataFrame:
+    """Full-column INSERT: bind the source, validate (see
+    _enforce_insert), then commit the rows to the log."""
     _append(spark, table, _proposed_rows(spark, table, source))
     return _status(spark, table=table, status="inserted")
 
@@ -679,29 +620,20 @@ def _proposed_rows(spark: SparkSession, table: str, source: str) -> DataFrame:
 
 
 def _append(spark: SparkSession, table: str, df: DataFrame) -> None:
-    """Validate ``df`` (see _enforce_insert), then append it — as a
-    commit on a versioned table."""
+    """Validate ``df`` (see _enforce_insert), then commit it as an
+    append to the table's log."""
     from quackspark import versioned as _versioned
 
     _enforce_insert(spark, table, df)
-    if not _versioned.intercept_append(spark, table, df):
-        df.write.insertInto(table, overwrite=False)
-
-
-def _swap(spark: SparkSession, table: str, df: DataFrame) -> None:
-    _swap_in(spark, table, df)
+    _versioned.append(spark, table, df)
 
 
 def _run_alter(spark: SparkSession, table: str, action: str) -> DataFrame:
+    from quackspark import versioned as _versioned
     from quackspark.sqlfront import UnsupportedSQL, transpile
 
     if m := re.match(r"^RENAME\s+TO\s+([A-Za-z_]\w*)$", action, re.I):
-        from quackspark import versioned as _versioned
-
-        if _versioned.is_versioned(spark, table):
-            _versioned.rename(spark, table, m.group(1))
-        else:
-            spark.sql(f"ALTER TABLE {table} RENAME TO {m.group(1)}")
+        _versioned.rename(spark, table, m.group(1))
         for reg in (
             TABLE_DEFAULTS,
             TABLE_CONSTRAINTS,
@@ -727,7 +659,7 @@ def _run_alter(spark: SparkSession, table: str, action: str) -> DataFrame:
             f"`{f}` AS `{new}`" if f.lower() == old.lower() else f"`{f}`"
             for f in fields
         ]
-        _swap(spark, table, spark.table(table).selectExpr(*items))
+        _versioned.rewrite(spark, table, spark.table(table).selectExpr(*items))
         d = TABLE_DEFAULTS.get(table.lower(), {})
         if old.lower() in d:
             d[new.lower()] = d.pop(old.lower())
@@ -749,7 +681,7 @@ def _run_alter(spark: SparkSession, table: str, action: str) -> DataFrame:
             raise UnsupportedSQL(f"ADD COLUMN: {col} already in {table}")
         spark_t = _translate_type(_tokens(type_sql))
         fill = transpile(default, spark) if default else "NULL"
-        _swap(
+        _versioned.rewrite(
             spark,
             table,
             spark.table(table).selectExpr(
@@ -782,7 +714,7 @@ def _run_alter(spark: SparkSession, table: str, action: str) -> DataFrame:
                 f"Constraint Error: Cannot drop column {col}: it is part "
                 f"of a PRIMARY KEY or UNIQUE constraint on {table}"
             )
-        _swap(spark, table, spark.table(table).selectExpr(*keep))
+        _versioned.rewrite(spark, table, spark.table(table).selectExpr(*keep))
         TABLE_DEFAULTS.get(table.lower(), {}).pop(col.lower(), None)
         # a dropped column takes its NOT NULL with it; CHECKs referencing
         # it fail to bind on the next DML, matching a missing-column error
@@ -809,7 +741,7 @@ def _run_alter(spark: SparkSession, table: str, action: str) -> DataFrame:
             else f"`{f}`"
             for f in fields
         ]
-        _swap(spark, table, spark.table(table).selectExpr(*items))
+        _versioned.rewrite(spark, table, spark.table(table).selectExpr(*items))
         return _status(spark, table=table, status=f"retyped {col}")
 
     if m := re.match(
@@ -1044,9 +976,11 @@ def _enforce_insert(
     parts never conflict.
 
     With ``conflict_keys`` the conflict action owns the keys: the table's
-    key sets are not checked, but a batch repeating a conflict key (NULLs
-    grouping together) is rejected for every action, DO NOTHING included
-    (probed against the oracle engine; found by tools/fuzz_ddl.py)."""
+    key sets are not checked, but a batch repeating a non-NULL conflict
+    key is rejected for every action, DO NOTHING included (probed against
+    the oracle engine; found by tools/fuzz_ddl.py). Rows whose conflict
+    key has a NULL part never conflict, with each other or with the
+    table."""
     cols = {c.lower() for c in src_df.columns}
     if conflict_keys:
         sets, others = [(conflict_keys, None)], None
@@ -1058,8 +992,7 @@ def _enforce_insert(
         ]
         others = spark.table(table) if sets else None
     checks = _row_checks(spark, table, cols)
-    key_sets = [(keys, kind is not None) for keys, kind in sets]
-    dups = _violations(src_df, checks, key_sets, others)
+    dups = _violations(src_df, checks, [(keys, True) for keys, _ in sets], others)
     _check_foreign_keys(spark, table, src_df)
     for (keys, kind), (dup, hit, _) in zip(sets, dups):
         if dup and kind is None:
@@ -1159,11 +1092,13 @@ def _conflict_keys(spark: SparkSession, table: str, target: str | None):
 
     if target:
         return [c.strip().strip('"').lower() for c in target.split(",")]
-    keys = TABLE_PKEYS.get(table.lower())
+    # the PRIMARY KEY, else the table's one UNIQUE key set
+    sets = TABLE_UNIQUES.get(table.lower(), [])
+    keys = TABLE_PKEYS.get(table.lower()) or (sets[0] if len(sets) == 1 else None)
     if not keys:
         raise UnsupportedSQL(
-            f"INSERT conflict clause on {table}: no PRIMARY KEY recorded "
-            f"and no explicit conflict target"
+            f"INSERT conflict clause on {table}: no PRIMARY KEY or single "
+            f"UNIQUE key set recorded and no explicit conflict target"
         )
     return keys
 
@@ -1180,10 +1115,11 @@ def _run_insert_conflict(
     CONFLICT DO UPDATE (reference OnConflictInfo; upsert grammar
     duckdb-libpg_query.cpp OnConflictClause). IGNORE/NOTHING = anti-join
     the new rows against the existing key set; REPLACE = delete matching
-    keys, then append; DO UPDATE = MERGE over the copy-on-write swap —
+    keys, then append; DO UPDATE = MERGE as one log rewrite —
     matched rows get the SET expressions (``excluded.col`` = proposed
     row, bare ``col`` = existing row, optional DO UPDATE WHERE gates the
     update per-row), unmatched new rows insert as-is."""
+    from quackspark import versioned as _versioned
     from quackspark.sqlfront import UnsupportedSQL
 
     if or_action is None and do_action is None:
@@ -1211,11 +1147,7 @@ def _run_insert_conflict(
         ).select(*df.columns)
 
     if action in ("OR_IGNORE", "OR_NOTHING"):
-        fresh = without_keys_of(new_rows, existing)
-        from quackspark import versioned as _versioned
-
-        if not _versioned.intercept_append(spark, table, fresh):
-            fresh.write.insertInto(table, overwrite=False)
+        _versioned.append(spark, table, without_keys_of(new_rows, existing))
         return _status(spark, table=table, status="inserted (conflicts ignored)")
     if action == "DO_UPDATE":
         merged, assigned = _merge_do_update(
@@ -1228,9 +1160,11 @@ def _run_insert_conflict(
         enforce_update(
             spark, table, merged.filter("__upd").drop("__upd"), final, assigned
         )
-        _swap_in(spark, table, final)
+        _versioned.rewrite(spark, table, final)
         return _status(spark, table=table, status="upserted (conflicts updated)")
-    _swap_in(spark, table, without_keys_of(existing, new_rows).unionByName(new_rows))
+    _versioned.rewrite(
+        spark, table, without_keys_of(existing, new_rows).unionByName(new_rows)
+    )
     return _status(spark, table=table, status="inserted (conflicts replaced)")
 
 
@@ -1330,13 +1264,8 @@ def _run_insert_with_columns(
             items.append(f"CAST(({d}) AS {t}) AS `{f.name}`")
         else:
             items.append(f"CAST(NULL AS {t}) AS `{f.name}`")
-    from quackspark import versioned as _versioned
-
     rows = f"SELECT {', '.join(items)} FROM ({src_sql}) AS __src({alias_cols})"
-    if has_enforced_constraints(table) or _versioned.is_versioned(spark, table):
-        _append(spark, table, spark.sql(rows))
-    else:
-        spark.sql(f"INSERT INTO {table} {rows}")
+    _append(spark, table, spark.sql(rows))
     return _status(spark, table=table, status="inserted")
 
 
@@ -1388,7 +1317,7 @@ def _run_update_from(
 ) -> DataFrame:
     """``UPDATE t SET c = s.expr FROM s WHERE pred`` (reference update
     grammar, duckdb-libpg_query.cpp UpdateStmt with fromClause) as a
-    join rewrite on the copy-on-write DML layer:
+    join rewrite:
 
     1. per DISTINCT target tuple, pick ONE matching source row
        (row_number over the source columns — DETERMINISTIC, a strict
@@ -1396,10 +1325,12 @@ def _run_update_from(
     2. null-safe-join the chosen rows back onto the target (duplicate
        target rows all update, like the engine's per-physical-row
        update);
-    3. apply SET expressions where matched; swap the post-image in.
+    3. apply SET expressions where matched; commit the post-image as a
+       rewrite.
 
     One join + one window + one join — all distributed, no driver data
     path, no row ids needed."""
+    from quackspark import versioned as _versioned
     from quackspark.sqlfront import UnsupportedSQL, _split_args, _tokens, transpile
 
     alias = (src_alias or src).lower()
@@ -1481,11 +1412,11 @@ def _run_update_from(
         if has_enforced_constraints(table):
             upd_rows = spark.sql(f"{select} JOIN __qs_upd_from m ON {join_on}")
             enforce_update(spark, table, upd_rows, new_df, set(assigns))
-        _swap_in(spark, table, new_df)
+        _versioned.rewrite(spark, table, new_df)
     finally:
-        # the helper view lazily references the PRE-swap table files — a
+        # the helper view lazily references the pre-rewrite snapshot — a
         # later scan of it (e.g. EXPORT DATABASE walking the catalog)
-        # would read dropped files
+        # would read stale rows
         spark.catalog.dropTempView("__qs_upd_from")
     return local_frame(spark, [(table,)], "updated string")
 
@@ -1501,6 +1432,7 @@ def _run_delete_using(
     with usingClause): semi-join delete — a target row is removed when
     ANY source row matches; duplicate target rows all go. One anti-join,
     fully distributed."""
+    from quackspark import versioned as _versioned
     from quackspark.sqlfront import UnsupportedSQL, transpile
 
     alias = (src_alias or src).lower()
@@ -1517,7 +1449,7 @@ def _run_delete_using(
     )
     if table_is_fk_parent(table):
         enforce_parent_keys(spark, table, new_df)
-    _swap_in(spark, table, new_df)
+    _versioned.rewrite(spark, table, new_df)
     return local_frame(spark, [(table,)], "deleted string")
 _DELETE_RE = re.compile(
     r"^\s*DELETE\s+FROM\s+(\w+)(?:\s+WHERE\s+(.*?))?"
@@ -1530,8 +1462,9 @@ _INSERT_RETURNING_RE = re.compile(
 )
 
 
-#: active-transaction state: None = autocommit; else
-#: {"snapshots": {table_lower: snapshot_table_name}}
+#: active-transaction state: None = autocommit; else {"versioned":
+#: {table: pre-transaction version}, "own_commits": {(table, version)}}
+#: (see versioned._txn_note)
 _TXN: dict | None = None
 
 _BEGIN_RE = re.compile(r"^\s*(?:BEGIN|START)(?:\s+TRANSACTION)?\s*;?\s*$", re.I)
@@ -1540,220 +1473,46 @@ _ROLLBACK_RE = re.compile(r"^\s*ROLLBACK\s*;?\s*$", re.I)
 _INSERT_TARGET_RE = re.compile(r"^\s*INSERT\s+INTO\s+([A-Za-z_][A-Za-z_0-9]*)", re.I)
 
 
-def _drop_table_and_location(spark: SparkSession, name: str) -> None:
-    import shutil
-    from urllib.parse import urlparse
-
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    if wh:
-        shutil.rmtree(f"{wh}/{name.lower()}", ignore_errors=True)
-
-
-def _txn_keep_original(spark: SparkSession, table: str) -> bool:
-    """Inside a transaction, the first write to ``table`` renames the
-    original to its snapshot instead of dropping it (the staging copy is
-    already fully materialized at this point — see _swap_in). Returns True
-    when the original was preserved."""
-    if _TXN is None:
-        return False
-    key = table.lower()
-    if key in _TXN["snapshots"]:
-        return False  # already snapshotted earlier in this transaction
-    snap = f"{table}__txn_snapshot"
-    _drop_table_and_location(spark, snap)
-    spark.sql(f"ALTER TABLE {table} RENAME TO {snap}")
-    _TXN["snapshots"][key] = snap
-    return True
-
-
-def _txn_snapshot_copy(spark: SparkSession, table: str) -> None:
-    """Snapshot ``table`` by full copy — used before in-place appends
-    (INSERT), where the rename trick can't apply. Versioned tables need
-    neither: their write chokepoints record the pre-transaction VERSION
-    (metadata-only) and ROLLBACK restores it."""
-    if _TXN is None:
-        return
-    key = table.lower()
-    from quackspark import versioned as _versioned
-
-    if _versioned.is_versioned(spark, key):
-        return
-    if key in _TXN["snapshots"]:
-        return
-    snap = f"{table}__txn_snapshot"
-    _drop_table_and_location(spark, snap)
-    spark.table(table).write.saveAsTable(snap)
-    _TXN["snapshots"][key] = snap
-
-
 def _run_txn(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
     """BEGIN / COMMIT / ROLLBACK (reference: DuckTransaction,
-    duckdb-internal.hpp:10232). Single-session shim over the copy-on-write
-    DML layer: BEGIN opens a snapshot scope; the first write to each table
-    preserves its pre-transaction state; ROLLBACK restores every snapshot,
-    COMMIT discards them. Reads inside the transaction see its own writes
-    (same connection-local view as the reference). NOT cross-session MVCC
-    — concurrent writers need a table format with a log (README/SCALE.md
-    documents the posture); DDL is out of scope and autocommits."""
+    duckdb-internal.hpp:10232) over the commit log: the first write to
+    each table inside the transaction pins its pre-transaction version;
+    COMMIT keeps the commits (already durable), ROLLBACK restores every
+    pinned version metadata-only and refuses (CommitConflict) to erase a
+    foreign session's commit. Reads inside the transaction see its own
+    writes (same connection-local view as the reference). DDL is out of
+    scope and autocommits."""
+    from quackspark import versioned as _versioned
     from quackspark.sqlfront import TransactionError
 
     global _TXN
     if _BEGIN_RE.match(duckdb_sql):
         if _TXN is not None:
             raise TransactionError("cannot start a transaction within a transaction")
-        _TXN = {"snapshots": {}}
+        _TXN = {}
         return local_frame(spark, [("BEGIN",)], "status string")
     if _COMMIT_RE.match(duckdb_sql):
         if _TXN is None:
             raise TransactionError("no transaction is active")
-        for snap in _TXN["snapshots"].values():
-            _drop_table_and_location(spark, snap)
-        _TXN = None  # versioned tables: their commits are already durable
+        _TXN = None
         return local_frame(spark, [("COMMIT",)], "status string")
     if _ROLLBACK_RE.match(duckdb_sql):
         if _TXN is None:
             raise TransactionError("no transaction is active")
-        for table, snap in _TXN["snapshots"].items():
-            _drop_table_and_location(spark, table)
-            spark.sql(f"ALTER TABLE {snap} RENAME TO {table}")
-        versioned_pre = _TXN.get("versioned", {})
-        if versioned_pre:
-            from quackspark import versioned as _versioned
-
-            for table, pre_version in versioned_pre.items():
-                # metadata-only restore; CommitConflict if a FOREIGN
-                # session committed to this table mid-transaction
-                _versioned.txn_rollback(spark, table, pre_version)
+        for table, pre_version in _TXN.get("versioned", {}).items():
+            _versioned.txn_rollback(spark, table, pre_version)
         _TXN = None
         return local_frame(spark, [("ROLLBACK",)], "status string")
     return None
 
 
-def _pid_alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True
-    return True
-
-
-@contextlib.contextmanager
-def _writer_lock(spark: SparkSession, table: str):
-    """Per-table writer lock for the staging swap: an O_EXCL lock file in
-    the warehouse dir (the one piece of state every session writing these
-    managed tables shares). Held only across the staging write + rename.
-    A lock whose owner pid is dead is stolen (crashed writer); a lock held
-    by a LIVE other process raises ConcurrentWriteError loudly."""
-    from quackspark.sqlfront import ConcurrentWriteError
-
-    from urllib.parse import urlparse
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    if not wh or not os.path.isdir(wh):
-        yield  # no shared warehouse → nothing to coordinate on
-        return
-    path = os.path.join(wh, f"{table.lower()}__qs_writer.lock")
-    me = os.getpid()
-    acquired = False
-    for attempt in range(8):
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.write(fd, str(me).encode())
-            os.close(fd)
-            acquired = True
-            break
-        except FileExistsError:
-            try:
-                holder = int(open(path).read().strip() or "0")
-            except (OSError, ValueError):
-                holder = 0
-            if holder and holder != me and _pid_alive(holder):
-                raise ConcurrentWriteError(
-                    f"table {table} is being rewritten by another live "
-                    f"session (pid {holder}); concurrent DML on plain "
-                    f"parquet tables is unsupported — serialize the "
-                    f"writers or use a table format with a commit log"
-                ) from None
-            if holder == 0:
-                # unreadable holder: likely we raced the owner's pid write
-                # — back off and re-read instead of stealing a live lock
-                time.sleep(0.02 * (attempt + 1))
-                continue
-            # stale (crashed writer) or our own leftover: steal it and
-            # retry the open immediately — a steal on the final attempt
-            # must not fall out of the loop as a spurious failure
-            with contextlib.suppress(OSError):
-                os.unlink(path)
-            try:
-                fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(fd, str(me).encode())
-                os.close(fd)
-                acquired = True
-                break
-            except FileExistsError:
-                continue
-    if not acquired:
-        # never run the body unlocked, and never unlink a lock file that
-        # may belong to another live writer that just acquired it
-        raise ConcurrentWriteError(
-            f"could not acquire writer lock for table {table} "
-            f"(holder unreadable after retries); another session may be "
-            f"mid-acquisition — retry the statement"
-        )
-    try:
-        yield
-    finally:
-        with contextlib.suppress(OSError):
-            os.unlink(path)
-
-
-def _swap_in(spark: SparkSession, table: str, new_df: DataFrame) -> None:
-    """Copy-on-write commit: write the rewritten rows to a staging managed
-    table, then drop + rename. The staging write fully materializes before
-    the original is touched (no read-while-overwrite), and the data never
-    transits the driver — the same rewrite a Delta/Iceberg MERGE performs,
-    minus the transaction log. The reference's MVCC DML
-    (duckdb.hpp:11969-11972, version machinery duckdb-internal.hpp:10232)
-    gives row-level versioning; on plain parquet tables whole-table
-    copy-on-write is the honest equivalent, and real deployments wanting
-    concurrent DML should use a table format with a log. A per-table
-    writer lock (_writer_lock) makes a second concurrent writer fail
-    loudly instead of silently last-write-wins."""
-    import shutil
-    from urllib.parse import urlparse
-
-    from quackspark import versioned as _versioned
-
-    if _versioned.intercept_rewrite(spark, table, new_df):
-        # commit-log table: the rewrite committed as a new version pinned
-        # at the statement's read version (optimistic concurrency —
-        # CommitConflict on overlap, no writer lock)
-        return
-    with _writer_lock(spark, table):
-        staging = f"{table}__cow_staging"
-        spark.sql(f"DROP TABLE IF EXISTS {staging}")
-        # clear an orphaned staging location from a crashed prior run (fresh
-        # metastore per session → DROP above may have been a no-op)
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-        if wh:
-            shutil.rmtree(f"{wh}/{staging.lower()}", ignore_errors=True)
-        new_df.write.saveAsTable(staging)
-        # inside a transaction the first write keeps the original as the
-        # rollback snapshot (rename, not drop) — see _txn_keep_original
-        if not _txn_keep_original(spark, table):
-            spark.sql(f"DROP TABLE {table}")
-        spark.sql(f"ALTER TABLE {staging} RENAME TO {table}")
-
-
 def _run_dml(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
-    """UPDATE / DELETE on managed tables as copy-on-write rewrites
+    """UPDATE / DELETE as whole-table rewrites committed to the log
     (reference statement enum duckdb.hpp:11969-11972), with RETURNING
     (post-image for UPDATE, deleted rows for DELETE — DuckDB semantics).
     The RETURNING result materializes (eager localCheckpoint) BEFORE the
-    staging swap so it can't observe the rewritten table."""
+    commit so it can't observe the rewritten table."""
+    from quackspark import versioned as _versioned
     from quackspark.sqlfront import UnsupportedSQL, _split_args, _tokens, transpile
 
     if m := _UPDATE_FROM_RE.match(duckdb_sql):
@@ -1814,7 +1573,7 @@ def _run_dml(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
         if has_enforced_constraints(table):
             upd_rows = spark.sql(transpile(upd_sql, spark))
             enforce_update(spark, table, upd_rows, new_df, set(assigns))
-        _swap_in(spark, table, new_df)
+        _versioned.rewrite(spark, table, new_df)
         return ret_df if ret_df is not None else local_frame(
             spark, [(table,)], "updated string"
         )
@@ -1834,7 +1593,7 @@ def _run_dml(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
 
         if table_is_fk_parent(table):
             enforce_parent_keys(spark, table, new_df)
-        _swap_in(spark, table, new_df)
+        _versioned.rewrite(spark, table, new_df)
         return ret_df if ret_df is not None else local_frame(
             spark, [(table,)], "deleted string"
         )

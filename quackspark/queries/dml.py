@@ -1,10 +1,10 @@
-"""DML queries: UPDATE / DELETE as copy-on-write rewrites on managed
-tables (sqlfront._run_dml; reference statement enum
+"""DML queries: UPDATE / DELETE as whole-table rewrites committed to a
+table's log (ddl._run_dml → versioned.rewrite; reference statement enum
 duckdb.hpp:11969-11972, MVCC machinery duckdb-internal.hpp:10232).
 
-Each query materializes a managed table from fixture data, applies real
-UPDATE/DELETE statements through the SQL frontend (staging-table
-copy-on-write — see _swap_in), and returns the final table state. The
+Each query creates a table from fixture data through the SQL frontend,
+applies real UPDATE/DELETE statements to it, and returns the final
+table state. The
 oracle states the equivalent post-DML relation as a single SELECT
 (DuckDB's documented semantics: UPDATE touches rows where the predicate
 is TRUE, DELETE removes them); the *differential* check of DuckDB
@@ -15,25 +15,18 @@ tests/test_sqlfront.py::test_update_delete_differential.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from quackspark import sqlfront
-from quackspark.queries._util import load_table
 
 
 def _fresh_table(spark: SparkSession, sf_dir: str, name: str) -> None:
-    import shutil
-    from urllib.parse import urlparse
+    from quackspark.session import register_testdata_views
 
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 2000)
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    # a previous process may have left the managed location behind without a
-    # catalog entry (fresh derby metastore per session) — clear it
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    if wh:
-        shutil.rmtree(f"{wh}/{name.lower()}", ignore_errors=True)
-    o.select("o_orderkey", "o_orderstatus", "o_totalprice").write.saveAsTable(
-        name
+    register_testdata_views(spark, sf_dir)  # the CTAS reads `orders`
+    sqlfront.sql(
+        spark,
+        f"CREATE OR REPLACE TABLE {name} AS SELECT o_orderkey, o_orderstatus, "
+        "o_totalprice FROM orders WHERE o_orderkey <= 2000",
     )
 
 
@@ -69,27 +62,21 @@ def dml_update_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fresh_pk_table(spark: SparkSession, sf_dir: str, name: str) -> None:
-    """Like _fresh_table but created THROUGH the frontend with a PRIMARY
-    KEY so ON CONFLICT (no explicit target) resolves the conflict keys."""
-    import shutil
-    from urllib.parse import urlparse
-
+    """Like _fresh_table but with a PRIMARY KEY, so ON CONFLICT (no
+    explicit target) resolves the conflict keys."""
     from quackspark.session import register_testdata_views
 
-    register_testdata_views(spark, sf_dir)  # INSERT source reads `orders`
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    if wh:
-        shutil.rmtree(f"{wh}/{name.lower()}", ignore_errors=True)
+    register_testdata_views(spark, sf_dir)  # the INSERT reads `orders`
     sqlfront.sql(
         spark,
-        f"CREATE TABLE {name} (o_orderkey BIGINT PRIMARY KEY, "
+        f"CREATE OR REPLACE TABLE {name} (o_orderkey BIGINT PRIMARY KEY, "
         "o_orderstatus VARCHAR, o_totalprice DOUBLE)",
     )
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 2000)
-    o.select(
-        "o_orderkey", "o_orderstatus", F.col("o_totalprice").cast("double")
-    ).write.insertInto(name)
+    sqlfront.sql(
+        spark,
+        f"INSERT INTO {name} SELECT o_orderkey, o_orderstatus, o_totalprice "
+        "FROM orders WHERE o_orderkey <= 2000",
+    )
 
 
 def dml_upsert_do_update(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -130,9 +117,9 @@ def dml_upsert_do_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dml_versioned_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Commit-log versioned table at the SQL layer (quackspark/versioned.py;
-    reference MVCC+WAL, duckdb-internal.hpp:10232/:9421): PRAGMA-opted
-    CTAS (v0), UPDATE (v1), DELETE (v2), then one statement reading the
+    """Commit-log table at the SQL layer (quackspark/versioned.py;
+    reference MVCC+WAL, duckdb-internal.hpp:10232/:9421): CTAS (v0),
+    UPDATE (v1), DELETE (v2), then one statement reading the
     pre-DML snapshot via ``AT (VERSION => 0)`` time travel next to the
     current state. Every write is an atomic commit-log version; the
     snapshot read is pinned to immutable files, so the v0 scan is correct
@@ -141,33 +128,29 @@ def dml_versioned_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     name = "dml_vt_orders"
     register_testdata_views(spark, sf_dir)
-    sqlfront.sql(spark, "PRAGMA versioned_tables = true")
-    try:
-        sqlfront.sql(spark, f"DROP TABLE IF EXISTS {name}")
-        sqlfront.sql(
-            spark,
-            f"CREATE TABLE {name} AS "
-            "SELECT o_orderkey, o_orderstatus, "
-            "CAST(o_totalprice AS DOUBLE) AS o_totalprice "
-            "FROM orders WHERE o_orderkey <= 2000",
-        )
-        sqlfront.sql(
-            spark,
-            f"UPDATE {name} SET o_totalprice = round(o_totalprice, 0) "
-            "WHERE o_orderstatus = 'F'",
-        )
-        sqlfront.sql(spark, f"DELETE FROM {name} WHERE o_orderkey % 5 = 0")
-        return sqlfront.sql(
-            spark,
-            f"SELECT 'v0' AS snap, o_orderkey, o_orderstatus, o_totalprice "
-            f"FROM {name} AT (VERSION => 0) "
-            f"UNION ALL "
-            f"SELECT 'current' AS snap, o_orderkey, o_orderstatus, "
-            f"o_totalprice FROM {name} "
-            f"ORDER BY snap, o_orderkey",
-        )
-    finally:
-        sqlfront.sql(spark, "PRAGMA versioned_tables = false")
+    sqlfront.sql(spark, f"DROP TABLE IF EXISTS {name}")
+    sqlfront.sql(
+        spark,
+        f"CREATE TABLE {name} AS "
+        "SELECT o_orderkey, o_orderstatus, "
+        "CAST(o_totalprice AS DOUBLE) AS o_totalprice "
+        "FROM orders WHERE o_orderkey <= 2000",
+    )
+    sqlfront.sql(
+        spark,
+        f"UPDATE {name} SET o_totalprice = round(o_totalprice, 0) "
+        "WHERE o_orderstatus = 'F'",
+    )
+    sqlfront.sql(spark, f"DELETE FROM {name} WHERE o_orderkey % 5 = 0")
+    return sqlfront.sql(
+        spark,
+        f"SELECT 'v0' AS snap, o_orderkey, o_orderstatus, o_totalprice "
+        f"FROM {name} AT (VERSION => 0) "
+        f"UNION ALL "
+        f"SELECT 'current' AS snap, o_orderkey, o_orderstatus, "
+        f"o_totalprice FROM {name} "
+        f"ORDER BY snap, o_orderkey",
+    )
 
 
 def ddl_time_column(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -182,8 +165,9 @@ def ddl_time_column(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_testdata_views(spark, sf_dir)
     name = "ddl_times"
-    _drop_clean(spark, name)
-    sqlfront.sql(spark, f"CREATE TABLE {name} (id INTEGER, t TIME, ttz TIMETZ)")
+    sqlfront.sql(
+        spark, f"CREATE OR REPLACE TABLE {name} (id INTEGER, t TIME, ttz TIMETZ)"
+    )
     sqlfront.sql(
         spark,
         f"""INSERT INTO {name} VALUES
@@ -203,16 +187,6 @@ def ddl_time_column(spark: SparkSession, sf_dir: str) -> DataFrame:
                    ttz.offset_s AS ttz_offset
             FROM {name} ORDER BY id""",
     )
-
-
-def _drop_clean(spark: SparkSession, name: str) -> None:
-    import shutil
-    from urllib.parse import urlparse
-
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    if wh:
-        shutil.rmtree(f"{wh}/{name.lower()}", ignore_errors=True)
 
 
 QUERIES = {

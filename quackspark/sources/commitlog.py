@@ -28,9 +28,9 @@ table commit log, and this module is its smallest sound slice
 
 At 100 TB this is the only piece that must stay tiny: the log holds file
 names + keys, never data; claims are one metadata create; readers never
-lock. The engine's copy-on-write DML staging swap (sqlfront._swap_in) is
-exactly the write path a log-backed table versions — the managed-table
-integration point is documented there.
+lock. Every managed table the SQL front creates is one of these
+(quackspark/versioned.py): appends commit through ``append`` and the
+whole-table DML rewrites through ``rewrite``.
 """
 
 from __future__ import annotations
@@ -283,9 +283,16 @@ class VersionedTable:
                 ]
         return best
 
-    def create(self, df, keys: dict | None = None, txn: dict | None = None) -> int:
-        """Commit 0. Fails if the table already has a log."""
-        rel, schema = self._write_files(df)
+    def create(self, data, keys: dict | None = None, txn: dict | None = None) -> int:
+        """Commit 0 from a DataFrame, or from a ``StructType`` alone (a
+        schema-only version with no data file). Fails if the table
+        already has a log."""
+        from pyspark.sql.types import StructType
+
+        if isinstance(data, StructType):
+            rel, schema = [], data.json()
+        else:
+            rel, schema = self._write_files(data)
         commit = {
             "op": "create",
             "add": rel,

@@ -5201,8 +5201,8 @@ def _rewrite_at_version(sql: str, spark: SparkSession | None) -> str:
         name, version = m.group(1), int(m.group(2))
         if not _versioned.is_versioned(spark, name):
             raise UnsupportedSQL(
-                f"AT (VERSION => …): {name} is not a versioned table "
-                f"(PRAGMA versioned_tables = true before CREATE TABLE)"
+                f"AT (VERSION => …): {name} has no commit log (only "
+                f"tables made by CREATE TABLE keep versions)"
             )
         return _versioned.snapshot_view(spark, name, version)
 
@@ -7095,9 +7095,9 @@ def _run_statement(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
                                   "system"):
             spark.sql(f"USE {target.split('.')[0]}")
         return local_frame(spark, [], "Success string")
-    # TRUNCATE [TABLE] t → DELETE FROM t through the DML path (copy-on-
-    # write staging, versioned tables, txn snapshots all apply); DuckDB
-    # returns the deleted row count as a one-row 'Count' result
+    # TRUNCATE [TABLE] t → DELETE FROM t through the DML path (a log
+    # rewrite; transactions apply); DuckDB returns the deleted row count
+    # as a one-row 'Count' result
     if m := re.match(
         r"^\s*TRUNCATE\s+(?:TABLE\s+)?([\w.]+)\s*;?\s*$", duckdb_sql, re.I
     ):
@@ -7123,7 +7123,8 @@ def _run_statement(spark: SparkSession, duckdb_sql: str) -> DataFrame | None:
         r"^\s*PRAGMA\s+(\w+)\s*=\s*(\S.*?)\s*;?\s*$", duckdb_sql, re.I
     ):
         # assignment-form pragmas (PRAGMA memory_limit='2GB') are DuckDB
-        # settings → Spark session conf (arbitrary keys are accepted)
+        # settings → Spark session conf (arbitrary keys are accepted);
+        # `versioned_tables` is one that nothing reads: every table has a log
         return spark.sql(f"SET {m.group(1)}={m.group(2)}")
 
     if m := _EXPORT_RE.match(duckdb_sql):
@@ -7376,11 +7377,10 @@ class TransactionError(ValueError):
 
 
 class ConcurrentWriteError(RuntimeError):
-    """A second session attempted a copy-on-write swap on a table another
-    live session is rewriting. The single-session shim has no MVCC
-    (reference: DuckTransaction/WriteAheadLog, duckdb-internal.hpp:10232,
-    :9421) — failing loudly beats silent last-write-wins; concurrent
-    writers need a table format with a commit log (SURVEY §7 roadmap)."""
+    """A sequence's warehouse-shared cursor file stayed locked by another
+    session (see _claim_sequence_blocks). Table writes never raise it:
+    they commit through the log and conflict with the retryable
+    CommitConflict."""
 
 
 def _split_statements(script: str) -> list[str]:
@@ -7533,9 +7533,6 @@ def sql(spark: SparkSession, duckdb_sql: str) -> DataFrame:
     handled = ddl._run_txn(spark, duckdb_sql)
     if handled is not None:
         return handled
-    if ddl._TXN is not None and (m := ddl._INSERT_TARGET_RE.match(duckdb_sql)):
-        # in-place append: snapshot by copy before the insert runs
-        ddl._txn_snapshot_copy(spark, m.group(1))
     handled = ddl._run_insert_returning(spark, duckdb_sql)
     if handled is not None:
         return handled

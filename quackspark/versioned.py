@@ -1,39 +1,41 @@
-"""SQL-level versioned managed tables over the commit log.
+"""SQL-level managed tables over the commit log — the engine's one
+write path.
 
 The reference's multi-writer story is MVCC + WAL (DuckTransaction
 duckdb-internal.hpp:10232, WriteAheadLog duckdb-internal.hpp:9421):
 every write versions row groups, readers pin a snapshot, conflicting
 writers abort with TransactionException. sources/commitlog.py is the
 distributed-filesystem equivalent (a Delta/Iceberg-style log); this
-module wires the SQL layer onto it — the "remaining integration step"
-SURVEY §4.2 names:
+module wires the SQL layer onto it:
 
-- ``PRAGMA versioned_tables = true`` → subsequent ``CREATE TABLE`` (col
-  defs or AS SELECT) lands as a commit-log table rooted at
-  ``<warehouse>/<name>`` instead of a plain managed parquet table.
+- Every ``CREATE TABLE`` (column definitions, AS SELECT, TEMP) lands as
+  a commit-log table rooted at ``<warehouse>/<name>``; there is no
+  opt-in (``PRAGMA versioned_tables = …`` is accepted and ignored). A
+  column-definition CREATE commits only a schema: version 0 has no data
+  file.
 - The table reads through a temp view pinned to the LATEST snapshot;
   every statement entering sqlfront.sql() re-syncs views whose log tip
   advanced (another session's commit becomes visible exactly at the
   next statement — snapshot isolation per statement).
-- All DML flows through two chokepoints and needs no per-statement
-  special cases: appends (INSERT family, COPY FROM) → ``vt.append``
-  (commits against ANY concurrent history); whole-table copy-on-write
-  rewrites (UPDATE / DELETE / upsert / ALTER column family) →
-  ``vt.rewrite`` pinned at the registered read version, raising the
+- All DML flows through two chokepoints: appends (INSERT family, COPY
+  FROM) → ``append`` (commits against ANY concurrent history);
+  whole-table rewrites (UPDATE / DELETE / upsert / ALTER column family)
+  → ``rewrite`` pinned at the registered read version, raising the
   retryable ``CommitConflict`` on overlap — the reference's
-  TransactionException contract, not the plain-parquet writer lock's
-  hard ConcurrentWriteError.
+  TransactionException contract. A table without a log (made by raw
+  Spark, outside the SQL front) cannot be written: both raise
+  ``UnsupportedSQL`` naming the CTAS that copies it into one.
 - Time travel: ``FROM t AT (VERSION => 3)`` (the DuckLake surface)
   resolves to a snapshot-pinned view.
-- BEGIN/COMMIT/ROLLBACK: the first write to a versioned table inside a
+- BEGIN/COMMIT/ROLLBACK: the first write to a table inside a
   transaction records its pre-transaction version; ROLLBACK restores it
   metadata-only (``vt.restore`` re-points at the old files, no data
   copy) and refuses — CommitConflict — if a FOREIGN session committed
   meanwhile (our single-session shim must not erase another writer's
   rows; real MVCC would merge).
 
-Constraint enforcement, DEFAULT binding, RETURNING, and upserts work
-unchanged on versioned tables because they run BEFORE the chokepoints.
+Constraint enforcement, DEFAULT binding, RETURNING, and upserts run
+BEFORE the chokepoints.
 
 At 100 TB nothing here touches data on the driver: the log holds file
 names, sync is one directory listing, and a snapshot view is a parquet
@@ -49,18 +51,17 @@ import uuid
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from quackspark.session import local_frame
 from quackspark.sources.commitlog import VersionedTable
 
 __all__ = [
-    "enabled",
     "is_versioned",
     "sync_referenced",
     "create",
-    "intercept_append",
-    "intercept_rewrite",
-    "truncate",
+    "append",
+    "rewrite",
     "drop",
     "rename",
     "snapshot_view",
@@ -81,16 +82,6 @@ _WORD_RE = re.compile(r"[A-Za-z_]\w*")
 
 def _warehouse(spark: SparkSession) -> str:
     return urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-
-
-def enabled(spark: SparkSession) -> bool:
-    """Is ``PRAGMA versioned_tables = true`` in effect? (Assignment-form
-    pragmas land as Spark session conf — sqlfront routes them to SET.)"""
-    try:
-        v = spark.conf.get("versioned_tables")
-    except Exception:
-        return False
-    return str(v).strip().strip("'\"").lower() in ("true", "1", "on")
 
 
 def _root(spark: SparkSession, name: str) -> str:
@@ -114,8 +105,6 @@ def _read_snapshot(spark: SparkSession, snap) -> DataFrame:
     immutable and homogeneous per snapshot, but pinning the recorded
     schema keeps column order/type deterministic across appends)."""
     import json as _json
-
-    from pyspark.sql.types import StructType
 
     if snap.schema:
         st = StructType.fromJson(_json.loads(snap.schema))
@@ -172,12 +161,13 @@ def sync_referenced(spark: SparkSession, stmt: str) -> None:
 def create(
     spark: SparkSession,
     name: str,
-    df: DataFrame,
+    data: DataFrame | StructType,
     replace: bool = False,
     if_not_exists: bool = False,
 ) -> bool:
-    """Create a versioned table from ``df`` (empty for col-def CREATE).
-    Returns False for IF NOT EXISTS on an existing table."""
+    """Create a commit-log table from ``data``: a DataFrame (CTAS), or a
+    schema alone (column-definition CREATE — version 0 records it and no
+    data file). Returns False for IF NOT EXISTS on an existing table."""
     key = name.lower()
     root = _root(spark, key)
     if _has_log(root):
@@ -189,18 +179,22 @@ def create(
                 f'Catalog Error: Table with name "{name}" already exists!'
             )
         drop(spark, key)
-    else:
-        # clear a plain managed table occupying the location — drop the
-        # temp view FIRST (it shadows name resolution, so a bare DROP
-        # TABLE would hit the view and leave the metastore entry pointing
-        # at files we are about to delete), then the metastore table
-        spark.catalog.dropTempView(key)
-        spark.sql(f"DROP TABLE IF EXISTS {key}")
-        shutil.rmtree(root, ignore_errors=True)
-    vt = VersionedTable(root)
-    vt.create(df)
+    VersionedTable(root).create(data)
     refresh(spark, key, force=True)
     return True
+
+
+def _require_log(spark: SparkSession, name: str) -> str:
+    key = name.lower()
+    if not is_versioned(spark, key):
+        from quackspark.sqlfront import UnsupportedSQL
+
+        raise UnsupportedSQL(
+            f"{name} has no commit log (it was not made by CREATE TABLE); "
+            f"copy it into a table that has one: "
+            f"CREATE TABLE {key}2 AS SELECT * FROM {key}"
+        )
+    return key
 
 
 def _txn_note(spark: SparkSession, name: str) -> dict | None:
@@ -225,18 +219,13 @@ def _txn_note(spark: SparkSession, name: str) -> dict | None:
     return {"app": _APP_ID, "version": n}
 
 
-def intercept_append(spark: SparkSession, name: str, df: DataFrame) -> bool:
-    """Append chokepoint: commit ``df`` as a new version when ``name`` is
-    versioned (True), else let the caller's insertInto run (False).
+def append(spark: SparkSession, name: str, df: DataFrame) -> None:
+    """Append chokepoint: commit ``df`` as a new version.
 
-    The rows are positionally coerced to the table's CURRENT schema —
-    the same coercion insertInto performs on plain managed tables.
+    The rows are positionally coerced to the table's CURRENT schema.
     Without it an all-NULL VALUES column arrives as VOID and would
-    poison the committed schema (found by tools/fuzz_ddl.py's versioned
-    episodes)."""
-    key = name.lower()
-    if not is_versioned(spark, key):
-        return False
+    poison the committed schema (found by tools/fuzz_ddl.py)."""
+    key = _require_log(spark, name)
     txn = _txn_note(spark, key)
     refresh(spark, key)
     vt = _REGISTRY[key][0]
@@ -250,18 +239,15 @@ def intercept_append(spark: SparkSession, name: str, df: DataFrame) -> bool:
         )
     vt.append(df, txn=txn)
     refresh(spark, key)
-    return True
 
 
-def intercept_rewrite(spark: SparkSession, name: str, df: DataFrame) -> bool:
+def rewrite(spark: SparkSession, name: str, df: DataFrame) -> None:
     """Copy-on-write chokepoint (UPDATE / DELETE / upsert / ALTER): commit
     a whole-table rewrite pinned at the version the statement read.
     A concurrent commit since then raises the retryable CommitConflict —
     re-read and re-run the statement (the reference's
     TransactionException contract)."""
-    key = name.lower()
-    if not is_versioned(spark, key):
-        return False
+    key = _require_log(spark, name)
     if key not in _REGISTRY:
         refresh(spark, key)  # cold API path; SQL statements pin at entry
     txn = _txn_note(spark, key)
@@ -278,31 +264,17 @@ def intercept_rewrite(spark: SparkSession, name: str, df: DataFrame) -> bool:
 
         ddl._TXN.setdefault("own_commits", set()).add((key, new_v))
     refresh(spark, key)
-    return True
-
-
-def truncate(spark: SparkSession, name: str) -> None:
-    key = name.lower()
-    refresh(spark, key)
-    vt, read_v = _REGISTRY[key]
-    empty = _read_snapshot(spark, vt.snapshot(read_v)).limit(0)
-    vt.rewrite(empty, read_version=read_v)
-    refresh(spark, key)
 
 
 def drop(spark: SparkSession, name: str) -> None:
     key = name.lower()
     spark.catalog.dropTempView(key)
-    # a same-named metastore table can linger if a plain table once
-    # occupied this location — drop it too or its entry keeps pointing
-    # at the directory we remove
-    spark.sql(f"DROP TABLE IF EXISTS {key}")
     _REGISTRY.pop(key, None)
     shutil.rmtree(_root(spark, key), ignore_errors=True)
 
 
 def rename(spark: SparkSession, old: str, new: str) -> None:
-    okey, nkey = old.lower(), new.lower()
+    okey, nkey = _require_log(spark, old), new.lower()
     nroot = _root(spark, nkey)
     if _has_log(nroot) or spark.catalog.tableExists(nkey):
         raise ValueError(

@@ -4,25 +4,18 @@
    mix stale part files into the recreated external table.
 2. .duckdb table names that need quoting (spaces, reserved words) attach
    and read correctly.
-3. The per-table writer lock never runs the body unlocked: an unreadable
-   holder raises ConcurrentWriteError instead of silently proceeding,
-   and the other writer's lock file is left alone.
-4. fingerprint_arrow ≡ expression form ≡ DuckDB oracle for a non-BMP
+3. fingerprint_arrow ≡ expression form ≡ DuckDB oracle for a non-BMP
    (astral plane) first character — all three use full codepoints.
-5. embedding_neardup_pairs(wide=...) pins the construction explicitly;
+4. embedding_neardup_pairs(wide=...) pins the construction explicitly;
    narrow-pinned equals auto below the knee.
 """
 
 from __future__ import annotations
 
-import os
-
 import duckdb
-import pytest
 from pyspark.sql import functions as F
 
-from quackspark.ddl import _writer_lock
-from quackspark.sqlfront import ConcurrentWriteError, sql
+from quackspark.sqlfront import sql
 
 
 def test_reattach_after_shrink_drops_stale_parts(spark, tmp_path):
@@ -68,27 +61,6 @@ def test_attach_quoted_table_names(spark, tmp_path):
         spark.sql("SELECT y FROM quoteddb.`order`").collect()[0][0] == 7
     )
     spark.sql("DROP DATABASE quoteddb CASCADE")
-
-
-def test_writer_lock_unreadable_holder_raises(spark):
-    """A lock file whose pid never becomes readable (simulated mid-write
-    race) must raise instead of running the body unlocked — and must NOT
-    unlink the other writer's file."""
-    from urllib.parse import urlparse
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    if not wh or not os.path.isdir(wh):
-        pytest.skip("no warehouse dir")
-    path = os.path.join(wh, "lcktbl__qs_writer.lock")
-    with open(path, "w"):
-        pass  # empty content: holder parses as 0 on every retry
-    try:
-        with pytest.raises(ConcurrentWriteError, match="retry"):
-            with _writer_lock(spark, "lcktbl"):
-                raise AssertionError("body must not run unlocked")
-        assert os.path.exists(path), "other writer's lock must survive"
-    finally:
-        os.unlink(path)
 
 
 def test_fingerprint_astral_first_char(spark):

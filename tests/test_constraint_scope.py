@@ -10,8 +10,10 @@ These tests pin both halves:
 - order: a statement violating several constraints reports NOT NULL,
   then CHECK, then FOREIGN KEY, then an in-batch duplicate, then an
   existing key;
-- merge: the upsert's final table state equals DuckDB's, on plain and on
-  versioned (commit-log) tables.
+- merge: the upsert's final table state equals DuckDB's.
+
+Every table is a commit-log table. The ``plain`` / ``versioned`` ids
+predate that and now name two independent tables built the same way.
 """
 
 from __future__ import annotations
@@ -37,15 +39,8 @@ def _jobs(spark, gid: str, stmt: str) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(gid))
 
 
-def _create(spark, table: str, ddl: str, versioned: bool) -> None:
-    sql(spark, f"DROP TABLE IF EXISTS {table}")
-    if versioned:
-        sql(spark, "PRAGMA versioned_tables = true")
-    try:
-        sql(spark, f"CREATE TABLE {table} {ddl}")
-    finally:
-        if versioned:
-            sql(spark, "PRAGMA versioned_tables = false")
+def _create(spark, table: str, ddl: str) -> None:
+    sql(spark, f"CREATE OR REPLACE TABLE {table} {ddl}")
 
 
 def _raises(spark, stmt: str, msg: str) -> None:
@@ -63,7 +58,7 @@ SCOPE_DDL = (
 @pytest.mark.parametrize("versioned", [False, True], ids=["plain", "versioned"])
 def test_update_scope(spark, versioned):
     t = f"cs_scope_{'v' if versioned else 'p'}"
-    _create(spark, t, SCOPE_DDL, versioned)
+    _create(spark, t, SCOPE_DDL)
     sql(spark, f"INSERT INTO {t} VALUES (1, 1, 1, 0), (2, 2, 2, 0)")
     # z is under no constraint: the write is the statement's only job
     assert _jobs(spark, f"{t}-z", f"UPDATE {t} SET z = z + 1") == 1
@@ -166,6 +161,34 @@ UPSERTS = {
             "INSERT INTO {t} VALUES (8, 7, 8), (9, NULL, 9) ON CONFLICT (u) DO NOTHING",
         ],
     ),
+    "nullkey_batch": (
+        # NULL conflict keys within one batch never conflict with each other
+        "(id INTEGER, u INTEGER UNIQUE, v INTEGER)",
+        [
+            "INSERT INTO {t} VALUES (1, 1, 1)",
+            "INSERT INTO {t} VALUES (5, NULL, 5), (6, NULL, 6) "
+            "ON CONFLICT (u) DO UPDATE SET v = excluded.v",
+            "INSERT INTO {t} VALUES (7, NULL, 7), (8, NULL, 8) ON CONFLICT (u) DO NOTHING",
+        ],
+    ),
+    "unique_or": (
+        # no PRIMARY KEY: OR IGNORE / OR REPLACE use the one UNIQUE column
+        "(id INTEGER, u INTEGER UNIQUE, v INTEGER)",
+        [
+            "INSERT INTO {t} VALUES (1, 1, 1), (2, 2, 2)",
+            "INSERT OR IGNORE INTO {t} VALUES (3, 1, 3), (4, 4, 4)",
+            "INSERT OR REPLACE INTO {t} VALUES (5, 2, 5), (6, 6, 6)",
+        ],
+    ),
+    "unique_composite_or": (
+        # ... or the one composite UNIQUE key set
+        "(id INTEGER, u INTEGER, w VARCHAR, v INTEGER, UNIQUE (u, w))",
+        [
+            "INSERT INTO {t} VALUES (1, 1, 'a', 1), (2, 1, 'b', 2)",
+            "INSERT OR IGNORE INTO {t} VALUES (3, 1, 'a', 3), (4, 2, 'a', 4)",
+            "INSERT OR REPLACE INTO {t} VALUES (5, 1, 'b', 5), (6, 3, NULL, 6)",
+        ],
+    ),
     "composite": (
         "(a INTEGER, b VARCHAR, v INTEGER, PRIMARY KEY (a, b))",
         [
@@ -198,13 +221,32 @@ def test_upsert_state_matches_duckdb(spark, versioned, case):
     ddl, stmts = UPSERTS[case]
     t = f"cs_{case}_{'v' if versioned else 'p'}"
     con = duckdb.connect()
-    _create(spark, t, ddl, versioned)
+    _create(spark, t, ddl)
     con.execute(f"CREATE TABLE {t} {ddl}")
     q = f"SELECT * FROM {t}"
     for stmt in stmts:
         sql(spark, stmt.format(t=t))
         con.execute(stmt.format(t=t))
         assert _rows(sql(spark, q).collect()) == _rows(con.execute(q).fetchall()), stmt
+    con.close()
+    sql(spark, f"DROP TABLE {t}")
+
+
+def test_repeated_conflict_key_in_batch_raises(spark):
+    """NULL conflict keys are distinct, a repeated non-NULL one is not:
+    DuckDB rejects the batch for DO NOTHING and DO UPDATE alike."""
+    t = "cs_batch_repeat"
+    ddl = "(id INTEGER, u INTEGER UNIQUE, v INTEGER)"
+    _create(spark, t, ddl)
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE {t} {ddl}")
+    for action in ("DO NOTHING", "DO UPDATE SET v = excluded.v"):
+        stmt = f"INSERT INTO {t} VALUES (9, 9, 1), (10, 9, 2) ON CONFLICT (u) {action}"
+        with pytest.raises(duckdb.ConstraintException):
+            con.execute(stmt)
+        with pytest.raises(ValueError, match="duplicate conflict key"):
+            sql(spark, stmt)
+    assert sql(spark, f"SELECT * FROM {t}").collect() == []
     con.close()
     sql(spark, f"DROP TABLE {t}")
 

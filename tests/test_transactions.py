@@ -1,19 +1,18 @@
-"""Transaction shim (sqlfront._run_txn): BEGIN/COMMIT/ROLLBACK over the
-copy-on-write DML layer, differentially tested against DuckDB executing
+"""Transaction shim (ddl._run_txn): BEGIN/COMMIT/ROLLBACK over the
+tables' commit logs, differentially tested against DuckDB executing
 the identical statement sequence (reference: DuckTransaction,
 duckdb-internal.hpp:10232).
 
 Scope: single-session snapshot semantics — rollback restores every table
 the transaction wrote; commit makes writes durable; reads inside the
-transaction see its own writes. Cross-session MVCC is documented out of
-scope (plain parquet has no version log).
+transaction see its own writes. The cross-session cases (a foreign
+commit mid-transaction) live in tests/test_versioned_sql.py.
 """
 
 from __future__ import annotations
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from quackspark import ddl, sqlfront
 from quackspark.queries._util import load_table
@@ -22,15 +21,12 @@ SF = "/root/testdata/sf0.01"
 
 
 def _fresh(spark, name: str):
-    import shutil
-    from urllib.parse import urlparse
-
-    o = load_table(spark, SF, "orders").filter(F.col("o_orderkey") <= 500)
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-    if wh:
-        shutil.rmtree(f"{wh}/{name.lower()}", ignore_errors=True)
-    o.select("o_orderkey", "o_orderstatus", "o_totalprice").write.saveAsTable(name)
+    load_table(spark, SF, "orders").createOrReplaceTempView("txn_orders")
+    sqlfront.sql(
+        spark,
+        f"CREATE OR REPLACE TABLE {name} AS SELECT o_orderkey, o_orderstatus, "
+        "o_totalprice FROM txn_orders WHERE o_orderkey <= 500",
+    )
 
 
 def _duck_fresh(name: str):

@@ -1,10 +1,10 @@
-"""SQL-level versioned (commit-log) managed tables — quackspark/versioned.py.
+"""SQL-level commit-log tables — quackspark/versioned.py.
 
 The reference's multi-writer contract is MVCC + WAL (DuckTransaction
 duckdb-internal.hpp:10232): concurrent disjoint writers both commit,
 conflicting writers get TransactionException, rollback undoes versioned
 row-groups. These tests pin our commit-log equivalent end-to-end at the
-SQL layer: PRAGMA-opted CREATE, every DML family through the two write
+SQL layer: CREATE, every DML family through the two write
 chokepoints, cross-PROCESS concurrent appends that both land, the
 retryable CommitConflict on overlapping rewrites, metadata-only txn
 rollback (and its refusal to erase a foreign session's commit), and
@@ -21,7 +21,7 @@ import textwrap
 import duckdb
 import pytest
 
-from quackspark import sqlfront, versioned
+from quackspark import ddl, sqlfront, versioned
 from quackspark.session import get_session
 from quackspark.sources.commitlog import CommitConflict
 
@@ -42,18 +42,11 @@ def _drop(spark, *names):
         S(spark, f"DROP TABLE IF EXISTS {n}")
 
 
-@pytest.fixture()
-def versioned_on(spark):
-    S(spark, "PRAGMA versioned_tables = true")
-    yield
-    S(spark, "PRAGMA versioned_tables = false")
-
-
 def _rows(spark, q):
     return [tuple(r) for r in S(spark, q).collect()]
 
 
-def test_lifecycle_differential_vs_duckdb(spark, versioned_on):
+def test_lifecycle_differential_vs_duckdb(spark):
     """The same statement script must leave a versioned table and a
     DuckDB table in the same state."""
     stmts = [
@@ -76,7 +69,7 @@ def test_lifecycle_differential_vs_duckdb(spark, versioned_on):
     _drop(spark, "vt_diff")
 
 
-def test_ctas_truncate_rename_drop(spark, versioned_on):
+def test_ctas_truncate_rename_drop(spark):
     _drop(spark, "vt_ctas", "vt_renamed")
     S(spark, "CREATE TABLE vt_ctas AS SELECT 1 AS a, 'x' AS b")
     assert versioned.is_versioned(spark, "vt_ctas")
@@ -95,7 +88,7 @@ def test_ctas_truncate_rename_drop(spark, versioned_on):
     assert not versioned.is_versioned(spark, "vt_renamed")
 
 
-def test_time_travel_and_versions_pragma(spark, versioned_on):
+def test_time_travel_and_versions_pragma(spark):
     _drop(spark, "vt_tt")
     S(spark, "CREATE TABLE vt_tt (x INTEGER)")  # v0
     S(spark, "INSERT INTO vt_tt VALUES (1)")  # v1
@@ -120,16 +113,15 @@ def test_time_travel_and_versions_pragma(spark, versioned_on):
     _drop(spark, "vt_tt")
 
 
-def test_at_version_on_plain_table_errors(spark, versioned_on):
-    _drop(spark, "vt_plain_at")
-    S(spark, "PRAGMA versioned_tables = false")
-    S(spark, "CREATE TABLE vt_plain_at (x INTEGER)")
-    with pytest.raises(sqlfront.UnsupportedSQL, match="not a versioned table"):
+def test_at_version_on_plain_table_errors(spark):
+    """Only a table keeps versions: time travel on a view errors."""
+    S(spark, "CREATE OR REPLACE VIEW vt_plain_at AS SELECT 1 AS x")
+    with pytest.raises(sqlfront.UnsupportedSQL, match="has no commit log"):
         S(spark, "SELECT * FROM vt_plain_at AT (VERSION => 0)")
-    _drop(spark, "vt_plain_at")
+    S(spark, "DROP VIEW vt_plain_at")
 
 
-def test_constraints_and_upsert_on_versioned(spark, versioned_on):
+def test_constraints_and_upsert_on_versioned(spark):
     """Constraint enforcement and ON CONFLICT run unchanged on versioned
     tables (they sit before the write chokepoints)."""
     _drop(spark, "vt_con")
@@ -178,9 +170,9 @@ def _run_worker(tag: str, stmt: str) -> subprocess.CompletedProcess:
     )
 
 
-def test_cross_process_concurrent_appends_both_commit(spark, versioned_on):
-    """Two separate PROCESSES append; both commits land (the plain-parquet
-    writer lock would have failed one with ConcurrentWriteError)."""
+def test_cross_process_concurrent_appends_both_commit(spark):
+    """Two separate PROCESSES append; both commits land (appends rebase
+    onto the tip instead of conflicting)."""
     _drop(spark, "vt_multi")
     S(spark, "CREATE TABLE vt_multi (who VARCHAR, n INTEGER)")
     procs = [
@@ -211,7 +203,7 @@ def test_cross_process_concurrent_appends_both_commit(spark, versioned_on):
     _drop(spark, "vt_multi")
 
 
-def test_foreign_commit_visible_without_restart(spark, versioned_on):
+def test_foreign_commit_visible_without_restart(spark):
     _drop(spark, "vt_vis")
     S(spark, "CREATE TABLE vt_vis (x INTEGER)")
     S(spark, "INSERT INTO vt_vis VALUES (1)")
@@ -221,7 +213,7 @@ def test_foreign_commit_visible_without_restart(spark, versioned_on):
     _drop(spark, "vt_vis")
 
 
-def test_txn_rollback_metadata_only(spark, versioned_on):
+def test_txn_rollback_metadata_only(spark):
     _drop(spark, "vt_txn")
     S(spark, "CREATE TABLE vt_txn (x INTEGER)")
     S(spark, "INSERT INTO vt_txn VALUES (1)")
@@ -242,7 +234,7 @@ def test_txn_rollback_metadata_only(spark, versioned_on):
     _drop(spark, "vt_txn")
 
 
-def test_txn_rollback_refuses_to_erase_foreign_commit(spark, versioned_on):
+def test_txn_rollback_refuses_to_erase_foreign_commit(spark):
     """A foreign session commits mid-transaction → ROLLBACK must raise
     CommitConflict instead of silently erasing the foreign rows."""
     _drop(spark, "vt_txn_f")
@@ -259,7 +251,7 @@ def test_txn_rollback_refuses_to_erase_foreign_commit(spark, versioned_on):
     _drop(spark, "vt_txn_f")
 
 
-def test_concurrent_rewrite_conflicts_are_clean(spark, versioned_on):
+def test_concurrent_rewrite_conflicts_are_clean(spark):
     """An overlapping whole-table rewrite pinned at a stale read version
     raises the retryable CommitConflict (reference: TransactionException),
     and a retry of the same statement succeeds."""
@@ -280,7 +272,7 @@ def test_concurrent_rewrite_conflicts_are_clean(spark, versioned_on):
     _drop(spark, "vt_conf")
 
 
-def test_vacuum_pragma_removes_only_orphans(spark, versioned_on):
+def test_vacuum_pragma_removes_only_orphans(spark):
     _drop(spark, "vt_vac")
     S(spark, "CREATE TABLE vt_vac (x INTEGER)")
     S(spark, "INSERT INTO vt_vac VALUES (1)")
@@ -292,17 +284,22 @@ def test_vacuum_pragma_removes_only_orphans(spark, versioned_on):
     _drop(spark, "vt_vac")
 
 
-def test_plain_tables_unaffected_when_pragma_off(spark):
+def test_pragma_off_still_creates_log_table(spark):
+    """``PRAGMA versioned_tables`` is accepted and does nothing: with it
+    off, CREATE TABLE still makes a commit-log table, whose version 0
+    records only the schema."""
     S(spark, "PRAGMA versioned_tables = false")
     _drop(spark, "vt_off")
     S(spark, "CREATE TABLE vt_off (x INTEGER)")
-    assert not versioned.is_versioned(spark, "vt_off")
+    assert versioned.is_versioned(spark, "vt_off")
+    vt = versioned._REGISTRY["vt_off"][0]
+    assert vt.snapshot(0).files == ()
     S(spark, "INSERT INTO vt_off VALUES (1)")
     assert _rows(spark, "SELECT x FROM vt_off") == [(1,)]
     _drop(spark, "vt_off")
 
 
-def test_checkpoint_statement_compacts_log(spark, versioned_on):
+def test_checkpoint_statement_compacts_log(spark):
     """CHECKPOINT (reference WAL checkpoint, duckdb-6.cpp:9490) has a
     real analog on commit-log tables: force a full-state log checkpoint
     at the tip, so snapshot replay restarts from it."""
@@ -310,8 +307,10 @@ def test_checkpoint_statement_compacts_log(spark, versioned_on):
     S(spark, "CREATE TABLE vt_ck (x INTEGER)")
     S(spark, "INSERT INTO vt_ck VALUES (1)")
     S(spark, "INSERT INTO vt_ck VALUES (2)")
+    # every table this session knows is a log table, so the count in the
+    # status depends on the tables earlier tests left registered
     row = S(spark, "FORCE CHECKPOINT").collect()[0]
-    assert "1 versioned table" in row.status
+    assert row.status.startswith("checkpointed ")
     vt = versioned._REGISTRY["vt_ck"][0]
     assert vt._checkpoints() == [2]
     # idempotent second run reports nothing to do
@@ -323,10 +322,10 @@ def test_checkpoint_statement_compacts_log(spark, versioned_on):
     _drop(spark, "vt_ck")
 
 
-def test_mid_statement_foreign_commit_conflicts(spark, versioned_on):
+def test_mid_statement_foreign_commit_conflicts(spark):
     """A foreign commit landing AFTER the statement pinned its read
     version but BEFORE the rewrite commits must raise CommitConflict —
-    intercept_rewrite must NOT re-pin to the new tip (that would make
+    versioned.rewrite must NOT re-pin to the new tip (that would make
     the conflict check pass and silently erase the foreign rows)."""
     _drop(spark, "vt_race")
     S(spark, "CREATE TABLE vt_race (x INTEGER)")
@@ -338,13 +337,13 @@ def test_mid_statement_foreign_commit_conflicts(spark, versioned_on):
     r = _run_worker("race", "INSERT INTO vt_race VALUES (2)")
     assert "WORKER_OK" in r.stdout, r.stderr[-2000:]
     with pytest.raises(CommitConflict):
-        versioned.intercept_rewrite(spark, "vt_race", post_image)
+        versioned.rewrite(spark, "vt_race", post_image)
     # nothing lost: both rows still present after the failed rewrite
     assert sorted(_rows(spark, "SELECT x FROM vt_race")) == [(1,), (2,)]
     _drop(spark, "vt_race")
 
 
-def test_drop_cascade_and_foreign_drop_visibility(spark, versioned_on):
+def test_drop_cascade_and_foreign_drop_visibility(spark):
     """DROP … CASCADE must go through the commit-log root (not the temp
     view) or the on-disk log resurrects the table; and a table dropped by
     ANOTHER session must stop resolving here at the next statement."""
@@ -362,3 +361,39 @@ def test_drop_cascade_and_foreign_drop_visibility(spark, versioned_on):
     assert "WORKER_OK" in r.stdout, r.stderr[-2000:]
     with pytest.raises(Exception):  # table is gone, not stale-served
         _rows(spark, "SELECT * FROM vt_casc")
+
+
+def test_log_table_lists_as_base_table(spark):
+    """A log table reads through a temp view but is a base table: the
+    catalog lists it as MANAGED and not temporary, like DuckDB's tables."""
+    _drop(spark, "vt_cat")
+    S(spark, "CREATE TABLE vt_cat (x INTEGER)")
+    row = S(spark, "SELECT * FROM duckdb_tables() WHERE table_name = 'vt_cat'").collect()
+    assert [(r.table_type, r.temporary) for r in row] == [("MANAGED", False)]
+    shown = [r for r in S(spark, "SHOW ALL TABLES").collect() if r.name == "vt_cat"]
+    assert [(r.schema, r.temporary) for r in shown] == [("default", False)]
+    assert not S(spark, "SELECT * FROM duckdb_views() WHERE table_name = 'vt_cat'").collect()
+    _drop(spark, "vt_cat")
+
+
+def test_write_to_table_without_log_names_the_fix(spark):
+    """A table made by raw Spark, outside the SQL front, has no log: every
+    write raises UnsupportedSQL naming the CTAS that copies it into one."""
+    spark.sql("DROP TABLE IF EXISTS vt_raw")
+    spark.range(2).write.saveAsTable("vt_raw")
+    try:
+        for stmt in (
+            "INSERT INTO vt_raw VALUES (5)",
+            "UPDATE vt_raw SET id = 1",
+            "DELETE FROM vt_raw",
+            "ALTER TABLE vt_raw ADD COLUMN y INTEGER",
+        ):
+            with pytest.raises(sqlfront.UnsupportedSQL, match="CREATE TABLE vt_raw2 AS SELECT"):
+                S(spark, stmt)
+        assert sorted(_rows(spark, "SELECT id FROM vt_raw")) == [(0,), (1,)]
+        S(spark, "CREATE TABLE vt_raw2 AS SELECT * FROM vt_raw")
+        S(spark, "INSERT INTO vt_raw2 VALUES (5)")
+        assert sorted(_rows(spark, "SELECT id FROM vt_raw2")) == [(0,), (1,), (5,)]
+    finally:
+        S(spark, "DROP TABLE IF EXISTS vt_raw2")
+        S(spark, "DROP TABLE IF EXISTS vt_raw")

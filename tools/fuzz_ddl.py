@@ -284,7 +284,7 @@ def run_fuzz(
         df = qsql(spark, "SELECT * FROM fz")
         return _canon(df.columns, [tuple(r) for r in df.collect()])
 
-    episode = {"create": CREATE, "added": 0, "versioned": False}
+    episode = {"create": CREATE, "added": 0}
 
     def resync():
         """Rebuild the spark table from DuckDB's rows (engine-acceptance
@@ -293,10 +293,6 @@ def run_fuzz(
         satisfy it, and later statements keep enforcing."""
         cur = con.execute("SELECT * FROM fz")
         qsql(spark, "DROP TABLE IF EXISTS fz")
-        qsql(
-            spark,
-            f"PRAGMA versioned_tables = {str(episode['versioned']).lower()}",
-        )
         qsql(spark, episode["create"])
         for k in range(1, episode["added"] + 1):
             qsql(
@@ -335,20 +331,15 @@ def run_fuzz(
     for i in range(n):
         if i % episode_len == 0:  # fresh episode: new table, re-seeded shape
             gen = Gen(random.Random(seed * 1_000_003 + i))
-            # rotate shapes: plain → constrained → VERSIONED+constrained
-            # (the commit-log write chokepoints, quackspark/versioned.py —
-            # identical state expected, every statement a log commit)
+            # rotate shapes: plain → constrained → constrained (every
+            # table is a commit-log table; the rotation keeps its period of
+            # 3 so a seed replays the same episodes as earlier runs)
             shape = (i // episode_len) % 3
             episode["create"] = CREATE if shape == 0 else CREATE_CONSTRAINED
-            episode["versioned"] = shape == 2
             episode["added"] = 0
             con.execute("DROP TABLE IF EXISTS fz")
             con.execute(episode["create"])
             qsql(spark, "DROP TABLE IF EXISTS fz")
-            qsql(
-                spark,
-                f"PRAGMA versioned_tables = {str(episode['versioned']).lower()}",
-            )
             qsql(spark, episode["create"])
             if i == 0:  # static join-DML source, shared by all episodes
                 con.execute(FZSRC_CREATE)

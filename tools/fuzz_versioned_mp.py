@@ -134,7 +134,6 @@ def main() -> int:
     from quackspark.session import get_session
 
     spark = get_session("vt-fuzz-main", cpus=4)
-    sqlfront.sql(spark, "PRAGMA versioned_tables = true")
     sqlfront.sql(spark, f"DROP TABLE IF EXISTS {TABLE}")
     sqlfront.sql(spark, f"CREATE TABLE {TABLE} (k INTEGER, v INTEGER)")
     # seed rows in every writer's range so UPDATE/DELETE bite immediately
@@ -223,7 +222,6 @@ def main() -> int:
         **results,
     }
     sqlfront.sql(spark, f"DROP TABLE {TABLE}")
-    sqlfront.sql(spark, "PRAGMA versioned_tables = false")
     for log in logs:
         os.unlink(log)
     print(json.dumps(out))

@@ -71,7 +71,6 @@ def main() -> int:
     from quackspark.session import get_session
 
     spark = get_session("vt-demo-main", cpus=4)
-    sqlfront.sql(spark, "PRAGMA versioned_tables = true")
     sqlfront.sql(spark, "DROP TABLE IF EXISTS vt_demo_mw")
     sqlfront.sql(spark, "CREATE TABLE vt_demo_mw (worker INTEGER, n INTEGER)")
 
@@ -137,7 +136,6 @@ def main() -> int:
         ),
     }
     sqlfront.sql(spark, "DROP TABLE vt_demo_mw")
-    sqlfront.sql(spark, "PRAGMA versioned_tables = false")
     print(json.dumps(out))
     return 0
 
