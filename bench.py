@@ -301,16 +301,27 @@ def main() -> None:
     _ensure_layout(spark, SF_DIR)
 
     times: dict[str, float] = {}
+    # classes whole-stage codegen compiled during each query's last 2 timed
+    # runs (one tick of Spark's compile-time histogram per class). The
+    # warmup's count() plans differently from the noop write, so the first
+    # timed run compiles the write plan's classes; after it the count is 0
+    # while the codegen cache holds them, and nonzero names a query whose
+    # generated classes do not repeat between runs
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles: dict[str, int] = {}
     for name in names:
         fn = qs[name]
         try:
             fn(spark, SF_DIR).count()  # warmup (plan + JIT + page cache)
             runs = []
-            for _ in range(3):
+            for i in range(3):
+                if i == 1:
+                    c0 = codegen.METRIC_COMPILATION_TIME().getCount()
                 t0 = time.perf_counter()
                 df = fn(spark, SF_DIR)
                 df.write.format("noop").mode("overwrite").save()
                 runs.append(time.perf_counter() - t0)
+            compiles[name] = codegen.METRIC_COMPILATION_TIME().getCount() - c0
             times[name] = round(statistics.median(runs), 4)
         except Exception as exc:  # one broken query must not sink the run
             print(f"bench: {name} failed: {exc}", file=sys.stderr)
@@ -324,6 +335,10 @@ def main() -> None:
         "unit": "sec",
         "queries": times,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "codegen_compiles": compiles,
+        "codegen_cache_entries": int(
+            spark.conf.get("spark.sql.codegen.cache.maxEntries")
+        ),
     }
     # sf0.1 oracle pass runs UNCONDITIONALLY (r6 "what's wrong" #1: the
     # driver record must carry the ≤2× gate ratio by itself; ~40 s cost).

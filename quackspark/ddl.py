@@ -912,14 +912,18 @@ def _violations(
     return [tuple(map(bool, vals[j : j + 3])) for j in range(len(fl), len(vals), 3)]
 
 
-def _repeated_key(df: DataFrame, keys: list[str]):
-    """The error path's follow-up query: one key repeated in ``df``."""
+def _repeated_key(df: DataFrame, keys: list[str], within: DataFrame | None = None):
+    """The error path's follow-up query: one key repeated in ``df`` (with
+    ``within``, one that ``within`` also holds, or None)."""
     from pyspark.sql import functions as F
 
-    return (
+    reps = (
         df.select(*keys).na.drop("any").groupBy(*keys).count()
-        .filter(F.col("count") > 1).limit(1).collect()[0]
+        .filter(F.col("count") > 1)
     )
+    if within is not None:
+        reps = reps.join(within.select(*keys), on=list(keys), how="left_semi")
+    return next(iter(reps.limit(1).collect()), None)
 
 
 def _first_missing(vals: DataFrame, ref: DataFrame):
@@ -978,7 +982,10 @@ def _enforce_insert(
     With ``conflict_keys`` the conflict action owns the keys: the table's
     key sets are not checked, but a batch repeating a non-NULL conflict
     key is rejected for every action, DO NOTHING included (probed against
-    the oracle engine; found by tools/fuzz_ddl.py). Rows whose conflict
+    the oracle engine; found by tools/fuzz_ddl.py). As in the reference, a
+    repeated key that names a stored row fails with "can not update the
+    same row twice", a repeated new key with ``ConstraintError``
+    ``duplicate key "…"``. Rows whose conflict
     key has a NULL part never conflict, with each other or with the
     table."""
     cols = {c.lower() for c in src_df.columns}
@@ -996,11 +1003,17 @@ def _enforce_insert(
     _check_foreign_keys(spark, table, src_df)
     for (keys, kind), (dup, hit, _) in zip(sets, dups):
         if dup and kind is None:
-            raise ValueError(
-                "Constraint Error: duplicate conflict key within the inserted "
-                "batch — DuckDB rejects a command whose proposed rows repeat a "
-                "constrained value (for DO UPDATE: 'can not update the same "
-                "row twice in the same command')"
+            if _repeated_key(src_df, keys, within=spark.table(table)) is not None:
+                raise ValueError(
+                    "Invalid Input Error: ON CONFLICT DO UPDATE can not update "
+                    "the same row twice in the same command. Ensure that no "
+                    "rows proposed for insertion within the same command have "
+                    "duplicate constrained values"
+                )
+            row = _repeated_key(src_df, keys)
+            raise ConstraintError(
+                "Constraint Error: PRIMARY KEY or UNIQUE constraint violated: "
+                f'duplicate key "{", ".join(str(row[k]) for k in keys)}"'
             )
         if dup:
             raise ConstraintError(_dup_key_msg(keys, _repeated_key(src_df, keys), kind))

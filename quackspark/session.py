@@ -125,12 +125,30 @@ def local_frame(
     return spark.createDataFrame(table, struct)
 
 
+#: Entries in Spark's cache of compiled whole-stage codegen classes (the
+#: static ``spark.sql.codegen.cache.maxEntries``, default 100). Measured
+#: class working sets (distinct classes one round compiles): the five
+#: perfbench curation operators 170-176 at sf0.001-sf0.1, one sql-rw pass
+#: ~90, bench.py's 27-query headline 453-475. With 100 entries the LRU
+#: evicts every class before its next use, so each repeated curation round
+#: compiled 145-167 classes again (Janino on the driver, then the JIT) and
+#: each headline round 563-587; with 2000 a repeated curation round
+#: compiles none and a headline round 0-12. Cost: JVM Metaspace after three
+#: rounds moved -2.9 to +0.3 MB (curation) and +2 to +8 MB (headline).
+CODEGEN_CACHE_ENTRIES = 2000
+
+
 def get_session(app_name: str = "quackspark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the preset SparkSession.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all cores. On a real
     cluster the master/memory settings come from spark-submit and these
     local presets are inert.
+
+    Static confs (the codegen cache size ``CODEGEN_CACHE_ENTRIES``, the
+    master, the driver memory) take effect only on a session this builds:
+    an already active session (a harness's) keeps what its creator set
+    and gets only the runtime-settable presets.
     """
     n = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     builder = (
@@ -150,6 +168,7 @@ def get_session(app_name: str = "quackspark", cpus: int | None = None) -> SparkS
         # carries µs precision.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     active = SparkSession.getActiveSession()
     if active is not None:

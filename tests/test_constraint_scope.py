@@ -21,6 +21,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+from quackspark.ddl import ConstraintError
 from quackspark.oracle import _norm_cell
 from quackspark.sqlfront import _split_top_commas, sql
 
@@ -232,21 +233,45 @@ def test_upsert_state_matches_duckdb(spark, versioned, case):
     sql(spark, f"DROP TABLE {t}")
 
 
-def test_repeated_conflict_key_in_batch_raises(spark):
+@pytest.mark.parametrize(
+    "ddl, rows, target",
+    [
+        ("(id INTEGER, u INTEGER UNIQUE, v INTEGER)", "(9, 9, 1), (10, 9, 2)", "u"),
+        (
+            "(a INTEGER, b VARCHAR, v INTEGER, PRIMARY KEY (a, b))",
+            "(1, 'x', 1), (1, 'x', 2)",
+            "a, b",
+        ),
+    ],
+    ids=["single", "composite"],
+)
+def test_repeated_conflict_key_in_batch_raises(spark, ddl, rows, target):
     """NULL conflict keys are distinct, a repeated non-NULL one is not:
-    DuckDB rejects the batch for DO NOTHING and DO UPDATE alike."""
+    DuckDB rejects the batch for DO NOTHING and DO UPDATE alike, with a
+    ConstraintException naming the key. A repeated key that also names a
+    stored row fails as an update of the same row twice instead."""
     t = "cs_batch_repeat"
-    ddl = "(id INTEGER, u INTEGER UNIQUE, v INTEGER)"
     _create(spark, t, ddl)
     con = duckdb.connect()
     con.execute(f"CREATE TABLE {t} {ddl}")
     for action in ("DO NOTHING", "DO UPDATE SET v = excluded.v"):
-        stmt = f"INSERT INTO {t} VALUES (9, 9, 1), (10, 9, 2) ON CONFLICT (u) {action}"
-        with pytest.raises(duckdb.ConstraintException):
+        stmt = f"INSERT INTO {t} VALUES {rows} ON CONFLICT ({target}) {action}"
+        with pytest.raises(duckdb.ConstraintException) as want:
             con.execute(stmt)
-        with pytest.raises(ValueError, match="duplicate conflict key"):
+        with pytest.raises(ConstraintError) as got:
             sql(spark, stmt)
+        assert str(got.value) == str(want.value)
     assert sql(spark, f"SELECT * FROM {t}").collect() == []
+    first = rows[: rows.index(")") + 1]
+    sql(spark, f"INSERT INTO {t} VALUES {first}")
+    con.execute(f"INSERT INTO {t} VALUES {first}")
+    stmt = f"INSERT INTO {t} VALUES {rows} ON CONFLICT ({target}) DO NOTHING"
+    with pytest.raises(duckdb.InvalidInputException) as want:
+        con.execute(stmt)
+    with pytest.raises(ValueError) as got:
+        sql(spark, stmt)
+    assert not isinstance(got.value, ConstraintError)
+    assert str(got.value) == str(want.value)
     con.close()
     sql(spark, f"DROP TABLE {t}")
 
