@@ -233,23 +233,27 @@ def test_upsert_state_matches_duckdb(spark, versioned, case):
     sql(spark, f"DROP TABLE {t}")
 
 
-@pytest.mark.parametrize(
-    "ddl, rows, target",
-    [
-        ("(id INTEGER, u INTEGER UNIQUE, v INTEGER)", "(9, 9, 1), (10, 9, 2)", "u"),
-        (
-            "(a INTEGER, b VARCHAR, v INTEGER, PRIMARY KEY (a, b))",
-            "(1, 'x', 1), (1, 'x', 2)",
-            "a, b",
-        ),
-    ],
-    ids=["single", "composite"],
-)
-def test_repeated_conflict_key_in_batch_raises(spark, ddl, rows, target):
+REPEATED_KEYS = [
+    ("(id INTEGER, u INTEGER UNIQUE, v INTEGER)", "(9, 9, 1), (10, 9, 2)", "u"),
+    (
+        "(a INTEGER, b VARCHAR, v INTEGER, PRIMARY KEY (a, b))",
+        "(1, 'x', 1), (1, 'x', 2)",
+        "a, b",
+    ),
+]
+
+
+def test_repeated_conflict_key_in_batch_raises(spark):
     """NULL conflict keys are distinct, a repeated non-NULL one is not:
     DuckDB rejects the batch for DO NOTHING and DO UPDATE alike, with a
     ConstraintException naming the key. A repeated key that also names a
-    stored row fails as an update of the same row twice instead."""
+    stored row fails as an update of the same row twice instead. Checked
+    for a single-column UNIQUE key and a composite PRIMARY KEY."""
+    for ddl, rows, target in REPEATED_KEYS:
+        _check_repeated_key(spark, ddl, rows, target)
+
+
+def _check_repeated_key(spark, ddl, rows, target):
     t = "cs_batch_repeat"
     _create(spark, t, ddl)
     con = duckdb.connect()
