@@ -27,11 +27,9 @@ larger neighbors of a hub to the hub's min, collapsing the star.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
 
-from quackspark.session import local_frame
+from quackspark.session import local_frame, small_collect
 
 __all__ = ["connected_components"]
 
@@ -44,8 +42,7 @@ __all__ = ["connected_components"]
 #: sf0.1 — pure star-contraction round overhead). Above the gate the
 #: distributed large/small-star loop runs unchanged — the 100 TB path is
 #: untouched, exactly like AQE's broadcast decision: smallness is
-#: *measured*, never assumed. Override with QUACKSPARK_CC_DRIVER_EDGE_CAP
-#: (0 disables the fast path entirely).
+#: *measured*, never assumed.
 CC_DRIVER_EDGE_CAP = 1_000_000
 
 
@@ -143,7 +140,7 @@ def connected_components(
     src: str = "d1",
     dst: str = "d2",
     max_iter: int = 25,
-    driver_cap: int | None = None,
+    driver_cap: int = CC_DRIVER_EDGE_CAP,
 ) -> DataFrame:
     """(src, dst) pair DataFrame -> (node, comp) where ``comp`` is the
     minimum node id of the node's connected component. Only nodes that
@@ -155,33 +152,27 @@ def connected_components(
     loop (tests pin driver == distributed on the same graph).
     """
     raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    if driver_cap is None:
-        driver_cap = int(
-            os.environ.get("QUACKSPARK_CC_DRIVER_EDGE_CAP", CC_DRIVER_EDGE_CAP)
-        )
-    if driver_cap > 0:
-        # Probe the RAW (pre-distinct) edge count so the small-graph
-        # decision costs no shuffle: limit(cap+1) short-circuits the scan
-        # the moment the graph is provably large. A duplicate-heavy list
-        # that exceeds the cap only pre-dedup merely falls back to the
-        # distributed loop (which dedups first) — conservative, never
-        # wrong. Union-find is duplicate- and orientation-insensitive, so
-        # the driver path needs no _canon pass at all. NULL endpoints are
-        # dropped up front (matching _canon's null-propagating u != v
-        # filter) so the collected frame keeps its integer dtype.
-        head = raw.where(
-            F.col("u").isNotNull() & F.col("v").isNotNull()
-        ).limit(driver_cap + 1).toPandas()
-        if len(head) <= driver_cap:
-            from pyspark.sql.types import StructField, StructType
+    # Probe the RAW (pre-distinct) edge count so the small-graph decision
+    # costs no shuffle. A duplicate-heavy list that exceeds the cap only
+    # pre-dedup merely falls back to the distributed loop (which dedups
+    # first) — conservative, never wrong. Union-find is duplicate- and
+    # orientation-insensitive, so the driver path needs no _canon pass at
+    # all. NULL endpoints are dropped up front (matching _canon's
+    # null-propagating u != v filter) so the collected frame keeps its
+    # integer dtype.
+    head = small_collect(
+        raw.where(F.col("u").isNotNull() & F.col("v").isNotNull()), driver_cap
+    )
+    if head is not None:
+        from pyspark.sql.types import StructField, StructType
 
-            schema = StructType(
-                [
-                    StructField("node", raw.schema[0].dataType),
-                    StructField("comp", raw.schema[0].dataType),
-                ]
-            )
-            return _driver_components(edges.sparkSession, head, schema)
+        schema = StructType(
+            [
+                StructField("node", raw.schema[0].dataType),
+                StructField("comp", raw.schema[0].dataType),
+            ]
+        )
+        return _driver_components(edges.sparkSession, head, schema)
     e = _canon(raw)
     # Lazy checkpoint: the checksum action right after is what
     # materializes the checkpointed blocks, so each round costs ONE

@@ -28,11 +28,10 @@ vec id — uniform by construction.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, functions as F
 
 from quackspark.queries._util import EXACT_SUM_MODE, davg
+from quackspark.session import small_collect
 
 __all__ = ["sqdist", "kmeans_fit", "kmeans_assign"]
 
@@ -47,7 +46,6 @@ __all__ = ["sqdist", "kmeans_fit", "kmeans_assign"]
 #: arrow-assign/exact-mean-update loop runs unchanged — the 100 TB path
 #: is untouched; smallness is MEASURED with a limit-probe, never
 #: assumed (the operators/components.py CC_DRIVER_EDGE_CAP pattern).
-#: Override with QUACKSPARK_KMEANS_DRIVER_ROW_CAP (0 disables).
 KMEANS_DRIVER_ROW_CAP = 100_000
 
 
@@ -242,20 +240,15 @@ def _driver_lloyd(ids, A, k: int, iters: int):
     return clusters, C, best, d2
 
 
-def _driver_probe(vecs: DataFrame, cap: int | None):
-    """limit-probe for the driver fast path: collect at most cap+1
-    (vec_id, embedding) rows. Returns (ids int64[n], A float64[n×DIM])
-    when the corpus fits and is clean (no NULL vectors or elements,
-    rectangular, finite, micro-unit sums inside int64), else None —
+def _driver_probe(vecs: DataFrame, cap: int):
+    """Size probe for the driver fast path: :func:`session.small_collect`
+    of the (vec_id, embedding) rows. Returns (ids int64[n], A
+    float64[n×DIM]) when the corpus fits and is clean (no NULL vectors or
+    elements, unique ids, rectangular, finite, micro-unit sums inside
+    int64), else None —
     conservative, never wrong. Long-sum mode only: the decimal exact-sum
     mode would need a different update replication."""
-    if cap is None:
-        cap = int(
-            os.environ.get(
-                "QUACKSPARK_KMEANS_DRIVER_ROW_CAP", KMEANS_DRIVER_ROW_CAP
-            )
-        )
-    if cap <= 0 or EXACT_SUM_MODE != "long":
+    if EXACT_SUM_MODE != "long":
         return None
     from pyspark.sql.types import DoubleType, FloatType, LongType
 
@@ -269,10 +262,15 @@ def _driver_probe(vecs: DataFrame, cap: int | None):
         getattr(vec_type, "elementType", None), (FloatType, DoubleType)
     ):
         return None
-    head = vecs.limit(cap + 1).toPandas()
-    if len(head) > cap or len(head) == 0:
+    head = small_collect(vecs, cap)
+    if head is None or len(head) == 0:
         return None
     if head["vec_id"].isna().any() or head["embedding"].isna().any():
+        return None
+    # a repeated id can put two seed rows under one cluster id, which the
+    # distributed update's groupBy(cluster) merges and the driver twin
+    # keeps apart
+    if head["vec_id"].duplicated().any():
         return None
     # the distributed seed casts vec_id to int BEFORE ordering clusters;
     # ids outside int32 would wrap there — fall back rather than model it
@@ -317,7 +315,7 @@ def kmeans_fit(
     id_col: str = "vec_id",
     k: int = 8,
     iters: int = 2,
-    driver_cap: int | None = None,
+    driver_cap: int = KMEANS_DRIVER_ROW_CAP,
 ) -> DataFrame:
     """Train the codebook: `iters` Lloyd rounds from the deterministic
     seed (the K smallest-id vectors). Returns (cluster, cent) — the
@@ -387,7 +385,7 @@ def kmeans_assign(
     id_col: str = "vec_id",
     k: int = 8,
     iters: int = 2,
-    driver_cap: int | None = None,
+    driver_cap: int = KMEANS_DRIVER_ROW_CAP,
 ) -> DataFrame:
     """Run `iters` Lloyd rounds and return (vec_id, cluster, d2) — the
     final assignment with its squared distance.

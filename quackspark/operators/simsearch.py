@@ -25,7 +25,6 @@ Scale notes (100 TB posture):
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -492,8 +491,7 @@ def _corpus_count(corpus: DataFrame) -> int:
 #: Python-boundary vector traffic at sf0.1 disappear. Above the gate the
 #: join + dot_arrow form runs unchanged (the 100 TB path — a corpus-
 #: proportional broadcast would be the OOM the r10 verdict flags), same
-#: measured-smallness policy as components.CC_DRIVER_EDGE_CAP. Override
-#: with QUACKSPARK_SCORE_TABLE_CAP (0 disables the table path).
+#: measured-smallness policy as components.CC_DRIVER_EDGE_CAP.
 SCORE_TABLE_ROWS = 100_000
 
 
@@ -570,7 +568,7 @@ def embedding_neardup_pairs(
     threshold: float = 0.45,
     wide: bool | None = None,
     n_rows: int | None = None,
-    score_table_cap: int | None = None,
+    score_table_cap: int = SCORE_TABLE_ROWS,
 ) -> DataFrame:
     """Embedding-cosine near-dup candidate pairs via SRP band blocking,
     verified by exact cosine ≥ threshold.
@@ -626,10 +624,6 @@ def embedding_neardup_pairs(
         (F.col("a.band") == F.col("b.band"))
         & (F.col("a.e_id") < F.col("b.e_id")),
     ).select(F.col("a.e_id").alias("d1"), F.col("b.e_id").alias("d2"))
-    if score_table_cap is None:
-        score_table_cap = int(
-            os.environ.get("QUACKSPARK_SCORE_TABLE_CAP", SCORE_TABLE_ROWS)
-        )
     # the table kernel indexes ids through a sorted int64 array — non-
     # integral id columns stay on the join form (works for any type)
     integral_id = dict(corpus.dtypes).get(id_col) in (

@@ -125,6 +125,17 @@ def local_frame(
     return spark.createDataFrame(table, struct)
 
 
+def small_collect(df: DataFrame, cap: int):
+    """The size probe of every driver fast path: ``df`` as a pandas frame
+    when it holds at most ``cap`` rows, else ``None``. ``cap <= 0`` runs
+    no job. One ``limit(cap + 1)`` job, which stops scanning as soon as
+    the frame is provably large: smallness is measured, never assumed."""
+    if cap <= 0:
+        return None
+    head = df.limit(cap + 1).toPandas()
+    return head if len(head) <= cap else None
+
+
 #: Entries in Spark's cache of compiled whole-stage codegen classes (the
 #: static ``spark.sql.codegen.cache.maxEntries``, default 100). Measured
 #: class working sets (distinct classes one round compiles): the five

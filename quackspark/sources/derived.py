@@ -173,11 +173,7 @@ def bucket_count(sf_dir: str) -> int:
     is one unsplittable scan task, and 32 sub-MB files cost more in task
     scheduling than they buy in parallelism (measured: q9 at sf0.1 +0.4 s
     with 32 buckets vs raw's 3 packed splits). On a real cluster the same
-    policy lands at hundreds of ~128 MB+ buckets. Override:
-    QUACKSPARK_DERIVED_BUCKETS."""
-    env = os.environ.get("QUACKSPARK_DERIVED_BUCKETS")
-    if env:
-        return int(env)
+    policy lands at hundreds of ~128 MB+ buckets."""
     try:
         li = os.path.join(sf_dir, "lineitem.parquet")
         size = (

@@ -6942,40 +6942,27 @@ def _prepared_params(body: str) -> list[tuple[int, int, int | str]]:
 
 
 def _split_top_commas(text: str) -> list[str]:
-    """Split a comma list on its top-level commas — outside '…' strings
-    ('' escapes), "…" identifiers ("" escapes), (), [] and {}. Used for
+    """Split a comma list on its top-level commas — outside (), [], {}
+    and every quoted or comment span :func:`_sql_segments` knows. Used for
     EXECUTE's argument list (an arg may be a constant expression like
     ``10+11`` or a list literal) and ON CONFLICT's DO UPDATE SET list."""
     parts: list[str] = []
     depth = 0
     buf: list[str] = []
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch in "'\"":
-            j = i + 1
-            while j < n:
-                if text[j] == ch:
-                    if j + 1 < n and text[j + 1] == ch:
-                        j += 2
-                        continue
-                    j += 1
-                    break
-                j += 1
-            buf.append(text[i:j])
-            i = j
+    for kind, a, b in _sql_segments(text):
+        if kind != "code":
+            buf.append(text[a:b])
             continue
-        if ch in "([{":
-            depth += 1
-        elif ch in ")]}":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-            i += 1
-            continue
-        buf.append(ch)
-        i += 1
+        for ch in text[a:b]:
+            if ch in "([{":
+                depth += 1
+            elif ch in ")]}":
+                depth -= 1
+            elif ch == "," and depth == 0:
+                parts.append("".join(buf))
+                buf = []
+                continue
+            buf.append(ch)
     if buf or parts:
         parts.append("".join(buf))
     return [p.strip() for p in parts if p.strip()]

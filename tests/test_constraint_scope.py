@@ -150,6 +150,18 @@ UPSERTS = {
             "DO UPDATE SET a = [10, 20][2], v = 3",
         ],
     ),
+    "quoted_set": (
+        # a comma inside a dollar quote or an E-string does not split the
+        # SET list
+        "(id INTEGER PRIMARY KEY, s VARCHAR, v INTEGER)",
+        [
+            "INSERT INTO {t} VALUES (1, 'a', 1)",
+            "INSERT INTO {t} VALUES (1, 'b', 2) ON CONFLICT (id) "
+            "DO UPDATE SET s = $$x,y$$, v = 5",
+            "INSERT INTO {t} VALUES (1, 'c', 3) ON CONFLICT (id) "
+            "DO UPDATE SET s = E'it\\'s, ok', v = 6",
+        ],
+    ),
     "nullkey": (
         # NULL conflict keys on a UNIQUE target never match
         "(id INTEGER, u INTEGER UNIQUE, v INTEGER)",
@@ -287,3 +299,8 @@ def test_split_top_commas():
         "f(1, 2)",
         "{'k': 1, 'j': 2}",
     ]
+    # E-strings, dollar quotes, block comments and backticks are one span
+    assert _split_top_commas("E'it\\'s, ok', 2") == ["E'it\\'s, ok'", "2"]
+    assert _split_top_commas("$$x,y$$, $t$a,b$t$") == ["$$x,y$$", "$t$a,b$t$"]
+    assert _split_top_commas("1 /* a, (b */, 2") == ["1 /* a, (b */", "2"]
+    assert _split_top_commas("`a,b` = 1, v = 2") == ["`a,b` = 1", "v = 2"]

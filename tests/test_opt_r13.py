@@ -167,9 +167,9 @@ def test_pair_score_table_equals_join_form(spark):
     from quackspark.session import load_table
 
     e = load_table(spark, SF_ORACLE, "embeddings")
-    # cap forced high so this side provably takes the table path (an env
-    # override or a non-integral id column would otherwise silently turn
-    # the comparison into join-vs-join)
+    # cap forced high so this side provably takes the table path whatever
+    # the default cap (a non-integral id column would otherwise silently
+    # turn the comparison into join-vs-join)
     tdf = S.embedding_neardup_pairs(e, threshold=0.45, score_table_cap=10**9)
     import io
     from contextlib import redirect_stdout

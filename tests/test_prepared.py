@@ -185,6 +185,22 @@ def test_string_arg_with_escaped_quote(spark, duck):
     ) == [(4,)]
 
 
+@pytest.mark.parametrize(
+    "body, args, want",
+    [
+        # commas and quotes inside an E-string, a dollar quote and a block
+        # comment do not split the argument list
+        ("SELECT $1 AS s, $2::INT AS v", "E'it\\'s', 2", ("it's", 2)),
+        ("SELECT $1 AS s, $2::INT AS v", "$$x,y$$, 2", ("x,y", 2)),
+        ("SELECT $1::INT AS a, $2::INT AS b", "1 /* a, b */, 2", (1, 2)),
+    ],
+    ids=["estring", "dollar", "block_comment"],
+)
+def test_quoted_and_commented_args(spark, duck, body, args, want):
+    script = [f"PREPARE pq14 AS {body}", f"EXECUTE pq14({args})"]
+    assert _both(spark, duck, script) == [want]
+
+
 def test_prepared_dml_insert(spark, duck):
     sqlfront.sql(spark, "DROP TABLE IF EXISTS pq_t")
     for ex in (lambda q: sqlfront.sql(spark, q), duck.execute):
