@@ -4,13 +4,15 @@
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Protocol (BASELINE.md): warm JVM (one untimed warmup per query set),
-median of 3 timed runs per query, session startup excluded.
+Protocol (BASELINE.md): each query is timed by ``warm_median`` — one
+untimed noop-write warm-up, then the median of 3 timed noop writes —
+with session startup excluded.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import statistics
 import sys
@@ -84,10 +86,10 @@ SF1_SPARK_ONLY = {"dedup_cluster_components", "sim_embedding_neardup"}
 
 SF1_QUERIES = list(HEADLINE_MANIFEST)
 
-#: sf1 adaptive single-run threshold: the sf1 section measures GROWTH
-#: (is the plan ~linear?), not podium medians — one warm measurement of a
-#: >5 s query is the answer, and median-of-3 on every 10-s query would
-#: triple the per-round budget
+#: sf1 single-run threshold for ``warm_median``: the sf1 section measures
+#: GROWTH (is the plan ~linear?), not podium medians — one warm
+#: measurement of a >5 s query is the answer, and median-of-3 on every
+#: 10-s query would triple the per-round budget
 SF1_ONE_RUN_ABOVE = 5.0
 
 
@@ -239,6 +241,40 @@ def _drop_persisted(spark) -> None:
     spark._jvm.System.gc()
 
 
+def _noop_write(spark, build) -> float:
+    """Seconds to run ``build()`` into the noop sink; persisted blocks
+    are dropped afterwards, also when the run fails."""
+    t0 = time.perf_counter()
+    try:
+        build().write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
+    finally:
+        _drop_persisted(spark)
+
+
+def warm_median(
+    spark, build, one_run_above: float = math.inf, on_warm=None
+) -> float:
+    """The Spark-side timing protocol of bench.py and tools/: one untimed
+    noop-write warm-up, then the median of 3 timed noop writes, with
+    ``_drop_persisted`` after every run. The warm-up plans exactly like
+    the timed runs, so the first timed run neither compiles new classes
+    nor reads a cold page cache (a ``count()`` warm-up plans differently
+    and can skip decoding pages through parquet aggregate pushdown). A
+    first timed run over ``one_run_above`` seconds is the measurement.
+
+    ``build`` returns a fresh frame per run (a lazy ``localCheckpoint``
+    materializes on its first action, so re-running one frame would time
+    cached blocks); ``on_warm`` is called between warm-up and timed runs."""
+    _noop_write(spark, build)
+    if on_warm is not None:
+        on_warm()
+    runs = [_noop_write(spark, build)]
+    if runs[0] <= one_run_above:
+        runs += [_noop_write(spark, build) for _ in range(2)]
+    return statistics.median(runs)
+
+
 #: per-family reporting split (VERDICT r6 "what's wrong" #2: the
 #: aggregate ratio is dominated by DuckDB-pathological LLM-op oracles and
 #: must not be readable as the TPC-H story)
@@ -301,32 +337,27 @@ def main() -> None:
     _ensure_layout(spark, SF_DIR)
 
     times: dict[str, float] = {}
-    # classes whole-stage codegen compiled during each query's last 2 timed
-    # runs (one tick of Spark's compile-time histogram per class). The
-    # warmup's count() plans differently from the noop write, so the first
-    # timed run compiles the write plan's classes; after it the count is 0
-    # while the codegen cache holds them, and nonzero names a query whose
-    # generated classes do not repeat between runs
+    # classes whole-stage codegen compiled during each query's 3 timed runs
+    # (one tick of Spark's compile-time histogram per class). The warm-up
+    # plans exactly like the timed runs, so the count is 0 while the
+    # codegen cache holds the query's classes, and nonzero names a query
+    # whose generated classes do not repeat between runs
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    n_compiled = lambda: codegen.METRIC_COMPILATION_TIME().getCount()  # noqa: E731
     compiles: dict[str, int] = {}
     for name in names:
         fn = qs[name]
+        warm: list[int] = []
         try:
-            fn(spark, SF_DIR).count()  # warmup (plan + JIT + page cache)
-            runs = []
-            for i in range(3):
-                if i == 1:
-                    c0 = codegen.METRIC_COMPILATION_TIME().getCount()
-                t0 = time.perf_counter()
-                df = fn(spark, SF_DIR)
-                df.write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
-            compiles[name] = codegen.METRIC_COMPILATION_TIME().getCount() - c0
-            times[name] = round(statistics.median(runs), 4)
+            t = warm_median(
+                spark, lambda: fn(spark, SF_DIR),
+                on_warm=lambda: warm.append(n_compiled()),
+            )
+            compiles[name] = n_compiled() - warm[0]
+            times[name] = round(t, 4)
         except Exception as exc:  # one broken query must not sink the run
             print(f"bench: {name} failed: {exc}", file=sys.stderr)
             times[name] = -1.0
-        _drop_persisted(spark)
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     out = {
@@ -388,25 +419,12 @@ def main() -> None:
         for name in SF1_QUERIES:
             fn = qs[name]
             try:
-                # same adaptive protocol as bench_duckdb: a first run over
-                # the threshold IS the measurement (warm/cold delta is noise
-                # at that magnitude; 4 runs each would blow the budget)
-                t0 = time.perf_counter()
-                fn(spark, SF1_DIR).write.format("noop").mode("overwrite").save()
-                first = time.perf_counter() - t0
-                if first > SF1_ONE_RUN_ABOVE:
-                    s1[name] = round(first, 4)
-                else:
-                    runs = []
-                    for _ in range(3):
-                        t0 = time.perf_counter()
-                        fn(spark, SF1_DIR).write.format("noop").mode("overwrite").save()
-                        runs.append(time.perf_counter() - t0)
-                    s1[name] = round(statistics.median(runs), 4)
+                s1[name] = round(warm_median(
+                    spark, lambda: fn(spark, SF1_DIR), SF1_ONE_RUN_ABOVE
+                ), 4)
             except Exception as exc:
                 print(f"bench sf1: {name} failed: {exc}", file=sys.stderr)
                 s1[name] = -1.0
-            _drop_persisted(spark)
         sf1_names = [n for n in SF1_QUERIES if n not in SF1_SPARK_ONLY]
         d1 = bench_duckdb(
             sf1_names, sf_dir=SF1_DIR, one_run_above=SF1_ONE_RUN_ABOVE

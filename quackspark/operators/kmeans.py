@@ -358,8 +358,10 @@ def kmeans_fit(
     deep = iters > 2
     if deep:
         vecs = vecs.persist()
+    # the vector breaks ties between copies of one id, so the seed does
+    # not depend on partition order (the driver probe refuses repeated ids)
     cents = (
-        vecs.orderBy("vec_id")
+        vecs.orderBy("vec_id", "embedding")
         .limit(k)
         .select(
             F.col("vec_id").cast("int").alias("cluster"),

@@ -98,29 +98,16 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def srp_signature(vec: Column, n_planes: int = N_PLANES, dim: int = DIM) -> Column:
-    """n-bit SRP signature as a BIGINT: bit p = (vec · plane_p) > 0.
-    Expression form (16 interpreted HOF folds per row) — kept as the
-    generic/reference implementation; the hot path uses
-    :func:`srp_signature_arrow`."""
-    sig = F.lit(0).cast("long")
-    for p in range(n_planes):
-        signs = F.array(*[F.lit(s) for s in srp_signs(p, dim)])
-        proj = dot(vec, signs)
-        sig = sig + F.when(proj > 0, F.lit(2**p).cast("long")).otherwise(0)
-    return sig
-
-
 def srp_signature_arrow(
     vec: Column, n_planes: int = N_PLANES, dim: int = DIM
 ) -> Column:
-    """Arrow-vectorized SRP signature, bit-identical to
-    :func:`srp_signature`: numpy replays the same IEEE op sequence — cast
-    each float32 element to float64, multiply by the ±1.0 sign, and
-    left-fold ascending over elements (``acc += a[:, i] * S[i]`` is the
-    same multiply-then-add pair the HOF fold performs), so the sign tests
-    and therefore the signatures match the expression form and the DuckDB
-    oracle exactly. One batched kernel replaces 16 interpreted folds/row."""
+    """n-bit SRP signature as a BIGINT, bit p = (vec · plane_p) > 0, from
+    one Arrow kernel: numpy replays the IEEE op sequence of :func:`dot`'s
+    HOF fold — cast each float32 element to float64, multiply by the ±1.0
+    sign, and left-fold ascending over elements (``acc += a[:, i] * S[i]``)
+    — so the sign tests and therefore the signatures match the DuckDB
+    oracle's fold over the same :func:`srp_signs` exactly. One batched
+    kernel replaces 16 interpreted folds/row."""
     return _srp_signature_udf(n_planes, dim)(vec)
 
 

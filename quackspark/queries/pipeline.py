@@ -471,7 +471,7 @@ def pipeline_training_prep_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scrubbed text) → α=0.5 temperature mix → per-source rollup that
     also carries the scrub shrinkage. Every stage is an already-oracled
     operator; this composition is the one the 5 M-doc scale record
-    (tools/scale_pipeline.py → SCALE_PIPELINE.json) executes.
+    (`tools/scale.py pipeline` → SCALE_PIPELINE.json) executes.
 
     Scale shape: stage shuffles are (1) the md5-128 fingerprint groupBy,
     (2) span scrub's ONE uniform window-hash shuffle + doc-keyed span

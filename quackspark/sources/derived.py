@@ -17,15 +17,13 @@ physical-plan win:
   re-measured as the default at sf10 (SCALE_TPCH_SF10.json r7: q3
   11.6×→4.2×, q9 7.9×→3.8×, q10 4.0×→1.9×, q21 5.9×→2.2× vs single-node
   DuckDB, with a raw-layout A/B column). At 100 TB this is the
-  pay-the-shuffle-once answer for a key joined by every query. r8:
-  within each bucket rows sort by the table's DATE filter column first
-  (shipdate resp. orderdate, then orderkey) — hash joins never exploit
-  the within-bucket order, so it is free to spend on zone maps: with a
-  materialized ``*_d`` DATE twin column (Spark cannot push TIMESTAMP_NTZ
-  predicates — see the SPECS note) every date range predicate skips
-  whole row groups/pages, the reference's min/max pruning
-  (duckdb-internal.hpp:3999-4002) re-expressed on the engine-owned
-  layout (measured sf10 same-session A/B: q6 0.63→0.23 s).
+  pay-the-shuffle-once answer for a key joined by every query. Each
+  bucket is sorted on the bucket key (the r8 date-first sort lost the
+  r10 same-session A/B; see SPECS); a materialized ``*_d`` DATE twin
+  column (Spark cannot push TIMESTAMP_NTZ predicates — see the SPECS
+  note) lets out-of-range date predicates skip row groups via footer
+  min/max, the reference's zone maps (duckdb-internal.hpp:3999-4002)
+  re-expressed on the engine-owned layout.
 - ``lineitem`` additionally carries materialized micro-unit BIGINT
   columns for the money expressions every TPC-H-shaped query re-derives
   per row (`round(expr*1e6)::long` — exactly the order-independent
@@ -65,8 +63,7 @@ LAYOUT_VERSION = 6
 #: sub-100 MB bucket file still holds several row groups — min/max
 #: row-group pruning (the reference's zone maps,
 #: duckdb-internal.hpp:3999-4002) needs MULTIPLE groups per file to have
-#: anything to skip; the within-bucket date sort makes their date ranges
-#: disjoint. 16 MB ≈ DuckDB's 120k-row row-group granularity at TPC-H
+#: anything to skip. 16 MB ≈ DuckDB's 120k-row row-group granularity at TPC-H
 #: widths, and at cluster scale buckets are ≥128 MB so the trade against
 #: scan throughput stays small.
 _FACT_ROW_GROUP_BYTES = 16 << 20
@@ -112,14 +109,12 @@ def _lineitem_derived_cols() -> dict[str, F.Column]:
 
 
 def _ym(ts: F.Column) -> F.Column:
-    """Month-granularity sort key (yyyy*100+mm INT) for the 'ym' sort
-    policy. Kept as a materialized column under EVERY policy (the spec
-    schema is policy-independent and the column is 4 bytes/row), but the
-    r10 same-session sf10 A/B retired it as the default sort: month-major
-    lost all seven measured queries to key-major (SCALE_TPCH_SF10.json
-    `sort_ab`; see sort_policy's docstring). The r7/r8 measurements that
-    motivated it (q6 0.63→0.23 s date-sorted) did not replicate under
-    the same-JVM protocol — superseded per VERDICT r8 next #1."""
+    """Month-granularity INT (yyyy*100+mm). The v5 layout sorted each
+    bucket month-major on it; the r10 same-session sf10 A/B retired that
+    ordering (it lost all seven measured queries to key-major,
+    SCALE_TPCH_SF10.json `sort_ab`), and the month-major twin is gone.
+    The column stays materialized until the next LAYOUT_VERSION bump so
+    existing twins and their specs stay valid."""
     return (F.year(ts) * 100 + F.month(ts)).cast("int")
 
 
@@ -134,24 +129,20 @@ def _events_derived_cols() -> dict[str, F.Column]:
     return {"props_k": F.get_json_object(F.col("props"), "$.k")}
 
 
-#: table → (bucket key or None, 'ym'-policy within-bucket sort columns,
-#: derived-column factory or None). Under the DEFAULT 'key' policy the
-#: sort is just the bucket key — the r10 same-session sf10 A/B showed
-#: the date-leading sort loses every measured query (see sort_policy);
-#: the ym columns stay materialized so the 'ym' policy remains one env
-#: var away and the spec schema is policy-independent.
-SPECS: dict[str, tuple[str | None, tuple[str, ...], object]] = {
-    "lineitem": (
-        "l_orderkey",
-        ("l_ship_ym", "l_orderkey"),
-        _lineitem_derived_cols,
-    ),
-    "orders": (
-        "o_orderkey",
-        ("o_order_ym", "o_orderkey"),
-        _orders_derived_cols,
-    ),
-    "events": (None, (), _events_derived_cols),
+#: table → (bucket key or None, derived-column factory or None). Each
+#: bucket is sorted on its bucket key: the r10 same-session sf10 A/B
+#: showed the date-leading sort loses every measured query
+#: (SCALE_TPCH_SF10.json `sort_ab`). The fixture's dates are uncorrelated
+#: with orderkeys, so a month-major sort scatters each order's lines
+#: across the bucket (every per-order agg/join pays it), and pruning
+#: concentrates the surviving row groups on few of the fixed-parallelism
+#: scan tasks. Out-of-range date predicates (q6's 1994 window on the
+#: 1995+ fixture) still prune via footer min/max — plan-asserted in
+#: tests/test_derived_layout.py.
+SPECS: dict[str, tuple[str | None, object]] = {
+    "lineitem": ("l_orderkey", _lineitem_derived_cols),
+    "orders": ("o_orderkey", _orders_derived_cols),
+    "events": (None, _events_derived_cols),
 }
 
 #: NOTE on the `*_d` DATE twins of the timestamp filter columns: Spark's
@@ -196,33 +187,8 @@ def enabled() -> bool:
     return os.environ.get("QUACKSPARK_DERIVED", "1") != "0"
 
 
-def sort_policy() -> str:
-    """Within-bucket sort policy for the fact tables: 'key'
-    (bucket-key-major — the v6 DEFAULT) or 'ym' (the v5 ordering —
-    month-major (date_ym, key)). QUACKSPARK_SORT_POLICY flips it; twins
-    of different policies live in separate dirs/tables so a single
-    session can A/B them.
-
-    Why 'key' is the default (r10, VERDICT r8 next #1): the same-session
-    sf10 A/B (SCALE_TPCH_SF10.json `sort_ab`) shows month-major LOSES
-    every measured query — the join family hard (q3 +76%, q21 +63%,
-    q1 +52%) and even the date-filter "wins" it was built for (q6 +25%,
-    q5 +32%, q10 +36%). The fixture's dates are uncorrelated with
-    orderkeys, so month-major scatters each order's lines across the
-    bucket (every per-order agg/join pays it), while its pruning payoff
-    never materializes at these absolutes — worse, pruning CONCENTRATES
-    the surviving row groups on few of the 32 fixed-parallelism tasks
-    where the unsorted scan decodes on all of them. Out-of-range date
-    predicates (q6's 1994 window on the 1995+ fixture) still prune via
-    footer min/max regardless of sort order — plan-asserted in
-    tests/test_derived_layout.py."""
-    return os.environ.get("QUACKSPARK_SORT_POLICY", "key")
-
-
 def layout_tag(sf_dir: str) -> str:
-    tag = re.sub(r"[^A-Za-z0-9]+", "_", os.path.realpath(sf_dir)).strip("_")
-    pol = sort_policy()
-    return tag if pol == "key" else f"{tag}__{pol}"
+    return re.sub(r"[^A-Za-z0-9]+", "_", os.path.realpath(sf_dir)).strip("_")
 
 
 def derived_path(sf_dir: str, name: str) -> str:
@@ -263,10 +229,10 @@ def _read_spec(path: str, expect_fingerprint: str | None = None) -> dict | None:
             and spec.get("source_fingerprint") != expect_fingerprint
         ):
             return None  # raw fixture regenerated under the twin — rebuild
-        if spec.get("bucket_key") and spec.get("sort_policy") != sort_policy():
-            # belt-and-braces beyond the per-policy dir split: a twin
-            # built under another sort policy must never be served as
-            # this one's (the catalog SORTED BY claim would be wrong)
+        if spec.get("bucket_key") and spec.get("sort_policy") != "key":
+            # a twin sorted other than on its bucket key (the retired
+            # month-major layout) must never be served: the catalog
+            # SORTED BY claim would be wrong
             return None
         return spec
     except (OSError, ValueError):
@@ -285,7 +251,6 @@ def _build(
     unit: str,
     key: str | None,
     col_factory,
-    sort_cols: tuple[str, ...] = (),
 ) -> dict:
     """Materialize one layout unit (a table twin or a projection of it)
     atomically; returns the spec it wrote."""
@@ -301,7 +266,6 @@ def _build(
     if key is None:
         df.write.mode("overwrite").parquet(tmp)
     else:
-        sort_cols = sort_cols or (key,)
         tmp_table = f"qs_drv_build_{os.getpid()}_{name}"
         spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
         # parquet.block.size must go through the hadoop conf — a
@@ -316,7 +280,7 @@ def _build(
                     df.repartition(n_buckets, F.col(key))
                     .write.mode("overwrite")
                     .bucketBy(n_buckets, key)
-                    .sortBy(*sort_cols)
+                    .sortBy(key)
                     .option("path", tmp)
                     .format("parquet")
                     .saveAsTable(tmp_table)
@@ -333,8 +297,8 @@ def _build(
         "table": name,
         "bucket_key": key,
         "buckets": n_buckets if key else None,
-        "sort_cols": list(sort_cols) if key else [],
-        "sort_policy": sort_policy() if key else None,
+        "sort_cols": [key] if key else [],
+        "sort_policy": "key" if key else None,
         "orig_cols": list(raw.columns),
         "schema_ddl": df._jdf.schema().toDDL(),
         "source_fingerprint": _source_fingerprint(sf_dir, name),
@@ -413,13 +377,11 @@ def _register(spark: SparkSession, sf_dir: str, unit: str, spec: dict) -> DataFr
     tbl = _table_name(sf_dir, unit)
     if not spark.catalog.tableExists(tbl):
         key, n = spec["bucket_key"], spec["buckets"]
-        # SORTED BY must state the ACTUAL file order (date-leading) — a
-        # catalog claim of a different order would license sort-free
-        # merge plans over unsorted-for-that-key data
-        sort = ", ".join(spec.get("sort_cols") or [key])
+        # _read_spec serves only key-sorted twins, so SORTED BY states
+        # the actual file order
         spark.sql(
             f"CREATE TABLE {tbl} ({spec['schema_ddl']}) USING PARQUET "
-            f"CLUSTERED BY ({key}) SORTED BY ({sort}) INTO {n} BUCKETS "
+            f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {n} BUCKETS "
             f"LOCATION '{path}'"
         )
     return spark.table(tbl)
@@ -433,7 +395,6 @@ def _ensure_unit(
     key: str | None,
     col_factory,
     raw: DataFrame,
-    sort_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     path = derived_path(sf_dir, unit)
     spec = _read_spec(path, _source_fingerprint(sf_dir, name))
@@ -445,9 +406,7 @@ def _ensure_unit(
             # (_swap_into_place), so concurrent readers of the old twin
             # lose it for microseconds, not for the build duration
             spark.sql(f"DROP TABLE IF EXISTS {_table_name(sf_dir, unit)}")
-        spec = _build(
-            spark, raw, sf_dir, name, unit, key, col_factory, sort_cols
-        )
+        spec = _build(spark, raw, sf_dir, name, unit, key, col_factory)
     return _register(spark, sf_dir, unit, spec), spec
 
 
@@ -484,12 +443,8 @@ def ensure_derived(
     if not enabled() or name not in SPECS:
         return None
     try:
-        key, sort_cols, col_factory = SPECS[name]
-        if key and sort_policy() == "key":
-            sort_cols = (key,)  # the v6 default: bucket-key-major
-        full, spec = _ensure_unit(
-            spark, sf_dir, name, name, key, col_factory, raw, sort_cols
-        )
+        key, col_factory = SPECS[name]
+        full, spec = _ensure_unit(spark, sf_dir, name, name, key, col_factory, raw)
         surface = full.select(*spec["orig_cols"])
         return surface, full
     except Exception as exc:  # pragma: no cover - defensive fallback

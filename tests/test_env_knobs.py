@@ -18,8 +18,7 @@ ALLOWED = {
     "SPARK_GRAFT_SF_DIR": "deployment: default fixture directory",
     "SPARK_GRAFT_CPUS": "deployment: cores of the local Spark master",
     "SPARK_GRAFT_DRIVER_MEM": "deployment: driver heap",
-    "QUACKSPARK_DERIVED": "=0 turns the derived layout off; tests and tools/scale_tpch_sf10.py set it",
-    "QUACKSPARK_SORT_POLICY": "=ym selects the month-major layout twin, whose files and spec differ",
+    "QUACKSPARK_DERIVED": "=0 turns the derived layout off; tests and tools/scale.py set it",
     "QUACKSPARK_EXACT_SUM": "=decimal selects the documented overflow-safe exact-sum mode",
 }
 

@@ -102,6 +102,25 @@ def test_kmeans_driver_equals_distributed(spark, case, k):
     assert KM._driver_probe(df, 100) is not None  # the driver path is taken
 
 
+#: id 1 twice inside a 4-vector seed and id 3 twice at its boundary, the
+#: copies of each with different vectors
+KM_TIED_SEED = (
+    KM_BASE[:2] + [(1, KM_BASE[2][1])] + KM_BASE[3:] + [(3, [4.625, -5.25])]
+)
+
+
+def test_kmeans_distributed_seed_ignores_row_order(spark):
+    """The distributed seed breaks ties between copies of one id on the
+    vector, not on partition order: the same rows in two orders give the
+    same codebook."""
+    cents = []
+    for rows in (KM_TIED_SEED, KM_TIED_SEED[::-1]):
+        df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+        assert df.rdd.getNumPartitions() > 1
+        cents.append(_rows(KM.kmeans_fit(df, k=4, iters=2, driver_cap=0)))
+    assert cents[0] == cents[1]
+
+
 def _corpus(n=40, dim=S.DIM):
     """Deterministic vectors with many near-duplicates: five base
     directions plus small per-row offsets."""

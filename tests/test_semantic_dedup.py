@@ -2,7 +2,7 @@
 scales with the corpus, per-cluster pair work is bounded by within-
 cluster SRP banding above the pair budget, and the oracle replays the
 chosen k. Growth evidence lives in SCALE_SEMDEDUP.json
-(tools/scale_semantic_dedup.py)."""
+(`tools/scale.py semdedup`)."""
 
 from __future__ import annotations
 

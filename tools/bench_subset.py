@@ -1,11 +1,10 @@
 """Time a subset of declared queries with the bench protocol (r13 tool).
 
 Usage:
-    python tools/bench_subset.py name1,name2,... [runs]
+    python tools/bench_subset.py name1,name2,...
 
-Same methodology as bench.py's sf0.1 section — one untimed warmup
-(count), then median of `runs` (default 3) timed noop-sink executions,
-`_drop_persisted` between queries — so subset numbers are directly
+Each query is timed by ``bench.warm_median`` (a noop-write warm-up, then
+the median of 3 timed noop writes), so subset numbers are directly
 comparable to BENCH_r{N} columns. Reads $SPARK_GRAFT_SF_DIR (default
 sf0.1) and $SPARK_GRAFT_CPUS like bench.py. Prints one JSON line.
 """
@@ -14,9 +13,7 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -25,9 +22,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def main() -> int:
     names = sys.argv[1].split(",")
-    runs = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 
-    from bench import _drop_persisted, _ensure_layout
+    from bench import _ensure_layout, warm_median
 
     from quackspark.entry import queries
     from quackspark.session import get_session
@@ -43,26 +39,14 @@ def main() -> int:
             times[name] = None
             continue
         try:
-            spark.sparkContext.setJobDescription(f"subset warmup: {name}")
-            fn(spark, SF_DIR).count()
-            rs = []
-            for i in range(runs):
-                spark.sparkContext.setJobDescription(f"subset run {i}: {name}")
-                t0 = time.perf_counter()
-                fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-                rs.append(time.perf_counter() - t0)
-            times[name] = {
-                "median": round(statistics.median(rs), 4),
-                "min": round(min(rs), 4),
-                "max": round(max(rs), 4),
-            }
+            spark.sparkContext.setJobDescription(f"subset: {name}")
+            times[name] = round(warm_median(spark, lambda: fn(spark, SF_DIR)), 4)
         except Exception as exc:
             print(f"subset: {name} failed: {exc}", file=sys.stderr)
             times[name] = f"ERR: {exc}"
         finally:
             spark.sparkContext.setJobDescription(None)
-            _drop_persisted(spark)
-    print(json.dumps({"sf_dir": SF_DIR, "runs": runs, "queries": times}))
+    print(json.dumps({"sf_dir": SF_DIR, "queries": times}))
     return 0
 
 

@@ -3,13 +3,13 @@ time (r13 optimization probe, guide §1).
 
 Construction = ``fn(spark, sf_dir)`` — for the pipeline/dedup queries
 this includes real blocking work (hot-shingle guard collect, CC
-limit-probe + union-find, lazy-checkpoint planning). Action = the noop
-sink on the returned frame. Each rep builds FRESH (lazy localCheckpoints
-materialize on first action, so re-actioning one frame would measure
-cached blocks, not the query).
+limit-probe + union-find, lazy-checkpoint planning). A run is timed by
+``bench.warm_median`` (construction plus the noop sink on the returned
+frame); construction is timed inside each timed run, and the action's
+median is the run median less the construction median.
 
 Usage:
-    python tools/probe_phases.py name1,name2,... [reps] [--profile]
+    python tools/probe_phases.py name1,name2,... [--profile]
 
 ``--profile`` additionally cProfiles one construction per query and
 prints the top py4j/Python split.
@@ -30,10 +30,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def main() -> int:
     names = sys.argv[1].split(",")
-    reps = int(sys.argv[2]) if len(sys.argv) > 2 and sys.argv[2].isdigit() else 3
     profile = "--profile" in sys.argv
 
-    from bench import _drop_persisted, _ensure_layout
+    from bench import _drop_persisted, _ensure_layout, warm_median
 
     from quackspark.entry import queries
     from quackspark.session import get_session
@@ -48,36 +47,28 @@ def main() -> int:
         if fn is None:
             out[name] = None
             continue
-        # warmup (plan + JIT + page cache), as in bench.py; one broken
-        # query must not sink the probe (bench.py's policy)
+        cons: list[float] = []
+
+        def build():
+            t0 = time.perf_counter()
+            df = fn(spark, SF_DIR)
+            cons.append(time.perf_counter() - t0)
+            return df
+
+        # one broken query must not sink the probe (bench.py's policy)
         try:
-            spark.sparkContext.setJobDescription(f"phase warmup: {name}")
-            fn(spark, SF_DIR).count()
-            _drop_persisted(spark)
-            cons, act = [], []
-            for i in range(reps):
-                spark.sparkContext.setJobDescription(
-                    f"phase construct {i}: {name}"
-                )
-                t0 = time.perf_counter()
-                df = fn(spark, SF_DIR)
-                t1 = time.perf_counter()
-                spark.sparkContext.setJobDescription(f"phase action {i}: {name}")
-                df.write.format("noop").mode("overwrite").save()
-                t2 = time.perf_counter()
-                cons.append(t1 - t0)
-                act.append(t2 - t1)
-                _drop_persisted(spark)
+            spark.sparkContext.setJobDescription(f"phases: {name}")
+            run = warm_median(spark, build, on_warm=cons.clear)
         except Exception as exc:
             print(f"probe: {name} failed: {exc}", file=sys.stderr)
             out[name] = f"ERR: {exc}"
-            spark.sparkContext.setJobDescription(None)
             continue
+        finally:
+            spark.sparkContext.setJobDescription(None)
+        construct = statistics.median(cons)
         row = {
-            "construct_median": round(statistics.median(cons), 4),
-            "action_median": round(statistics.median(act), 4),
-            "construct_min": round(min(cons), 4),
-            "action_min": round(min(act), 4),
+            "construct_median": round(construct, 4),
+            "action_median": round(run - construct, 4),
         }
         if profile:
             import cProfile
@@ -94,8 +85,7 @@ def main() -> int:
             row["profile_head"] = s.getvalue()[:4000]
             _drop_persisted(spark)
         out[name] = row
-        spark.sparkContext.setJobDescription(None)
-    print(json.dumps({"sf_dir": SF_DIR, "reps": reps, "queries": out}))
+    print(json.dumps({"sf_dir": SF_DIR, "queries": out}))
     return 0
 
 
